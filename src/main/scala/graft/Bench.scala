@@ -35,41 +35,13 @@ object Bench {
     * (best 0.131) would still read clean, a genuinely loaded run
     * (r16 baseline's 0.25+ bests) now stamps itself.
     */
-  val CalibrationFloorSec: Double =
-    sys.env.get("SPARK_GRAFT_CALIB_FLOOR")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption)
-      .getOrElse(0.15)
+  val CalibrationFloorSec: Double = EnvKnobs.calibrationFloor(0.15)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Spark-default AQE coalescing (GraftSession rationale: the
-      // round-17 quiet-box A/B, VERDICT r16 item 1, measured r16's
-      // size-based `false` as a net loss at bench SF — it serializes
-      // CPU-dense small-byte stages). SPARK_GRAFT_PARALLELISM_FIRST
-      // exists ONLY to reproduce that A/B on one binary; the driver
-      // never sets it, so driver runs measure the engine as shipped.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // nanos-generation parquet readable (set at build, never per-call)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // janino class cache sized for multi-statement queries
-      // (GraftSession rationale; default 100 wraps within one DML
-      // lifecycle so min-of-3 re-runs recompiled everything)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // binary-stat truncation pinned off (GraftSession rationale:
-      // footer-stats exactness contract enforced, not incidental)
-      .config("spark.hadoop.parquet.statistics.truncate.length",
-        String.valueOf(Int.MaxValue))
-      // int64-micros timestamps (GraftSession rationale: footer stats
-      // + Iceberg's required physical type; INT96 has no usable stats)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
+    val cpus = EnvKnobs.cpus(32)
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus)
+      .appName("graft-bench")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -80,7 +52,7 @@ object Bench {
       metrics.reset()
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
-        case _: Throwable => return (-1.0, metrics.snapshotAfter())
+        case scala.util.control.NonFatal(_) => return (-1.0, metrics.snapshotAfter())
       }
       val t = (System.nanoTime() - t0) / 1e9
       (t, metrics.snapshotAfter())
@@ -276,7 +248,7 @@ object Bench {
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(_) => () }
     spark.stop()
     // FINAL stdout line, after Spark's shutdown chatter, sized to FIT:
     // the driver records only the last 2000 characters of the log
@@ -308,6 +280,6 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_SUMMARY.json"),
       closer.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(_) => () }
   }
 }

@@ -1,28 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-generation parquet readable (set at build, never per-call)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // int64-micros timestamps (GraftSession rationale); also keeps
-      // the driver's DuckDB oracle reading result dumps the modern way
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // janino class cache sized for multi-statement queries
-      // (GraftSession rationale)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // binary-stat truncation pinned off (GraftSession rationale)
-      .config("spark.hadoop.parquet.statistics.truncate.length",
-        String.valueOf(Int.MaxValue))
-      .config("spark.ui.enabled", "false")
+    val cpus = EnvKnobs.cpus(4)
+    // GraftSession's int64-micros timestamps also keep the DuckDB
+    // oracle reading the result dumps the modern way
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus)
+      .appName("graft-verify")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -34,7 +22,7 @@ object Verify {
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // a 112-query one-JVM run must not accumulate block-manager

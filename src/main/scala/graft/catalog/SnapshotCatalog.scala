@@ -1296,26 +1296,29 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // identifiable driver-side cost of a MERGE commit (DriverProfile,
     // round 17). Results keep `files` order; any Unprovable/IO failure
     // surfaces on this thread and falls back to the Spark job exactly
-    // as the serial form did.
+    // as the serial form did. A worker's failure arrives wrapped in an
+    // ExecutionException: a fatal cause (OOM, linkage error) is
+    // rethrown, never read as "fall back".
     try {
       if (files.sizeIs <= 1) Some(files.flatMap(statsOf))
       else {
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           math.min(8, files.size))
-        val tries =
-          try {
-            val futs = files.map { f =>
-              pool.submit(new java.util.concurrent.Callable[
-                scala.util.Try[Option[FileStats]]] {
-                def call(): scala.util.Try[Option[FileStats]] =
-                  scala.util.Try(statsOf(f))
-              })
-            }
-            futs.map(_.get())
-          } finally pool.shutdown()
-        Some(tries.flatMap(_.get))
+        try {
+          val futs = files.map { f =>
+            pool.submit(new java.util.concurrent.Callable[Option[FileStats]] {
+              def call(): Option[FileStats] = statsOf(f)
+            })
+          }
+          Some(futs.flatMap(_.get()))
+        } finally pool.shutdown()
       }
-    } catch { case _: Unprovable | scala.util.control.NonFatal(_) => None }
+    } catch {
+      case e: java.util.concurrent.ExecutionException
+          if e.getCause != null && !scala.util.control.NonFatal(e.getCause) =>
+        throw e.getCause
+      case scala.util.control.NonFatal(_) => None
+    }
   }
 
   private def collectFileStats(schema: StructType,

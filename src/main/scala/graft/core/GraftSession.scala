@@ -13,12 +13,6 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = builder(s"local[$cores]", cores).getOrCreate()
-    registerFunctions(spark)
-    spark
-  }
-
   /** The engine's SQL function surface (idempotent): the codegen dot
     * product, the t-digest quantile aggregate, the Misra-Gries
     * heavy-hitters aggregate, the shingle UDTF, the sign-LSH bucket
@@ -40,8 +34,7 @@ object GraftSession {
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
-    SparkSession
-      .builder()
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

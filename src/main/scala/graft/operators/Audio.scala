@@ -55,9 +55,6 @@ object Audio {
       .iterator().asScala.toSeq
   }
 
-  private[graft] def openForTest(payload: Array[Byte]): javax.sound.sampled.AudioInputStream =
-    openAudioStream(payload)
-
   /** Last reader that accepted a payload (volatile hint, not a lock):
     * a corpus is overwhelmingly one container format, so steady-state
     * opens hit the right reader first and throw ZERO exceptions —
@@ -196,7 +193,7 @@ object Audio {
     media.mapPartitions(rows => rows.map(featuresOf))
   }
 
-  private[graft] def featuresOf(r: MediaRow): AudioFeatures =
+  private def featuresOf(r: MediaRow): AudioFeatures =
     decodePcm(r.payload) match {
       case None => AudioFeatures(r.doc_id, decoded = false,
         0, 0, 0, 0L, 0L, 0.0, 0.0, 0.0, 0.0, 0.0)

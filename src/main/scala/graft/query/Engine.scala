@@ -105,15 +105,7 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
     * tables (`ns.tbl`) with manifest pruning — see [[sqlDataFrame]].
     */
   def sqlQuery(sql: String, limit: Int = 1000): String =
-    if (Engine.SqlTiming) {
-      val t0 = System.nanoTime()
-      val out = served(envelope(Try(sqlDataFrame(sql)._1.limit(limit))))
-      // nextOption: a blank SQL string has no lines — the timing line
-      // must never be the thing that throws (round-16 ADVICE)
-      System.err.println(f"[sqltime] ${(System.nanoTime() - t0) / 1e9}%8.3f s  ${
-        sql.linesIterator.nextOption().getOrElse("").take(90)}")
-      out
-    } else served(envelope(Try(sqlDataFrame(sql)._1.limit(limit))))
+    served(envelope(Try(sqlDataFrame(sql)._1.limit(limit))))
 
   /** The SQL → snapshot-catalog bridge. Parses the query with
     * Catalyst's parser (no regex SQL surgery for table detection),
@@ -2544,12 +2536,6 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
 }
 
 object Engine {
-
-  /** Dev-only per-statement wall timing on stderr (the driver never
-    * sets it): `GRAFT_SQL_TIMING=1` — the guide-§1 loop for the DML
-    * lifecycle queries whose cost is many statements, not one plan.
-    */
-  private[query] val SqlTiming = sys.env.contains("GRAFT_SQL_TIMING")
 
   /** Session conf selecting the DML write-audit-publish branch —
     * `SET graft.wap.branch = audit` stages every subsequent DML on

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.catalog.SnapshotCatalog
 
 /** Second-JVM append worker for the multi-process commit-contention
@@ -18,12 +16,8 @@ import graft.catalog.SnapshotCatalog
 object AppendWorker {
   def main(args: Array[String]): Unit = {
     val Array(warehouse, ns, table, nStr, tag) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
+    val spark = graft.core.GraftSession.builder("local[2]", 2)
       .appName(s"graft-append-worker-$tag")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val catalog = new SnapshotCatalog(spark, warehouse)

@@ -17,8 +17,8 @@ object DriverProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     require(names.nonEmpty, "usage: DriverProfile <sfDir> <queryName>...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = graft.EnvKnobs.cpus(32)
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -31,10 +31,9 @@ object DriverProfile {
       // main thread — sample EVERY thread, skip the obviously idle ones
       // (pool parked in take/poll, the sampler itself).
       val samples = mutable.ArrayBuffer.empty[Array[StackTraceElement]]
-      val names = mutable.ArrayBuffer.empty[String]
+      val threadNames = mutable.ArrayBuffer.empty[String]
       @volatile var run = true
       @volatile var ticks = 0
-      val self = Thread.currentThread() // ignore: profiler runner? no — main RUNS the query
       val sampler = new Thread(() => {
         while (run) {
           val all = Thread.getAllStackTraces
@@ -46,7 +45,7 @@ object DriverProfile {
                   x.contains("getTask") || x.contains("WorkQueue") ||
                   x.contains("take") || x.contains("poll") ||
                   x.contains("awaitWork") || x.contains("Object.wait") })
-              if (!idlePool) { samples += st; names += t.getName }
+              if (!idlePool) { samples += st; threadNames += t.getName }
             }
           }
           ticks += 1
@@ -96,7 +95,7 @@ object DriverProfile {
       val otherNames = mutable.Map.empty[String, Int].withDefaultValue(0)
       samples.indices.foreach { i =>
         if (bucket(samples(i)) == "other")
-          otherNames(names(i).replaceAll("[0-9]+", "N")) += 1
+          otherNames(threadNames(i).replaceAll("[0-9]+", "N")) += 1
       }
       println("  --- 'other' thread names ---")
       otherNames.toSeq.sortBy(-_._2).take(12).foreach { case (nm, c) =>

@@ -17,8 +17,8 @@ object JobProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
     require(names.nonEmpty, "usage: JobProfile <sfDir> <queryName>...")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)
+    val cpus = graft.EnvKnobs.cpus(32)
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -36,6 +36,18 @@ class ControlPlaneSpec extends SparkTestBase {
     assert(result.passed, result.status.toString)
   }
 
+  test("env knobs: unset takes the default, a malformed or non-positive value names the variable") {
+    assert(EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", None, 4) == Right(4))
+    assert(EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", Some(" 8 "), 4) == Right(8))
+    for (bad <- Seq("", "eight", "0", "-2", "1.5"))
+      assert(EnvKnobs.positiveInt("SPARK_GRAFT_CPUS", Some(bad), 4)
+        .left.exists(_.contains("SPARK_GRAFT_CPUS must be a positive integer")), bad)
+    assert(EnvKnobs.positiveDouble("SPARK_GRAFT_CALIB_FLOOR", Some("0.2"), 0.15) == Right(0.2))
+    for (bad <- Seq("0.15s", "0", "-1", "NaN", "Infinity"))
+      assert(EnvKnobs.positiveDouble("SPARK_GRAFT_CALIB_FLOOR", Some(bad), 0.15)
+        .left.exists(_.contains("SPARK_GRAFT_CALIB_FLOOR must be a positive number")), bad)
+  }
+
   // ------------------------------------------------------------ C2/C3
 
   test("schema store: register, reuse identical, evolve, reject incompatible") {

@@ -171,6 +171,31 @@ class FooterStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     writeAndCompare(df, expectFooter = false)
   }
 
+  test("INT96 timestamps fall back to the Spark read-back, end to end") {
+    // the engine writes int64 micros; INT96 carries no usable footer
+    // stats, so a file written that way must take the read-back path
+    // and still commit exact manifest stats
+    val key = "spark.sql.parquet.outputTimestampType"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try {
+      val df = spark.range(0, 60, 1, 2).select(col("id").as("k"),
+        timestamp_seconds(col("id") * 3600).as("ts"))
+      writeAndCompare(df, expectFooter = false)
+      cat.createTable("fs", "int96", df.schema)
+      cat.append("fs", "int96", df)
+      val snap = cat.describe("fs", "int96").currentSnapshot.get
+      val oracle = sparkStats(df.schema, snap.files)
+      assert(snap.fileStats.nonEmpty)
+      for (fs <- snap.fileStats) {
+        val (rows, mins, maxs) = oracle(fs.path)
+        assert(fs.rows == rows)
+        assert(fs.min("ts").toDouble == mins("ts").toDouble)
+        assert(fs.max("ts").toDouble == maxs("ts").toDouble)
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
   test("schema wider than the file (evolution null-pad)") {
     val base = spark.range(0, 50, 1, 1).select(col("id").as("k"))
     val dir = Files.createTempDirectory(

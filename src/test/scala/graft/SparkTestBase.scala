@@ -3,17 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session per suite (guide: lazy val, not per test). */
+/** One shared local session per suite (guide: lazy val, not per test),
+  * built with the engine's own conf so tier-1 tests what ships. */
 trait SparkTestBase extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = graft.core.GraftSession.builder("local[4]", 4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // nanos-generation parquet readable (set at build, never per-call)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def tmpDir(prefix: String): String =

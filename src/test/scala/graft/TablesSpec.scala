@@ -106,4 +106,30 @@ class TablesSpec extends SparkTestBase {
       s"events.ts outside plausible epoch range: years [$ymin, $ymax] — " +
         "a unit mix-up (ns vs us vs ms) in the loader shim would land here")
   }
+
+  test("the test session carries the conf GraftSession pins") {
+    val pinned = Seq(
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+      "spark.hadoop.parquet.statistics.truncate.length" -> Int.MaxValue.toString,
+      "spark.sql.codegen.cache.maxEntries" -> "10000",
+      "spark.sql.session.timeZone" -> "UTC")
+    for ((k, v) <- pinned)
+      assert(spark.conf.getOption(k).contains(v), s"$k = ${spark.conf.getOption(k)}")
+    // the Hadoop-side key is what the parquet writer actually reads
+    assert(spark.sparkContext.hadoopConfiguration
+      .get("parquet.statistics.truncate.length") == Int.MaxValue.toString)
+  }
+
+  test("GraftSession.scala is the only source that builds a SparkSession") {
+    import scala.jdk.CollectionConverters._
+    val call = raw"SparkSession\s*\.\s*builder\s*\(\s*\)".r
+    val builders = Seq("src/main", "src/test").flatMap { root =>
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally files.close()
+    }.filter(f => call.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
+      .map(_.getFileName.toString)
+    assert(builders == Seq("GraftSession.scala"))
+  }
 }
