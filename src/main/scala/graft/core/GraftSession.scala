@@ -21,7 +21,9 @@ object GraftSession {
     * `graft_lang_id`, `graft_quality_score`, `graft_token_count`,
     * `graft_fingerprint`, `graft_sq8_encode`, `graft_sq8_dot`) — so
     * `spark.sql` users get them without touching the Scala API.
-    * (The optimizer rule is separate: register
+    * (Optimizer rules are not functions: [[builder]] injects
+    * [[graft.plans.CompactHllRewrite]] into every session it builds;
+    * the opt-in range-join rule and grouped top-k strategy come with
     * `graft.plans.GraftExtensions` via `spark.sql.extensions`.)
     */
   def registerFunctions(spark: SparkSession): Unit = {
@@ -90,4 +92,8 @@ object GraftSession {
       // (SnapshotCatalog.footerFileStats) AND leave ts files unprunable
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      // approx_count_distinct as one binary HLL++ buffer instead of one
+      // long column per 10 registers (1,639 at rsd 0.01) — same
+      // estimates, see CompactHll
+      .withExtensions(_.injectOptimizerRule(_ => graft.plans.CompactHllRewrite))
 }

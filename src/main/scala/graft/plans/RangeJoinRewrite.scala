@@ -12,12 +12,15 @@ import org.apache.spark.sql.types._
 /** `SparkSessionExtensions` entry point — register with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (or
   * `.withExtensions(new GraftExtensions)` on the builder) to get
-  * [[RangeJoinRewrite]] in every session's optimizer and
-  * [[GroupedTopKStrategy]] in its planner.
+  * [[RangeJoinRewrite]] and [[CompactHllRewrite]] in every session's
+  * optimizer and [[GroupedTopKStrategy]] in its planner. Sessions from
+  * `graft.core.GraftSession.builder` already carry
+  * [[CompactHllRewrite]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => RangeJoinRewrite)
+    e.injectOptimizerRule(_ => CompactHllRewrite)
     e.injectPlannerStrategy(_ => GroupedTopKStrategy)
   }
 }

@@ -554,6 +554,11 @@ object Relational {
   // HLL++ estimates must satisfy — a broken sketch flips the flag and
   // fails the driver's hash check. Measured rel err ≤ 0.086 (rsd 0.05
   // col) / ≤ 0.007 (rsd 0.01 col) at sf0.01-0.1; bounds are 3σ.
+  // Each HLL++ is planned as CompactHll (GraftSession's optimizer
+  // rule): one binary buffer column per sketch, allocated on the first
+  // non-null input. Spark's built-in form carried 52 + 1,639 long
+  // buffer columns here, through the first-level aggregates and their
+  // exchange, in every group of the countDistinct Expand.
   private def q21(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .groupBy("l_returnflag")
@@ -1017,7 +1022,7 @@ object Relational {
   // hll_sketch_agg/hll_union_agg): per-month customer sketches rolled
   // up to a TOTAL row by unioning the 12-ish tiny sketches — NOT by
   // rescanning orders. This is the 100 TB pre-aggregation pattern
-  // q21's approx_count_distinct can't express: its HLL±± buffer is
+  // q21's approx_count_distinct can't express: its HLL++ buffer is
   // query-internal, while a DataSketches sketch is a first-class value
   // that can be stored per partition/day and merged at query time
   // (union-of-parts == sketch-of-whole, asserted in OperatorSpec).
@@ -1695,8 +1700,10 @@ object Relational {
   // pays one aggregation pass per column because exact
   // count(DISTINCT) forces it; here ALL columns profile in a single
   // .agg over a single scan — nulls/min/max/mean exactly,
-  // distinct counts via approx_count_distinct (HLL++, constant state
-  // per column) — and the one aggregated row is exploded into the
+  // distinct counts via approx_count_distinct (HLL++: one binary
+  // buffer of 52 register words per column, planned as CompactHll; the
+  // built-in form carried the 52 words as long columns through the
+  // Expand) — and the one aggregated row is exploded into the
   // per-column layout (no per-column rescan: the union-of-projections
   // alternative re-executes the aggregate per column). Following the
   // q21/q24 audit pattern, the HLL estimates are emitted as

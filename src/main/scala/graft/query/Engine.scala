@@ -2736,7 +2736,7 @@ object Engine {
   private[graft] def extractBounds(
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       schema: org.apache.spark.sql.types.StructType): Seq[ColBounds] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
 
@@ -2819,6 +2819,16 @@ object Engine {
       case GreaterThanOrEqual(l: Literal, a)   => add(a, l, asLower = false, asUpper = true)
       case LessThan(l: Literal, a)             => add(a, l, asLower = true,  asUpper = false)
       case LessThanOrEqual(l: Literal, a)      => add(a, l, asLower = true,  asUpper = false)
+      // the parser leaves `a BETWEEN lo AND hi` as an unresolved
+      // `between(a, lo, hi)` call: the same bounds as `a >= lo AND
+      // a <= hi` (`NOT BETWEEN` arrives wrapped in Not and stays unpruned)
+      case f: UnresolvedFunction if f.nameParts.map(_.toLowerCase) == Seq("between") =>
+        f.arguments match {
+          case Seq(a, lo: Literal, hi: Literal) =>
+            add(a, lo, asLower = true, asUpper = false)
+            add(a, hi, asLower = false, asUpper = true)
+          case _ => ()
+        }
       case _ => ()
     }
     (num.toSeq.map { case (c, (lo, hi)) => NumBounds(c, lo, hi) } ++

@@ -130,5 +130,6 @@ class RangeJoinRuleSpec extends SparkTestBase {
     new graft.plans.GraftExtensions().apply(exts)
     val rules = org.apache.spark.sql.graft.PlanExec.optimizerRulesOf(exts, spark)
     assert(rules.exists(_ eq RangeJoinRewrite))
+    assert(rules.exists(_ eq graft.plans.CompactHllRewrite))
   }
 }
