@@ -1290,7 +1290,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           min = mins.result(), max = maxs.result()))
       } finally reader.close()
     }
-    // footer IO parallelized on a small driver pool (guide §1.2): each
+    // footer IO parallelized on the shared driver pool
+    // (SnapshotCatalog.footerPool, guide §1.2): each
     // statsOf is an independent open + footer read (~ms local, tens of
     // ms on an object store) and the serial loop was the largest single
     // identifiable driver-side cost of a MERGE commit (DriverProfile,
@@ -1302,16 +1303,13 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     try {
       if (files.sizeIs <= 1) Some(files.flatMap(statsOf))
       else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, files.size))
-        try {
-          val futs = files.map { f =>
-            pool.submit(new java.util.concurrent.Callable[Option[FileStats]] {
+        val futs = files.map { f =>
+          SnapshotCatalog.footerPool.submit(
+            new java.util.concurrent.Callable[Option[FileStats]] {
               def call(): Option[FileStats] = statsOf(f)
             })
-          }
-          Some(futs.flatMap(_.get()))
-        } finally pool.shutdown()
+        }
+        Some(futs.flatMap(_.get()))
       }
     } catch {
       case e: java.util.concurrent.ExecutionException
@@ -1553,23 +1551,50 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * positives), blooms handle the survivors.
     */
   def readEquals(ns: String, name: String, column: String,
-      value: String): DataFrame = {
+      value: String): DataFrame =
+    readIn(ns, name, column, Seq(value)).df
+
+  /** [[readEquals]] over a SET of values — results equal
+    * `read().filter(col IN values)` — as ONE read of ONE snapshot: the
+    * files any value may hit ([[prunedFilesIn]]) scan once, and the
+    * returned [[SnapshotCatalog.PrunedRead]] reports exactly the files
+    * it reads (`kept`) against the snapshot's file count (`total`). A
+    * query batch's probed cells of a cell-partitioned ANN index read
+    * this way: N cells cost one snapshot load and one scan.
+    */
+  def readIn(ns: String, name: String, column: String,
+      values: Seq[String]): SnapshotCatalog.PrunedRead = {
     import org.apache.spark.sql.functions.lit
     val meta = describe(ns, name)
     val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    val snap = meta.currentSnapshot.getOrElse(
-      return read(ns, name).filter(col(column) === lit(value)))
-    // per-ERA pval pruning: every spec era that covers the column
-    // prunes exactly, current and historical alike — a no-op (all
-    // files kept) on unpartitioned tables
-    val byPval = prunedFilesPvalEras(snap, column, value,
-      schema(column).dataType).toSet
-    val keep = prunedFilesBloom(snap, column, value).filter(byPval)
-    // typed equality (literal cast to the column type) so the residual
-    // still pushes into the parquet reader; for the supported bloom
-    // types this equals string-rendering equality
-    readFilesOf(snap, schema, keep, meta.fieldIds)
-      .filter(col(column) === lit(value).cast(schema(column).dataType))
+    meta.currentSnapshot match {
+      case None => SnapshotCatalog.PrunedRead(
+        read(ns, name).filter(col(column).isin(values: _*)), 0, 0)
+      case Some(snap) =>
+        val dt = schema(column).dataType
+        val keep = prunedFilesIn(snap, column, values, dt)
+        // typed IN (literals cast to the column type) so the residual
+        // still pushes into the parquet reader — a one-value IN
+        // optimizes to the equality; for the supported bloom types this
+        // equals string-rendering equality
+        SnapshotCatalog.PrunedRead(readFilesOf(snap, schema, keep, meta.fieldIds)
+          .filter(col(column).isin(values.map(v => lit(v).cast(dt)): _*)),
+          keep.size, snap.files.size)
+    }
+  }
+
+  /** Files of `snap` that may hold a row whose `column` equals one of
+    * `values`, in snapshot order: per value, per-ERA partition values
+    * prune first (exact; a no-op on unpartitioned tables) and blooms
+    * prune the survivors.
+    */
+  def prunedFilesIn(snap: SnapshotMeta, column: String,
+      values: Seq[String], dt: DataType): Seq[String] = {
+    val keep = values.flatMap { v =>
+      prunedFilesBloom(snap, column, v)
+        .filter(prunedFilesPvalEras(snap, column, v, dt).toSet)
+    }.toSet
+    snap.files.filter(keep)
   }
 
   // ----------------------------------------------------- row-level ops
@@ -4762,6 +4787,23 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 object SnapshotCatalog {
 
   private val Log = org.slf4j.LoggerFactory.getLogger(classOf[SnapshotCatalog])
+
+  /** Shared daemon pool for [[SnapshotCatalog.footerFileStats]]' footer
+    * reads — one per JVM, like `Engine.watchdog`, so a commit pays no
+    * thread start-up. Eight threads: the reads are independent opens +
+    * footer parses, IO-bound.
+    */
+  private val footerPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(8, r => {
+      val t = new Thread(r, "graft-footer-stats")
+      t.setDaemon(true)
+      t
+    })
+
+  /** An equality read ([[SnapshotCatalog.readIn]]) with its pruning
+    * audit: `df` reads exactly `kept` of the snapshot's `total` files.
+    */
+  final case class PrunedRead(df: DataFrame, kept: Int, total: Int)
 
   /** Optimistic-concurrency commit retries before giving up. */
   val MaxCommitRetries = 10

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.expressions.{CentroidOps, DotProduct}
@@ -46,9 +45,10 @@ import graft.functions.expressions.{CentroidOps, DotProduct}
   * deployment composes it with IVF cells (IVF-PQ: probe nProbe cells,
   * ADC-score only those codes) exactly as [[Similarity.knnIvf]]
   * buckets the full-precision scan. The optional `rerank` stage
-  * re-scores the top ADC candidates with exact dots (two hash joins +
-  * codegen'd [[DotProduct]]), so the final ranking error is recall-only
-  * — pinned in OperatorSpec against exact kNN.
+  * shortlists the top ADC candidates and re-scores them with the exact
+  * rerank every ANN operator shares ([[Similarity]]'s pipeline), so
+  * the final ranking error is recall-only — pinned in OperatorSpec
+  * against exact kNN.
   */
 object Pq {
 
@@ -159,64 +159,45 @@ object Pq {
   def knnPq(vecs: DataFrame, k: Int, codebooks: Codebooks, dim: Int,
       queryFilter: Column, idCol: String = "vec_id",
       rerank: Int = 0): DataFrame = {
-    val m = codebooks.length
-    val sd = subdim(dim, m)
     val unit = Similarity.unitVectors(vecs, idCol, "id", "uv")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val codes = encodeUnit(unit, codebooks, dim)
-      .withColumnRenamed("id", "neighbor_id")
-    // LUT[s][c] = <q_s, codebook_s,c> — an inline-literal expression is
-    // fine HERE: it runs over the filtered query side only (small by
-    // contract), never the corpus.
-    val lut = array((0 until m).map { s =>
-      val sub = slice(col("qv"), s * sd + 1, sd)
-      array(codebooks(s).map(c =>
-        DotProduct.dot(sub, typedlit(c.toSeq))): _*)
-    }: _*)
-    val queries = broadcast(
-      unit.filter(queryFilter)
-        .select(col("id").as("query_id"), col("uv").as("qv"))
-        .withColumn("lut", lut)
-        .select("query_id", "lut"))
-    val adc = (0 until m)
-      .map(s => element_at(element_at(col("lut"), s + 1),
-        element_at(col("codes"), s + 1) + 1))
-      .reduce(_ + _)
-    val scored = queries.join(codes, col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", adc)
+    val scored = Similarity.allPairs(unit.filter(queryFilter)
+        .select(col("id").as("query_id"), lut(codebooks, dim).as("lut")),
+      encodeUnit(unit, codebooks, dim).withColumnRenamed("id", "neighbor_id"))
+      .withColumn("adc", adc(codebooks.length))
     finishTopK(scored, unit, k, rerank)
   }
 
-  /** Shared tail: optional exact re-rank of the ADC top-`rerank`, then
-    * final top-k in [[Similarity.knnExact]]'s output shape.
+  /** LUT[s][c] = <q_s, codebook_s,c> of the unit vector `uv` — an
+    * inline-literal expression is fine HERE: it runs over the filtered
+    * query side only (small by contract), never the corpus.
+    */
+  private def lut(books: Codebooks, dim: Int): Column = {
+    val sd = subdim(dim, books.length)
+    array(books.indices.map { s =>
+      val sub = slice(col("uv"), s * sd + 1, sd)
+      array(books(s).map(c => DotProduct.dot(sub, typedlit(c.toSeq))): _*)
+    }: _*)
+  }
+
+  /** ADC score Σ_s LUT[s][code_s] of a (lut, codes) row. */
+  private def adc(m: Int): Column = (0 until m)
+    .map(s => element_at(element_at(col("lut"), s + 1),
+      element_at(col("codes"), s + 1) + 1))
+    .reduce(_ + _)
+
+  /** Shared tail: the ADC score shortlists the candidates for the
+    * exact rerank of [[Similarity]]'s ANN pipeline — or, with `rerank`
+    * <= 0, is itself the reported sim — then the shared top-k in
+    * [[Similarity.knnExact]]'s output shape.
     */
   private def finishTopK(scored: DataFrame, unit: DataFrame, k: Int,
-      rerank: Int): DataFrame = {
-    val ranked =
-      if (rerank <= 0) {
-        scored.withColumn("sim", col("adc"))
-      } else {
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("adc").desc, col("neighbor_id"))
-        val cand = scored
-          .withColumn("r", row_number().over(w))
-          .filter(col("r") <= math.max(rerank, k))
-          .select("query_id", "neighbor_id")
-        cand
-          .join(unit.select(col("id").as("query_id"), col("uv").as("qv")),
-            Seq("query_id"))
-          .join(unit.select(col("id").as("neighbor_id"), col("uv").as("nv")),
-            Seq("neighbor_id"))
-          .withColumn("sim", DotProduct.dot(col("qv"), col("nv")))
-      }
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    ranked
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+      rerank: Int): DataFrame =
+    Similarity.topK(
+      if (rerank <= 0) scored.withColumn("sim", col("adc"))
+      else Similarity.exactRerank(Similarity.shortlist(scored, col("adc"),
+        ascending = false, rerank, k), Some(unit)),
+      k)
 
   /** IVF-PQ (Jégou et al. 2011 §V): the coarse IVF quantizer restricts
     * which vectors are scored (probe `nProbe` of `nCells` cells) and PQ
@@ -337,7 +318,7 @@ object Pq {
     */
   private def assignedRows(unit: DataFrame,
       coarse: Array[Array[Double]]): DataFrame = {
-    val coarseLit = typedlit[Seq[Seq[Double]]](coarse.map(_.toSeq).toSeq)
+    val coarseLit = Similarity.centroidsLit(coarse)
     val zeroBias = typedlit[Seq[Double]](Seq.fill(coarse.length)(0.0))
     unit
       .withColumn("cell",
@@ -368,8 +349,8 @@ object Pq {
 
   /** Serve top-k from the CATALOG-resident index table, reading ONLY
     * the files of the cells this query batch probes: the batch's
-    * distinct probed cells (≤ nCells ints on the driver) each resolve
-    * through [[graft.catalog.SnapshotCatalog.readEquals]], whose
+    * distinct probed cells (≤ nCells ints on the driver) resolve in one
+    * [[graft.catalog.SnapshotCatalog.readIn]] of one snapshot, whose
     * manifest partition-values prune the `identity(cell)`-partitioned
     * index files before Spark lists a single footer. This is the
     * missing-pruning gap the round-5 ADVICE flagged on
@@ -385,75 +366,30 @@ object Pq {
       coarse: Array[Array[Double]], books: Codebooks, dim: Int,
       queryFilter: Column, idCol: String = "vec_id",
       rerank: Int = 0): DataFrame = {
-    val unitQ = Similarity.unitVectors(vecs, idCol, "id", "uv")
-      .filter(queryFilter)
-    val cells = probedCellIds(unitQ, coarse, nProbe)
-    val index = cells.map(c => catalog.readEquals(ns, table, "cell", c.toString))
-      .reduceOption(_.unionAll(_))
-      .getOrElse(catalog.read(ns, table).limit(0))
+    val index = Similarity.probedIndex(catalog, ns, table,
+      Similarity.unitVectors(vecs, idCol, "id", "uv").filter(queryFilter),
+      coarse, nProbe)
     searchIndex(index, vecs, k, nProbe, coarse, books, dim,
       queryFilter, idCol, rerank)
   }
 
-  /** Distinct cells probed by a query batch — same scoring + tie-break
-    * as [[probeScoreIvf]]'s probe stage; collects at most nCells ints.
-    */
-  private[graft] def probedCellIds(unitQueries: DataFrame,
-      coarse: Array[Array[Double]], nProbe: Int): Seq[Int] = {
-    val spark = unitQueries.sparkSession
-    import spark.implicits._
-    val coarseDf = coarse.zipWithIndex
-      .map { case (c, cid) => (cid, c.toSeq) }.toSeq.toDF("ccid", "cvec")
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("cscore").desc, col("ccid"))
-    unitQueries.select(col("id").as("query_id"), col("uv").as("qv"))
-      .crossJoin(broadcast(coarseDf))
-      .withColumn("cscore", DotProduct.dot(col("qv"), col("cvec")))
-      .withColumn("r", row_number().over(pw))
-      .filter(col("r") <= nProbe)
-      .select("ccid").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-  }
-
   /** Query-side probe + ADC scoring + rerank shared by [[knnIvfPq]]
     * (fresh index) and [[searchIndex]] (materialized index): each
-    * query broadcasts its top-`nProbe` cells and LUT, the probe join
+    * query broadcasts its top-`nProbe` cells (the IVF probe every
+    * operator shares, [[Similarity.probe]]) and LUT, the probe join
     * touches only those cells' codes, and `<q, c + r>` decomposes as
-    * cscore + residual ADC.
+    * cscore (the dot with the probed centroid) + residual ADC.
     */
   private def probeScoreIvf(codes: DataFrame, unitQueries: DataFrame,
       unitRerank: DataFrame, coarse: Array[Array[Double]],
       books: Codebooks, dim: Int, k: Int, nProbe: Int,
       rerank: Int): DataFrame = {
-    val m = books.length
-    val sd = subdim(dim, m)
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val coarseDf = coarse.zipWithIndex
-      .map { case (c, cid) => (cid, c.toSeq) }.toSeq.toDF("ccid", "cvec")
-    val pw = Window.partitionBy("query_id")
-      .orderBy(col("cscore").desc, col("ccid"))
-    val lut = array((0 until m).map { s =>
-      val sub = slice(col("qv"), s * sd + 1, sd)
-      array(books(s).map(c => DotProduct.dot(sub, typedlit(c.toSeq))): _*)
-    }: _*)
-    val qprobe = broadcast(
-      unitQueries
-        .select(col("id").as("query_id"), col("uv").as("qv"))
-        .crossJoin(broadcast(coarseDf))
-        .withColumn("cscore", DotProduct.dot(col("qv"), col("cvec")))
-        .withColumn("r", row_number().over(pw))
-        .filter(col("r") <= nProbe)
-        .withColumn("lut", lut)
-        .select(col("query_id"), col("ccid").as("cell"),
-          col("cscore"), col("lut")))
-    val adc = (0 until m)
-      .map(s => element_at(element_at(col("lut"), s + 1),
-        element_at(col("codes"), s + 1) + 1))
-      .reduce(_ + _)
-    val scored = qprobe.join(codes, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", col("cscore") + adc)
+    val qprobe = broadcast(Similarity.probe(unitQueries, coarse, nProbe)(
+      col("id").as("query_id"), DotProduct.dot(col("uv"), element_at(
+        Similarity.centroidsLit(coarse), col("cell") + 1)).as("cscore"),
+      lut(books, dim).as("lut")))
+    val scored = Similarity.withoutSelf(qprobe.join(codes, Seq("cell")))
+      .withColumn("adc", col("cscore") + adc(books.length))
     finishTopK(scored, unitRerank, k, rerank)
   }
 }

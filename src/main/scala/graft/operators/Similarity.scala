@@ -1,11 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.catalog.SnapshotCatalog
 import graft.functions.VectorFns.asDouble
 import graft.functions.expressions.{CentroidOps, DotProduct, SignBits, SignBuckets, Sq8}
+import graft.plans.GroupedTopK
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (`array<float>`).
@@ -18,9 +20,21 @@ import graft.functions.expressions.{CentroidOps, DotProduct, SignBits, SignBucke
   *    measured difference vs the zip_with/aggregate composition;
   *  - the query set is broadcast (top-k query sets are small); the
   *    corpus stays partitioned, so scoring is a map-side nested loop
-  *    followed by a per-query windowed top-k — no global collect;
+  *    followed by a per-query top-k whose heaps run map-side — no
+  *    global collect, no per-query sort of the scored pairs;
   *  - the LSH variant buckets the corpus once (one shuffle) and scores
   *    within buckets only.
+  *
+  * Every kNN entry point is one pipeline built from four pieces (the
+  * REPOSE shape: one pruning stage per index, one shared verify stage):
+  *  1. a candidate generator per index — all pairs ([[allPairs]]),
+  *     bucket collisions ([[annFromBuckets]]) or the IVF probe join
+  *     ([[probe]]);
+  *  2. an optional [[shortlist]] on a cheap score (int8 dot, Hamming
+  *     distance, PQ ADC);
+  *  3. one [[exactRerank]]: the two unit vectors, one [[DotProduct]];
+  *  4. one [[topK]] through [[GroupedTopK]], ranked over ≤ k rows per
+  *     query.
   */
 object Similarity {
 
@@ -31,14 +45,22 @@ object Similarity {
     */
   private[graft] def unitVectors(vecs: DataFrame, idCol: String, idAs: String,
       vecAs: String): DataFrame = {
-    DotProduct.register(vecs.sparkSession)
     CentroidOps.register(vecs.sparkSession)
-    val v = asDouble(col("embedding"))
-    vecs
-      .select(col(idCol).as(idAs), v.as("_v"))
-      .withColumn("_nrm", sqrt(DotProduct.dot(col("_v"), col("_v"))))
+    normalized(vecs.select(col(idCol).as(idAs),
+      asDouble(col("embedding")).as("_v")), col("_v"), vecAs)
+      .select(idAs, vecAs)
+  }
+
+  /** `df` plus column `as` = vector `v` scaled to unit length, the
+    * norm computed once per row (not per element inside the lambda);
+    * an all-zero vector keeps its zeros (see [[unitVectors]]).
+    */
+  private def normalized(df: DataFrame, v: Column, as: String): DataFrame = {
+    DotProduct.register(df.sparkSession)
+    df.withColumn("_nrm", sqrt(DotProduct.dot(v, v)))
       .withColumn("_nrm", when(col("_nrm") === 0d, lit(1.0)).otherwise(col("_nrm")))
-      .select(col(idAs), transform(col("_v"), x => x / col("_nrm")).as(vecAs))
+      .withColumn(as, transform(v, x => x / col("_nrm")))
+      .drop("_nrm")
   }
 
   /** Johnson–Lindenstrauss random projection: `embedding` (dimIn) →
@@ -87,11 +109,8 @@ object Similarity {
       maxExactPairs: Long = DefaultMaxExactPairs): DataFrame = {
     guardExactPairs(BigInt(queries.count()) * BigInt(corpus.count()),
       maxExactPairs, "knnExact")
-    val q = broadcast(unitVectors(queries, idCol, "query_id", "qv"))
-    val c = unitVectors(corpus, idCol, "neighbor_id", "cv")
-    val scored = q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
-    topK(scored, k)
+    topK(exactRerank(allPairs(unitVectors(queries, idCol, "query_id", "qv"),
+      unitVectors(corpus, idCol, "neighbor_id", "cv"))), k)
   }
 
   /** Bitext-style margin mining (Artetxe & Schwenk, ACL 2019): align
@@ -157,16 +176,22 @@ object Similarity {
     */
   def knnIvfAgainst(queries: DataFrame, corpus: DataFrame, k: Int,
       nProbe: Int, centroids: Array[Array[Double]],
-      idCol: String = "vec_id"): DataFrame = {
-    val corpusCells = unitVectors(corpus, idCol, "id", "uv")
-      .withColumn("cell", homeCell(centroids))
-      .select(col("id").as("neighbor_id"), col("cell"), col("uv").as("nv"))
-    val queryProbes = unitVectors(queries, idCol, "id", "uv")
-      .withColumn("cell", explode(probeCells(centroids, nProbe)))
-      .select(col("id").as("query_id"), col("cell"), col("uv").as("qv"))
-    val scored = queryProbes.join(corpusCells, Seq("cell"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("nv")))
-    topK(scored, k)
+      idCol: String = "vec_id"): DataFrame =
+    ivfTopK(unitVectors(queries, idCol, "id", "uv"),
+      unitVectors(corpus, idCol, "id", "uv"), k, nProbe, centroids,
+      dropSelf = false)
+
+  /** [[knnIvfAgainst]] over (id, uv) unit frames; [[knnIvf]] is the
+    * same search with self-pairs dropped.
+    */
+  private def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+      nProbe: Int, centroids: Array[Array[Double]],
+      dropSelf: Boolean): DataFrame = {
+    val pairs = probe(queries, centroids, nProbe)(col("id").as("query_id"),
+        col("uv").as("qv"))
+      .join(corpus.select(col("id").as("neighbor_id"), homeCell(centroids)
+        .as("cell"), col("uv").as("cv")), Seq("cell"))
+    topK(exactRerank(if (dropSelf) withoutSelf(pairs) else pairs), k)
   }
 
   // The margin criterion over any pair of (query_id, rank,
@@ -307,7 +332,9 @@ object Similarity {
     * [[semanticDedup]] too): self-joined intermediates stay LAZY
     * `persist`s, and their release point is the session level —
     * [[graft.core.CacheHygiene.releaseAll]] after each query's action
-    * (Bench/Verify/RepBench all do; embedding applications should).
+    * (Bench and Verify do, as did the retired RepBench probe — see
+    * SCALING.md's "Retired probes" table; embedding applications
+    * should).
     * The alternative — eager `localCheckpoint` inside the operator,
     * blocks owned by the returned plan and GC-reclaimed — was built
     * and measured in round 9: release semantics were right, but each
@@ -322,6 +349,7 @@ object Similarity {
       seedBase: Long = 42L): DataFrame = {
     require(nPlanes >= 1 && nPlanes <= 30, s"nPlanes=$nPlanes out of range")
     val b = lshBucketsAllTables(vecs, nPlanes, dim, idCol, nTables, seedBase)
+      .select("id", "table", "bucket")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     b.select(col("id").as("a"), col("table"), col("bucket"))
       .join(b.select(col("id").as("b"), col("table"), col("bucket")),
@@ -375,8 +403,7 @@ object Similarity {
     // repartition's hash partitioning, so the self-join needs no
     // further exchange at all.
     val parts = vecs.sparkSession.sparkContext.defaultParallelism
-    val b = lshBucketsAllTablesWithVec(unit, nPlanes, dim, idCol,
-        nTables, seedBase)
+    val b = lshBucketsAllTables(unit, nPlanes, dim, idCol, nTables, seedBase)
       .repartition(parts, col("table"), col("bucket"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     b.select(col("id").as("a"), col("v").as("va"), col("table"), col("bucket"))
@@ -387,21 +414,6 @@ object Similarity {
       .filter(col("sim") >= threshold)
       .select(col("a"), col("b"), round(col("sim"), 4).as("sim"))
       .distinct()
-  }
-
-  /** [[lshBucketsAllTables]] keeping the vector column: (id, v, table,
-    * bucket) rows — the in-bucket-verify input.
-    */
-  private def lshBucketsAllTablesWithVec(vecs: DataFrame, nPlanes: Int,
-      dim: Int, idCol: String, nTables: Int, seedBase: Long): DataFrame = {
-    SignBuckets.register(vecs.sparkSession)
-    DotProduct.register(vecs.sparkSession)
-    val v = asDouble(col("embedding"))
-    vecs.select(col(idCol).as("id"), v.as("v"))
-      .select(col("id"), col("v"),
-        posexplode(SignBuckets.of(col("v"),
-          planesLit(nPlanes, dim, nTables, seedBase)))
-          .as(Seq("table", "bucket")))
   }
 
   /** Deterministic random hyperplanes for sign-LSH; `seed` selects the
@@ -433,34 +445,38 @@ object Similarity {
     * (TablesSpec), so nothing is dropped on the tested corpora.
     */
   def lshBuckets(vecs: DataFrame, nPlanes: Int, dim: Int,
-      idCol: String = "vec_id", seed: Long = 42L): DataFrame = {
-    SignBuckets.register(vecs.sparkSession)
-    DotProduct.register(vecs.sparkSession)
-    val v = asDouble(col("embedding"))
-    vecs.select(col(idCol).as("id"), v.as("v"))
-      .select(col("id"), col("v"),
-        element_at(SignBuckets.of(col("v"),
-          planesLit(nPlanes, dim, 1, seed)), 1).as("bucket"))
-  }
+      idCol: String = "vec_id", seed: Long = 42L): DataFrame =
+    signBuckets(vecs, nPlanes, dim, idCol, 1, seed)
+      .select(col("id"), col("v"), element_at(col("buckets"), 1).as("bucket"))
 
   /** All `nTables` tables' bucket ids in ONE projection + ONE explode:
-    * (id, table, bucket) rows from a single corpus scan. The multi-
+    * (id, v, table, bucket) rows from a single corpus scan. The multi-
     * table operators join on (table, bucket), so candidate generation
     * is one shuffle total instead of one scan + shuffle per table —
     * at 100 TB the difference between reading the corpus once and
     * reading it L times. Bucket values are identical to
-    * [[lshBuckets]] at `seed = seedBase + table`.
+    * [[lshBuckets]] at `seed = seedBase + table`. The vector `v` rides
+    * along for the in-bucket verify of [[lshNearDupPairs]]; callers
+    * that only join on buckets select (id, table, bucket) before they
+    * cache.
     */
   private[operators] def lshBucketsAllTables(vecs: DataFrame, nPlanes: Int,
       dim: Int, idCol: String, nTables: Int,
-      seedBase: Long = 42L): DataFrame = {
+      seedBase: Long = 42L): DataFrame =
+    signBuckets(vecs, nPlanes, dim, idCol, nTables, seedBase)
+      .select(col("id"), col("v"),
+        posexplode(col("buckets")).as(Seq("table", "bucket")))
+
+  /** (id, v, buckets): the double vector and its per-table sign-LSH
+    * bucket array — the one bucket projection behind [[lshBuckets]]
+    * and [[lshBucketsAllTables]].
+    */
+  private def signBuckets(vecs: DataFrame, nPlanes: Int, dim: Int,
+      idCol: String, nTables: Int, seedBase: Long): DataFrame = {
     SignBuckets.register(vecs.sparkSession)
-    val v = asDouble(col("embedding"))
-    vecs.select(col(idCol).as("id"), v.as("v"))
-      .select(col("id"),
-        posexplode(SignBuckets.of(col("v"),
-          planesLit(nPlanes, dim, nTables, seedBase)))
-          .as(Seq("table", "bucket")))
+    vecs.select(col(idCol).as("id"), asDouble(col("embedding")).as("v"))
+      .withColumn("buckets",
+        SignBuckets.of(col("v"), planesLit(nPlanes, dim, nTables, seedBase)))
   }
 
   /** ANN top-k via multi-table sign-LSH: `nTables` independent
@@ -470,9 +486,10 @@ object Similarity {
     * shape matches `knnExact`.
     *
     * Default (4 planes × 12 tables) comes from the measured sweep in
-    * SCALING.md (`graft.tools.RecallSweep`): top-5 recall 0.82 on the
-    * real embeddings at 2.35× the candidate cost of the old 4×4
-    * config (which only reached 0.41). On corpora whose true
+    * SCALING.md (the retired `RecallSweep` probe; SCALING.md's
+    * "Retired probes" table says where its numbers live): top-5
+    * recall 0.82 on the real embeddings at 2.35× the candidate cost of
+    * the old 4×4 config (which only reached 0.41). On corpora whose true
     * neighbors sit at LOW cosine (like this synthetic set, 0.2-0.5),
     * sign-LSH needs many tables — when the candidate fraction
     * approaches ~L/2^planes of all pairs, prefer [[knnIvf]], whose
@@ -492,28 +509,23 @@ object Similarity {
     annFromBuckets(vecs, b, k, queryFilter, idCol)
   }
 
-  /** Shared ANN tail for any (id, table, bucket) hashing family:
-    * candidate join on (table, bucket), OR-amplified distinct, exact
-    * full-dim scoring, per-query top-k.
+  /** The bucket-collision candidate generator for any (id, table,
+    * bucket) hashing family: candidate join on (table, bucket),
+    * OR-amplified distinct, then the shared exact rerank and top-k.
     */
   private def annFromBuckets(vecs: DataFrame, buckets: DataFrame, k: Int,
       queryFilter: Column, idCol: String): DataFrame = {
     // lazy persist, released by CacheHygiene — see lshCandidatePairs note
     val unit = unitVectors(vecs, idCol, "id", "uv")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val b = buckets
+    val b = buckets.select("id", "table", "bucket")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candidates = b.filter(queryFilter)
+    val candidates = withoutSelf(b.filter(queryFilter)
       .select(col("id").as("query_id"), col("table"), col("bucket"))
       .join(b.select(col("id").as("neighbor_id"), col("table"), col("bucket")),
-        Seq("table", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
+        Seq("table", "bucket")))
       .select("query_id", "neighbor_id").distinct()
-    val scored = candidates
-      .join(unit.select(col("id").as("query_id"), col("uv").as("qv")), Seq("query_id"))
-      .join(unit.select(col("id").as("neighbor_id"), col("uv").as("cv")), Seq("neighbor_id"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
-    topK(scored, k)
+    topK(exactRerank(candidates, Some(unit)), k)
   }
 
   /** Cross-polytope LSH buckets (Andoni et al. 2015, "Practical and
@@ -634,15 +646,10 @@ object Similarity {
     */
   def centroidOutliers(vecs: DataFrame, groupCol: String, k: Int,
       idCol: String = "vec_id"): DataFrame = {
-    DotProduct.register(vecs.sparkSession)
-    val v = asDouble(col("embedding"))
-    val unit = vecs
-      .select(col(idCol).as("id"), col(groupCol).as("grp"), v.as("_v"))
-      .withColumn("_nrm", sqrt(DotProduct.dot(col("_v"), col("_v"))))
-      .withColumn("_nrm",
-        when(col("_nrm") === 0d, lit(1.0)).otherwise(col("_nrm")))
-      .select(col("id"), col("grp"),
-        transform(col("_v"), x => x / col("_nrm")).as("uv"))
+    val unit = normalized(vecs.select(col(idCol).as("id"),
+        col(groupCol).as("grp"), asDouble(col("embedding")).as("_v")),
+        col("_v"), "uv")
+      .select("id", "grp", "uv")
       // consumed twice (centroid pass + scoring pass); released
       // session-side by CacheHygiene — the round-9 lifecycle contract
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -659,7 +666,7 @@ object Similarity {
       .select(col("grp"), col("id"),
         round(DotProduct.dot(col("uv"), col("cvec")) / col("cnrm"), 4)
           .as("sim"))
-    graft.plans.GroupedTopK(scored, group = Seq("grp"),
+    GroupedTopK(scored, group = Seq("grp"),
       order = Seq(("sim", true), ("id", true)), k = k)
   }
 
@@ -672,8 +679,7 @@ object Similarity {
     * replaced.
     */
   private def homeCell(centroids: Array[Array[Double]]): Column =
-    CentroidOps.nearestCell(col("uv"),
-      typedlit[Seq[Seq[Double]]](centroids.map(_.toSeq).toSeq),
+    CentroidOps.nearestCell(col("uv"), centroidsLit(centroids),
       typedlit[Seq[Double]](Seq.fill(centroids.length)(0.0)))
 
   /** Probe-cell selection via the [[CentroidOps.TopCells]] loop
@@ -683,9 +689,35 @@ object Similarity {
     * identical outputs incl. tie/NaN order, pinned in OperatorSpec.
     */
   private def probeCells(centroids: Array[Array[Double]], nProbe: Int): Column =
-    CentroidOps.topCells(col("uv"),
-      typedlit[Seq[Seq[Double]]](centroids.map(_.toSeq).toSeq),
-      lit(nProbe))
+    CentroidOps.topCells(col("uv"), centroidsLit(centroids), lit(nProbe))
+
+  private[operators] def centroidsLit(centroids: Array[Array[Double]]): Column =
+    typedlit[Seq[Seq[Double]]](centroids.map(_.toSeq).toSeq)
+
+  /** The IVF candidate generator's query side: each `queries` row (with
+    * its unit vector `uv`) explodes into its `nProbe` nearest cells —
+    * the ONE probe every IVF operator uses, ties to the larger cell id
+    * — projected to `cell` plus `cols` (which may read `cell`); the
+    * caller joins the corpus rows of those cells on `cell`.
+    */
+  private[operators] def probe(queries: DataFrame,
+      centroids: Array[Array[Double]], nProbe: Int)(cols: Column*): DataFrame =
+    queries.withColumn("cell", explode(probeCells(centroids, nProbe)))
+      .select(col("cell") +: cols: _*)
+
+  /** The rows of a catalog-resident `identity(cell)`-partitioned index
+    * that a query batch can touch: the batch's distinct probe cells
+    * (≤ nCells ints on the driver, chosen by [[probe]]'s rule) in ONE
+    * read of one snapshot, whose manifest partition values prune every
+    * other cell's files before Spark lists a footer.
+    */
+  private[graft] def probedIndex(catalog: SnapshotCatalog, ns: String,
+      table: String, unitQueries: DataFrame,
+      centroids: Array[Array[Double]], nProbe: Int): DataFrame = {
+    val cells = probe(unitQueries, centroids, nProbe)().distinct()
+      .collect().map(_.getInt(0).toString).toSeq
+    catalog.readIn(ns, table, "cell", cells).df
+  }
 
   /** IVF-style ANN: the corpus is bucketed into cells by argmax-cosine
     * against a literal centroid set (default: deterministic seeded;
@@ -700,16 +732,7 @@ object Similarity {
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
     val cents = centroids.getOrElse(seedCentroids(vecs, nCells, idCol))
     val unit = unitVectors(vecs, idCol, "id", "uv")
-    val corpusCells = unit
-      .withColumn("cell", homeCell(cents))
-      .select(col("id").as("neighbor_id"), col("cell"), col("uv").as("nv"))
-    val queryProbes = unit.filter(queryFilter)
-      .withColumn("cell", explode(probeCells(cents, nProbe)))
-      .select(col("id").as("query_id"), col("cell"), col("uv").as("qv"))
-    val scored = queryProbes.join(corpusCells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("nv")))
-    topK(scored, k)
+    ivfTopK(unit.filter(queryFilter), unit, k, nProbe, cents, dropSelf = true)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -800,24 +823,11 @@ object Similarity {
     // released by CacheHygiene — the annFromBuckets contract
     val unit = unitVectors(vecs, idCol, "id", "uv")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val coded = unit.select(col("id"), Sq8.encode(col("uv")).as("code"))
-    val queries = broadcast(coded.filter(queryFilter)
-      .select(col("id").as("query_id"), col("code").as("qcode")))
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("iscore").desc, col("neighbor_id"))
-    val cands = coded.withColumnRenamed("id", "neighbor_id")
-      .join(queries, col("query_id") =!= col("neighbor_id"))
-      .withColumn("iscore", Sq8.dot(col("qcode"), col("code")))
-      .withColumn("r", row_number().over(wa))
-      .filter(col("r") <= math.max(rerank, k))
-      .select("query_id", "neighbor_id")
-    val scored = cands
-      .join(unit.select(col("id").as("query_id"), col("uv").as("qv")),
-        Seq("query_id"))
-      .join(unit.select(col("id").as("neighbor_id"), col("uv").as("cv")),
-        Seq("neighbor_id"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
-    topK(scored, k)
+    val cands = allPairs(unit.filter(queryFilter).select(col("id").as("query_id"),
+        Sq8.encode(col("uv")).as("qcode")),
+      unit.select(col("id").as("neighbor_id"), Sq8.encode(col("uv")).as("code")))
+    topK(exactRerank(shortlist(cands, Sq8.dot(col("qcode"), col("code")),
+      ascending = false, rerank, k), Some(unit)), k)
   }
 
   /** Binary-quantized flat-scan ANN: each unit vector packs to a
@@ -837,7 +847,8 @@ object Similarity {
     * pass (the modern binary-quantization recipe: Hamming filter →
     * exact rerank). Recall loss comes only from sign-quantization
     * reordering inside the candidate cut, and bits×rerank is the
-    * measured knob (tools.HammingSweep, table in SCALING.md): on this
+    * measured knob (the retired HammingSweep probe; SCALING.md's
+    * "Retired probes" table says where its numbers live): on this
     * low-cosine corpus 64 bits @ rerank 50 recalls 0.39-0.58 while
     * 256 @ 100 holds 0.92-0.97 across SFs. The whole filter stage
     * (XOR + popcount per word) runs inside WholeStageCodegen with zero
@@ -850,45 +861,46 @@ object Similarity {
   def knnHamming(vecs: DataFrame, k: Int, queryFilter: Column,
       nBits: Int = 256, dim: Int = 64, rerank: Int = 100,
       idCol: String = "vec_id", seed: Long = 42L): DataFrame = {
-    require(nBits >= 1 && (nBits % 64 == 0 || nBits < 64),
-      s"nBits must be >= 1 and either < 64 or a multiple of 64, got $nBits")
-    SignBits.register(vecs.sparkSession)
-    // nBits > dim is the standard binary-quantization regime (bits are
-    // cheap; 128 bits of a 64-dim vector still scan at 1/4 the float32
-    // bandwidth) — each 64-plane word packs into its own long column,
-    // and the scan distance is the sum of per-word popcounts, all
-    // built-in codegen.
-    val words = math.max(1, (nBits + 63) / 64)
-    val all = hyperplanes(nBits, dim, seed).map(_.toSeq).toSeq
-    def planesOf(w: Int): Column =
-      typedlit[Seq[Seq[Double]]](all.slice(w * 64, math.min((w + 1) * 64, nBits)))
+    val codec = new SignCodec(vecs.sparkSession, nBits, dim, seed)
     // lazy persist (consumed by the signature scan AND the rerank
     // joins), released by CacheHygiene — the annFromBuckets contract
     val unit = unitVectors(vecs, idCol, "id", "uv")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigs = unit.select(col("id") +:
-      (0 until words).map(w => SignBits.of(col("uv"), planesOf(w)).as(s"sig$w")): _*)
-    val queries = broadcast(sigs.filter(queryFilter)
-      .select(col("id").as("query_id") +:
-        (0 until words).map(w => col(s"sig$w").as(s"qsig$w")): _*))
-    val ham = (0 until words)
+    val cands = allPairs(unit.filter(queryFilter)
+        .select(col("id").as("query_id") +: codec.sigs("qsig"): _*),
+      unit.select(col("id").as("neighbor_id") +: codec.sigs("sig"): _*))
+    topK(exactRerank(shortlist(cands, codec.distance, ascending = true, rerank, k),
+      Some(unit)), k)
+  }
+
+  /** The `nBits`-bit sign-signature codec shared by the Hamming
+    * operators: the bit-width guard, one registration, and the
+    * hyperplanes. nBits > dim is the standard binary-quantization
+    * regime (bits are cheap; 128 bits of a 64-dim vector still scan at
+    * 1/4 the float32 bandwidth) — each 64-plane word packs into its
+    * own long column, and the scan distance is the sum of per-word
+    * popcounts, all built-in codegen.
+    */
+  private final class SignCodec(spark: SparkSession, nBits: Int, dim: Int,
+      seed: Long) {
+    require(nBits >= 1 && (nBits % 64 == 0 || nBits < 64),
+      s"nBits must be >= 1 and either < 64 or a multiple of 64, got $nBits")
+    SignBits.register(spark)
+    private val planes = hyperplanes(nBits, dim, seed).map(_.toSeq).toSeq
+    private val words = math.max(1, (nBits + 63) / 64)
+
+    /** `{prefix}0..` signature words of the unit vector `uv`. */
+    def sigs(prefix: String): Seq[Column] = (0 until words).map(w =>
+      SignBits.of(col("uv"), typedlit[Seq[Seq[Double]]](
+        planes.slice(w * 64, (w + 1) * 64))).as(s"$prefix$w"))
+
+    /** The stored `sig0..` words, as columns. */
+    def stored: Seq[Column] = (0 until words).map(w => col(s"sig$w"))
+
+    /** Hamming distance between the `sig*` and `qsig*` words. */
+    def distance: Column = (0 until words)
       .map(w => bit_count(col(s"sig$w").bitwiseXOR(col(s"qsig$w"))))
       .reduce(_ + _)
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("ham").asc, col("neighbor_id"))
-    val cands = sigs.withColumnRenamed("id", "neighbor_id")
-      .join(queries, col("query_id") =!= col("neighbor_id"))
-      .withColumn("ham", ham)
-      .withColumn("r", row_number().over(wa))
-      .filter(col("r") <= math.max(rerank, k))
-      .select("query_id", "neighbor_id")
-    val scored = cands
-      .join(unit.select(col("id").as("query_id"), col("uv").as("qv")),
-        Seq("query_id"))
-      .join(unit.select(col("id").as("neighbor_id"), col("uv").as("cv")),
-        Seq("neighbor_id"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
-    topK(scored, k)
   }
 
   /** IVF × binary-quantization composed ANN — the scale path
@@ -914,45 +926,20 @@ object Similarity {
       queryFilter: Column, nBits: Int = 256, dim: Int = 64,
       rerank: Int = 100, idCol: String = "vec_id", seed: Long = 42L,
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    require(nBits >= 1 && (nBits % 64 == 0 || nBits < 64),
-      s"nBits must be >= 1 and either < 64 or a multiple of 64, got $nBits")
-    SignBits.register(vecs.sparkSession)
+    val codec = new SignCodec(vecs.sparkSession, nBits, dim, seed)
     val cents = centroids.getOrElse(seedCentroids(vecs, nCells, idCol))
-    val words = math.max(1, (nBits + 63) / 64)
-    val all = hyperplanes(nBits, dim, seed).map(_.toSeq).toSeq
-    def planesOf(w: Int): Column =
-      typedlit[Seq[Seq[Double]]](all.slice(w * 64, math.min((w + 1) * 64, nBits)))
     // lazy persist (signature/cell scan + the rerank joins), released
     // by CacheHygiene — the annFromBuckets contract
     val unit = unitVectors(vecs, idCol, "id", "uv")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val corpusCells = unit.withColumn("cell", homeCell(cents))
-      .select(col("id").as("neighbor_id") +: col("cell") +:
-        (0 until words).map(w => SignBits.of(col("uv"), planesOf(w)).as(s"sig$w")): _*)
-    val queryProbes = unit.filter(queryFilter)
-      .withColumn("cell", explode(probeCells(cents, nProbe)))
-      .select(col("id").as("query_id") +: col("cell") +:
-        (0 until words).map(w => SignBits.of(col("uv"), planesOf(w)).as(s"qsig$w")): _*)
-    val ham = (0 until words)
-      .map(w => bit_count(col(s"sig$w").bitwiseXOR(col(s"qsig$w"))))
-      .reduce(_ + _)
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("ham").asc, col("neighbor_id"))
     // a corpus vector has ONE home cell, so (query, neighbor) pairs
-    // are join-unique — no distinct needed before the window
-    val cands = queryProbes.join(corpusCells, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("ham", ham)
-      .withColumn("r", row_number().over(wa))
-      .filter(col("r") <= math.max(rerank, k))
-      .select("query_id", "neighbor_id")
-    val scored = cands
-      .join(unit.select(col("id").as("query_id"), col("uv").as("qv")),
-        Seq("query_id"))
-      .join(unit.select(col("id").as("neighbor_id"), col("uv").as("cv")),
-        Seq("neighbor_id"))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
-    topK(scored, k)
+    // are join-unique — no distinct needed before the shortlist
+    val cands = withoutSelf(probe(unit.filter(queryFilter), cents, nProbe)(
+        col("id").as("query_id") +: codec.sigs("qsig"): _*)
+      .join(unit.select(col("id").as("neighbor_id") +: homeCell(cents).as("cell") +:
+        codec.sigs("sig"): _*), Seq("cell")))
+    topK(exactRerank(shortlist(cands, codec.distance, ascending = true, rerank, k),
+      Some(unit)), k)
   }
 
   /** Materialized-index rows for the IVF × binary-quantization index
@@ -977,19 +964,10 @@ object Similarity {
   def hammingIndexRows(vecs: DataFrame, centroids: Array[Array[Double]],
       nBits: Int = 256, dim: Int = 64, seed: Long = 42L,
       idCol: String = "vec_id"): DataFrame = {
-    require(nBits >= 1 && (nBits % 64 == 0 || nBits < 64),
-      s"nBits must be >= 1 and either < 64 or a multiple of 64, got $nBits")
-    SignBits.register(vecs.sparkSession)
-    val words = math.max(1, (nBits + 63) / 64)
-    val all = hyperplanes(nBits, dim, seed).map(_.toSeq).toSeq
-    def planesOf(w: Int): Column =
-      typedlit[Seq[Seq[Double]]](all.slice(w * 64, math.min((w + 1) * 64, nBits)))
+    val codec = new SignCodec(vecs.sparkSession, nBits, dim, seed)
     unitVectors(vecs, idCol, "id", "uv")
-      .withColumn("cell", homeCell(centroids))
-      .select(col("id").as(idCol) +: col("cell") +:
-        (0 until words).map(w =>
-          SignBits.of(col("uv"), planesOf(w)).as(s"sig$w")) :+
-        col("uv"): _*)
+      .select(col("id").as(idCol) +: homeCell(centroids).as("cell") +:
+        codec.sigs("sig") :+ col("uv"): _*)
   }
 
   /** Serve ANN queries from a MATERIALIZED [[hammingIndexRows]] index:
@@ -1009,34 +987,16 @@ object Similarity {
       nProbe: Int, centroids: Array[Array[Double]], nBits: Int = 256,
       dim: Int = 64, rerank: Int = 100, seed: Long = 42L,
       queryFilter: Column = lit(true), idCol: String = "vec_id"): DataFrame = {
-    require(nBits >= 1 && (nBits % 64 == 0 || nBits < 64),
-      s"nBits must be >= 1 and either < 64 or a multiple of 64, got $nBits")
-    SignBits.register(queries.sparkSession)
-    val words = math.max(1, (nBits + 63) / 64)
-    val all = hyperplanes(nBits, dim, seed).map(_.toSeq).toSeq
-    def planesOf(w: Int): Column =
-      typedlit[Seq[Seq[Double]]](all.slice(w * 64, math.min((w + 1) * 64, nBits)))
-    val queryProbes = unitVectors(queries, idCol, "id", "uv")
-      .filter(queryFilter)
-      .withColumn("cell", explode(probeCells(centroids, nProbe)))
-      .select(col("id").as("query_id") +: col("cell") +: col("uv").as("qv") +:
-        (0 until words).map(w =>
-          SignBits.of(col("uv"), planesOf(w)).as(s"qsig$w")): _*)
-    val corpus = index.select(col(idCol).as("neighbor_id") +: col("cell") +:
-      col("uv").as("cv") +:
-      (0 until words).map(w => col(s"sig$w")): _*)
-    val ham = (0 until words)
-      .map(w => bit_count(col(s"sig$w").bitwiseXOR(col(s"qsig$w"))))
-      .reduce(_ + _)
-    val wa = Window.partitionBy("query_id")
-      .orderBy(col("ham").asc, col("neighbor_id"))
-    val scored = queryProbes.join(corpus, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("ham", ham)
-      .withColumn("r", row_number().over(wa))
-      .filter(col("r") <= math.max(rerank, k))
-      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
-    topK(scored.select("query_id", "neighbor_id", "sim"), k)
+    val codec = new SignCodec(queries.sparkSession, nBits, dim, seed)
+    // the unit vectors ride the join (the index stores them), so the
+    // rerank needs no lookup
+    val cands = withoutSelf(probe(unitVectors(queries, idCol, "id", "uv")
+        .filter(queryFilter), centroids, nProbe)(col("id").as("query_id") +:
+        col("uv").as("qv") +: codec.sigs("qsig"): _*)
+      .join(index.select(col(idCol).as("neighbor_id") +: col("cell") +:
+        col("uv").as("cv") +: codec.stored: _*), Seq("cell")))
+    topK(exactRerank(shortlist(cands, codec.distance, ascending = true, rerank, k,
+      "qv", "cv")), k)
   }
 
   /** Maximal Marginal Relevance selection (Carbonell & Goldstein,
@@ -1189,7 +1149,7 @@ object Similarity {
     val scored = q.join(d, col("query_id") =!= col("doc_id"))
       .select(col("query_id"), col("doc_id"),
         maxSimScore(nSub).as("maxsim"))
-    maxSimTopK(scored, k)
+    topK(scored, k, id = "doc_id", score = "maxsim")
   }
 
   /** PLAID-style pruned MaxSim (Santhanam et al., "PLAID: An Efficient
@@ -1241,7 +1201,7 @@ object Similarity {
         maxSimScore(nSub).as("maxsim"))
     // eager checkpoint so the sub-vector cache can be dropped without
     // the caller's later action recomputing the whole candidate pass
-    val out = maxSimTopK(scored, k).localCheckpoint(true)
+    val out = topK(scored, k, id = "doc_id", score = "maxsim").localCheckpoint(true)
     d.unpersist()
     out
   }
@@ -1253,15 +1213,11 @@ object Similarity {
       dim: Int, nSub: Int, prefix: String): DataFrame = {
     require(nSub >= 1 && dim % nSub == 0,
       s"dim $dim must divide into nSub=$nSub sub-vectors")
-    DotProduct.register(vecs.sparkSession)
     val sub = dim / nSub
     val base = vecs.select(col(idCol).as(idAs),
       asDouble(col("embedding")).as("_v"))
     (0 until nSub).foldLeft(base) { (acc, j) =>
-      val s = slice(col("_v"), j * sub + 1, sub)
-      val n = sqrt(DotProduct.dot(s, s))
-      val nn = when(n === 0d, lit(1.0)).otherwise(n)
-      acc.withColumn(s"$prefix$j", transform(s, x => x / nn))
+      normalized(acc, slice(col("_v"), j * sub + 1, sub), s"$prefix$j")
     }.drop("_v")
   }
 
@@ -1276,22 +1232,54 @@ object Similarity {
       }: _*)
     }.reduce(_ + _)
 
-  private def maxSimTopK(scored: DataFrame, k: Int): DataFrame = {
-    val top = graft.plans.GroupedTopK(scored, Seq("query_id"),
-      Seq(("maxsim", false), ("doc_id", true)), k)
-    top.withColumn("rank",
-        row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("maxsim").desc, col("doc_id"))).cast("long"))
-      .select(col("query_id"), col("rank"), col("doc_id"), col("maxsim"))
-  }
+  // ------------------------------------------------ the ANN pipeline
 
-  private def topK(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("sim"), 4).as("sim"))
-  }
+  /** Stage 1, flat scan: every (query, corpus) pair except self-pairs,
+    * the query side broadcast (top-k query sets are small) and the
+    * corpus scanned once as the streamed side.
+    */
+  private[operators] def allPairs(queries: DataFrame,
+      corpus: DataFrame): DataFrame =
+    broadcast(queries).join(corpus, col("query_id") =!= col("neighbor_id"))
+
+  private[operators] def withoutSelf(pairs: DataFrame): DataFrame =
+    pairs.filter(col("query_id") =!= col("neighbor_id"))
+
+  /** Stage 2: each query's `max(rerank, k)` best candidates by a cheap
+    * `score` (neighbor_id breaks ties), through [[GroupedTopK]] — map-
+    * side heaps, so only the survivors shuffle. Output: (query_id,
+    * neighbor_id, carry…).
+    */
+  private[operators] def shortlist(cands: DataFrame, score: Column,
+      ascending: Boolean, rerank: Int, k: Int, carry: String*): DataFrame =
+    GroupedTopK(cands.select(Seq(col("query_id"), col("neighbor_id")) ++
+        carry.map(col) :+ score.as("_cheap"): _*),
+      Seq("query_id"), Seq(("_cheap", ascending), ("neighbor_id", true)),
+      math.max(rerank, k)).drop("_cheap")
+
+  /** Stage 3, the one exact rerank: `sim` = one [[DotProduct]] of the
+    * two unit vectors `qv`, `cv` — attached first from `unit` (id, uv)
+    * when the pairs do not carry them.
+    */
+  private[operators] def exactRerank(pairs: DataFrame,
+      unit: Option[DataFrame] = None): DataFrame =
+    unit.fold(pairs)(u => pairs
+        .join(u.select(col("id").as("query_id"), col("uv").as("qv")),
+          Seq("query_id"))
+        .join(u.select(col("id").as("neighbor_id"), col("uv").as("cv")),
+          Seq("neighbor_id")))
+      .withColumn("sim", DotProduct.dot(col("qv"), col("cv")))
+
+  /** Stage 4: each query's top `k` by `score` desc, `id` asc, through
+    * [[GroupedTopK]]; `rank` is numbered over those ≤ k rows on the raw
+    * score, which is then rounded to 4 decimals (a no-op on MaxSim's
+    * integer score). Output: (query_id, rank, id, score).
+    */
+  private[operators] def topK(scored: DataFrame, k: Int,
+      id: String = "neighbor_id", score: String = "sim"): DataFrame =
+    GroupedTopK(scored.select("query_id", id, score), Seq("query_id"),
+        Seq((score, false), (id, true)), k)
+      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
+        .orderBy(col(score).desc, col(id))).cast("long"))
+      .select(col("query_id"), col("rank"), col(id), round(col(score), 4).as(score))
 }

@@ -440,15 +440,13 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
         // identity/truncate) — the metadata-only prune blooms
         // can't give when every file's min/max spans the key
         case Engine.EqValue(c, v) =>
-          val bloom = catalog.prunedFilesBloom(s, c, v)
-          // per-ERA pval pruning (SnapshotCatalog.prunedFilesPvalEras):
+          // bloom ∩ per-ERA pval pruning (SnapshotCatalog.prunedFilesIn):
           // each file prunes under the spec it was written with, so
           // equality lookups stay metadata-exact across partition-spec
           // evolutions; a no-op when no era covers the column
           val schema = catalog.schemaOf(ns, table)
-          if (!schema.fieldNames.contains(c)) bloom
-          else bloom.intersect(catalog.prunedFilesPvalEras(
-            s, c, v, schema(c).dataType))
+          if (!schema.fieldNames.contains(c)) catalog.prunedFilesBloom(s, c, v)
+          else catalog.prunedFilesIn(s, c, Seq(v), schema(c).dataType)
       }
       acc.intersect(pruned)
     }
@@ -2442,16 +2440,14 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
       value: String, limit: Int = 100): String =
     if (!catalog.tableExists(ns, table))
       s"""{"error":${jsonStr(s"Table $ns.$table does not exist")}}"""
-    else served(Try {
-      val snap = catalog.describe(ns, table).currentSnapshot
-      val total = snap.map(_.files.size).getOrElse(0)
-      val kept = snap.map(s => catalog.prunedFilesBloom(s, column, value).size).getOrElse(0)
-      (catalog.readEquals(ns, table, column, value).limit(limit), kept, total)
-    } match {
-      case Success((df, kept, total)) =>
-        val env = envelope(Success(df))
+    else served(Try(catalog.readIn(ns, table, column, Seq(value))) match {
+      // one prune of one snapshot: the audit counts exactly the files
+      // the read scans (partition values AND blooms), never a second
+      // snapshot's
+      case Success(r) =>
+        val env = envelope(Success(r.df.limit(limit)))
         if (env.startsWith("""{"error"""")) env
-        else env.dropRight(1) + s""","pruned":{"kept":$kept,"total":$total}}"""
+        else env.dropRight(1) + s""","pruned":{"kept":${r.kept},"total":${r.total}}}"""
       case Failure(e) => errorJson(e)
     })
 

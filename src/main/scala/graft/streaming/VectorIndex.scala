@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.catalog.{PartitionSpec, SnapshotCatalog}
-import graft.operators.Pq
+import graft.operators.{Pq, Similarity}
 
 /** Streaming ANN-index maintenance: vectors arriving on a stream are
   * encoded into their IVF-PQ index rows by the SAME pure-projection
@@ -20,9 +20,9 @@ import graft.operators.Pq
   *    index has grown;
   *  - the index table is hidden-partitioned `identity(cell)`, and
   *    [[Pq.searchIndexPruned]] resolves a query batch's probed cells
-  *    through the manifest's recorded partition values
-  *    (`SnapshotCatalog.readEquals`), so serving reads only those
-  *    cells' files and never scans the firehose's history;
+  *    through the manifest's recorded partition values (one
+  *    `SnapshotCatalog.readIn` of one snapshot), so serving reads only
+  *    those cells' files and never scans the firehose's history;
   *  - centroids/codebooks are FIXED inputs (trained offline on a
   *    sample, as [[Pq.trainCodebooks]] documents) — retraining is a
   *    new table + backfill, never an in-place mutation, so readers
@@ -67,8 +67,7 @@ object VectorIndex {
       checkpointDir: String, nBits: Int = 256, dim: Int = 64,
       seed: Long = 42L, idCol: String = "vec_id",
       trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    graft.operators.Similarity
-      .hammingIndexRows(vecs, centroids, nBits, dim, seed, idCol)
+    Similarity.hammingIndexRows(vecs, centroids, nBits, dim, seed, idCol)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -108,8 +107,8 @@ object VectorIndex {
       seed: Long = 42L, idCol: String = "vec_id"): Sinks.ChangelogFollower =
     Sinks.changelogFollower(catalog, upNs, upTable, ns, table,
       keyCols = Seq(idCol),
-      transform = df => graft.operators.Similarity
-        .hammingIndexRows(df, centroids, nBits, dim, seed, idCol),
+      transform = df =>
+        Similarity.hammingIndexRows(df, centroids, nBits, dim, seed, idCol),
       tableProperties =
         Map(PartitionSpec.PropertyKey -> "identity(cell)"))
 
@@ -126,17 +125,19 @@ object VectorIndex {
     Sinks.changelogStream(spark, catalog, upNs, upTable, ns, table,
       keyCols = Seq(idCol), checkpointDir = checkpointDir,
       trigger = trigger,
-      transform = df => graft.operators.Similarity
-        .hammingIndexRows(df, centroids, nBits, dim, seed, idCol),
+      transform = df =>
+        Similarity.hammingIndexRows(df, centroids, nBits, dim, seed, idCol),
       tableProperties =
         Map(PartitionSpec.PropertyKey -> "identity(cell)"))
 
   /** Serve from the streamed Hamming index reading ONLY the probed
     * cells' files (the [[graft.operators.Pq.searchIndexPruned]]
-    * discipline): the query batch's probe cells resolve through the
-    * manifest's recorded `identity(cell)` partition values
-    * (`readEquals`), so at 100 TB a query touches nProbe cells of
-    * data, never the accumulated firehose history.
+    * discipline): the query batch's probe cells — chosen by the same
+    * probe [[graft.operators.Similarity.searchHammingIndex]] searches
+    * with — resolve through the manifest's recorded `identity(cell)`
+    * partition values in one read of one snapshot, so at 100 TB a
+    * query touches nProbe cells of data, never the accumulated
+    * firehose history.
     */
   def searchHammingPruned(catalog: SnapshotCatalog, ns: String,
       table: String, queries: DataFrame, k: Int, nProbe: Int,
@@ -144,14 +145,11 @@ object VectorIndex {
       rerank: Int = 100, seed: Long = 42L,
       queryFilter: org.apache.spark.sql.Column = org.apache.spark.sql.functions.lit(true),
       idCol: String = "vec_id"): DataFrame = {
-    val unitQ = graft.operators.Similarity
-      .unitVectors(queries, idCol, "id", "uv").filter(queryFilter)
-    val cells = graft.operators.Pq.probedCellIds(unitQ, centroids, nProbe)
-    val index = cells.map(c => catalog.readEquals(ns, table, "cell", c.toString))
-      .reduceOption(_.unionAll(_))
-      .getOrElse(catalog.read(ns, table).limit(0))
-    graft.operators.Similarity.searchHammingIndex(index, queries, k,
-      nProbe, centroids, nBits, dim, rerank, seed, queryFilter, idCol)
+    val index = Similarity.probedIndex(catalog, ns, table,
+      Similarity.unitVectors(queries, idCol, "id", "uv").filter(queryFilter),
+      centroids, nProbe)
+    Similarity.searchHammingIndex(index, queries, k, nProbe, centroids,
+      nBits, dim, rerank, seed, queryFilter, idCol)
   }
 
   /** One audit's verdict: mean served recall@k over the sampled
@@ -193,7 +191,7 @@ object VectorIndex {
     val sample = corpus
       .sample(withReplacement = false, sampleFraction, sampleSeed)
       .localCheckpoint()
-    val exact = graft.operators.Similarity.knnExact(sample, corpus, k, idCol)
+    val exact = Similarity.knnExact(sample, corpus, k, idCol)
     val served = searchHammingPruned(catalog, ns, table, sample, k,
       nProbe, centroids, nBits, dim, rerank, seed, idCol = idCol)
     val denom = exact.count()

@@ -164,6 +164,12 @@ class HttpApiSpec extends SparkTestBase {
     cat.append("default_db", "keyed", (0 until 300 by 3).map(i => (f"u$i%04d", i.toLong)).toDF("uid", "n"))
     cat.append("default_db", "keyed", (1 until 300 by 3).map(i => (f"u$i%04d", i.toLong)).toDF("uid", "n"))
     cat.append("default_db", "keyed", (2 until 300 by 3).map(i => (f"u$i%04d", i.toLong)).toDF("uid", "n"))
+    // no bloom column, bucket(4, uid) partitioning: the partition
+    // values alone prune three quarters of the files
+    cat.createTable("default_db", "bucketed", cat.schemaOf("default_db", "keyed"),
+      Map(graft.catalog.PartitionSpec.PropertyKey -> "bucket(4, uid)"))
+    for (r <- 0 until 3)
+      cat.append("default_db", "bucketed", (r until 300 by 3).map(i => (f"u$i%04d", i.toLong)).toDF("uid", "n"))
     val api = new HttpApi(new Engine(spark, cat), HttpApi.Kind.Catalog)
     api.start()
     try {
@@ -176,6 +182,17 @@ class HttpApiSpec extends SparkTestBase {
       val prune = """"pruned":\{"kept":(\d+),"total":(\d+)\}""".r
         .findFirstMatchIn(b).getOrElse(fail(s"no prune audit in $b"))
       assert(prune.group(1).toInt < prune.group(2).toInt, b)
+      // the audit counts exactly the files the lookup reads
+      val (cb, bb) = post(p, "/query",
+        """{"namespace": "default_db", "table": "bucketed",
+          | "lookup_column": "uid", "lookup_value": "u0042"}""".stripMargin)
+      assert(cb == 200, bb)
+      assert(""""n":42""".r.findAllIn(bb).size == 1, bb)
+      val bp = """"pruned":\{"kept":(\d+),"total":(\d+)\}""".r
+        .findFirstMatchIn(bb).getOrElse(fail(s"no prune audit in $bb"))
+      val read = cat.readEquals("default_db", "bucketed", "uid", "u0042").inputFiles
+      assert(bp.group(1).toInt < bp.group(2).toInt, bb)
+      assert(bp.group(1).toInt == read.length, s"$bb vs ${read.length} files read")
       // absent key: empty records, (near-)zero kept files
       val (c2, b2) = post(p, "/query",
         """{"namespace": "default_db", "table": "keyed",

@@ -127,6 +127,39 @@ class VectorIndexSpec extends SparkTestBase {
       s"readEquals($c) scanned $oneFiles of $allFiles files — no pruning")
   }
 
+  test("pruned Hamming serving reads the cells the search probes: " +
+      "all-zero query, duplicate centroids") {
+    import spark.implicits._
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+      .select("vec_id", "embedding")
+    // vec 1 := vec 0, so the seeded centroids 0 and 1 are equal: a
+    // vector near them ties, and the probe breaks the tie
+    val corpus = e.filter(col("vec_id") =!= 1L)
+      .union(e.filter(col("vec_id") === 0L).withColumn("vec_id", lit(1L)))
+    val cents = Similarity.seedCentroids(corpus, 16)
+    assert(cents(0).sameElements(cents(1)))
+    val cat = new SnapshotCatalog(spark, tmpDir("graft-ham-ties"))
+    VectorIndex.commitBatch(cat, "ann", "ties", tmpDir("graft-ham-ties-ckpt"))(
+      Similarity.hammingIndexRows(corpus, cents), 0L)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1),
+        r.getLong(2), r.getDouble(3))).toSet
+    // an all-zero query scores 0 against every centroid (unitVectors
+    // keeps its zeros): every cell ties
+    val zero = Seq((-1L, Seq.fill(64)(0.0f))).toDF("vec_id", "embedding")
+    // vec 0 scores equal on centroids 0 and 1: one probe must pick the
+    // same one of the two for the read and for the search
+    val dup = corpus.filter(col("vec_id") === 0L)
+    for ((queries, nProbe) <- Seq((zero, 4), (dup, 1))) {
+      val full = pairs(Similarity.searchHammingIndex(cat.read("ann", "ties"),
+        queries, k = 5, nProbe = nProbe, cents))
+      val pruned = pairs(VectorIndex.searchHammingPruned(cat, "ann", "ties",
+        queries, k = 5, nProbe = nProbe, cents))
+      assert(full.nonEmpty, s"nProbe $nProbe")
+      assert(pruned == full, s"nProbe $nProbe")
+    }
+  }
+
   test("streamed Hamming index: rows equal the batch projection; a new " +
       "micro-batch updates served ANN answers with no retrain") {
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
