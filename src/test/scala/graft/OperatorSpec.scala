@@ -792,10 +792,6 @@ class OperatorSpec extends SparkTestBase {
       "knnIvf, nProbe = nCells" -> (() => Similarity.knnIvf(e, 5, 16, 16, q)),
       "knnSq8, rerank = n" -> (() => Similarity.knnSq8(e, 5, q, rerank = n)),
       "knnPq, rerank = n" -> (() => Pq.knnPq(e, 5, books, 64, q, rerank = n)),
-      "knnHamming, rerank = n" ->
-        (() => Similarity.knnHamming(e, 5, q, rerank = n)),
-      "knnIvfHamming, probe all, rerank = n" -> (() => Similarity
-        .knnIvfHamming(e, 5, nCells = 16, nProbe = 16, q, rerank = n)),
       "knnIvfPq, probe all, rerank = n" -> (() => Pq.knnIvfPq(e, 5,
         nCells = 16, nProbe = 16, m = 8, ksub = 16, dim = 64, q,
         rerank = n, coarseCentroids = Some(cents), codebooks = Some(resid))),
@@ -803,22 +799,53 @@ class OperatorSpec extends SparkTestBase {
         (() => Similarity.searchHammingIndex(Similarity.hammingIndexRows(e,
           cents), e, 5, nProbe = 16, cents, rerank = n, queryFilter = q)))
     for ((name, run) <- exhaustive) assert(rows(run()) == exact, name)
+  }
 
-    def recall(df: org.apache.spark.sql.DataFrame) = {
-      val pairs = rows(df).map(t => (t._1, t._3))
-      (pairs & exact.map(t => (t._1, t._3))).size / exact.size.toDouble
-    }
-    // production Hamming config (256-bit signatures, rerank 100 — the
-    // pick of the retired HammingSweep probe, SCALING.md "Retired
-    // probes"): recall above the e20 driver floor of 0.85
-    val ham = recall(Similarity.knnHamming(e, 5, q))
-    assert(ham >= 0.85, s"hamming recall $ham")
-    // production IVF × Hamming shape: 4/16 probes + 256-bit filter +
-    // rerank 100 — recall bounded by the IVF cell restriction (e04's
-    // regime)
-    val ivfHam = recall(Similarity.knnIvfHamming(e, 5, nCells = 16,
-      nProbe = 4, q))
-    assert(ivfHam >= 0.55, s"ivf-hamming recall $ivfHam")
+  test("Hamming flat-scan ANN: rerank-all reproduces exact kNN; " +
+      "production rerank clears its floor") {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val n = e.count().toInt
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "sim").collect()
+        .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2),
+          r.getDouble(3)))
+        .toSet
+    val exact = rows(Similarity.knnExact(e.filter(col("vec_id") < 50), e, 5))
+    // rerank ≥ corpus ⇒ the Hamming shortlist prunes nothing and the
+    // exact-rerank pass IS exact kNN, row for row
+    val all = rows(Similarity.knnHamming(e, 5, col("id") < 50, rerank = n))
+    assert(all == exact)
+    // production config (256-bit signatures, rerank 100 — the pick of the
+    // retired HammingSweep probe, SCALING.md "Retired probes"): recall
+    // above the e20 driver floor of 0.85
+    val ham = rows(Similarity.knnHamming(e, 5, col("id") < 50))
+    val rec = (ham.map(t => (t._1, t._3)) & exact.map(t => (t._1, t._3))).size /
+      exact.size.toDouble
+    assert(rec >= 0.85, s"hamming recall $rec")
+  }
+
+  test("IVF x Hamming composed ANN: probe-all + rerank-all is exact; " +
+      "production config holds recall") {
+    val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val n = e.count().toInt
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("query_id", "rank", "neighbor_id", "sim").collect()
+        .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2),
+          r.getDouble(3)))
+        .toSet
+    val exact = rows(Similarity.knnExact(e.filter(col("vec_id") < 50), e, 5))
+    // probe-all + rerank-all: neither the coarse quantizer nor the
+    // binary shortlist prunes anything ⇒ exact kNN row for row
+    val allOn = rows(Similarity.knnIvfHamming(e, 5, nCells = 16,
+      nProbe = 16, col("id") < 50, rerank = n))
+    assert(allOn == exact)
+    // production shape: 4/16 probes + 256-bit filter + rerank 100 —
+    // recall bounded by the IVF cell restriction (e04's regime)
+    val prod = rows(Similarity.knnIvfHamming(e, 5, nCells = 16,
+      nProbe = 4, col("id") < 50))
+    val rec = (prod.map(t => (t._1, t._3)) & exact.map(t => (t._1, t._3))).size /
+      exact.size.toDouble
+    assert(rec >= 0.55, s"ivf-hamming recall $rec")
   }
 
   test("NgramLm: Kneser-Ney discounting matches the hand model and " +
