@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    `cached` intermediates) — registered with the cache manager,
   *    dropped by `catalog.clearCache()`;
   *  - `localCheckpoint` blocks (operator-internal materializations in
-  *    Similarity/UnigramLm) — owned by their plan and reclaimed by the
+  *    Similarity) — owned by their plan and reclaimed by the
   *    ContextCleaner on GC, which is correct but LAZY: a 113-query
   *    one-JVM run can churn the block manager long before a periodic
   *    GC fires. These never appear in the cache manager; only

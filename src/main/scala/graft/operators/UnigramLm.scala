@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFns
+import graft.functions.expressions.UnigramViterbi
 
 /** Unigram-LM subword tokenizer (Kudo 2018, "Subword Regularization";
   * the SentencePiece `unigram` model): score every vocabulary piece by
@@ -25,13 +26,11 @@ import graft.functions.TextFns
   * Scale shape:
   *  - vocab: one gram-count aggregation (the t16 n-gram shuffle,
   *    keyed on pieces; the piece space is BOUNDED — Σ_{l<=4} |Σ|^l —
-  *    so the result broadcasts);
-  *  - candidate costing: explode (position × piece-length) rows, one
-  *    BROADCAST join against the vocab, one doc_id-keyed regroup —
-  *    the only data-sized shuffle, keyed on the output grain;
-  *  - Viterbi: a per-row `aggregate` fold over the packed cost array
-  *    (O(n·maxPiece) int64 ops, no shuffle, no UDF) — each document's
-  *    DP runs where its row lives.
+  *    so the scored vocab is collected to the driver) in one job;
+  *  - Viterbi: one codegen'd [[UnigramViterbi]] projection over the
+  *    documents with the vocab as a literal argument — O(n·maxPiece)
+  *    int64 ops and hash probes per document, no explode, no join, no
+  *    shuffle; each document's DP runs where its row lives.
   */
 object UnigramLm {
 
@@ -41,195 +40,77 @@ object UnigramLm {
     * centinats). Long-min over the packing IS lexicographic min over
     * (cost, n_tokens).
     */
-  val Shift: Long = 1L << 21
+  val Shift: Long = UnigramViterbi.Shift
 
   /** Hard validity bound of the packed encoding, ENFORCED at runtime:
     * n_tokens can reach n_chars (all-1-gram segmentation), so any
     * normalized text longer than 2^21−1 chars could wrap the token
     * field into the cost field and return plausible-but-wrong numbers.
-    * [[encode]] short-circuits such documents BEFORE the candidate
-    * explode (they'd emit 4·n candidate rows — the wrong place to
-    * discover the overflow at web scale, where multi-MB documents are
-    * routine) and reports them with NULL n_tokens/total_cost — an
-    * explicit overflow marker, mirrored by the t41 oracle. The cost
-    * field stays safe at this bound: ≤ ~34.5k centinats/char (a
-    * 1-in-10^15 piece) × 2^21 chars ≈ 2^36.1 « 2^41.
+    * [[encode]] skips the DP for such documents and reports them with
+    * NULL n_tokens/total_cost — an explicit overflow marker, mirrored
+    * by the t41 oracle. The cost field stays safe at this bound:
+    * ≤ ~34.5k centinats/char (a 1-in-10^15 piece) × 2^21 chars
+    * ≈ 2^36.1 « 2^41.
     */
   val MaxChars: Long = Shift - 1
 
   /** "Unreachable" DP cell: far above any real packed cost, far below
     * overflow even after adding a per-step cost.
     */
-  val Inf: Long = Long.MaxValue / 4
+  val Inf: Long = UnigramViterbi.Inf
 
   /** Integer piece costs from corpus counts: all 1..`maxPiece`-char
     * grams of the normalized text, pruned to `minCount`+ occurrences
     * except 1-grams (coverage). Columns: piece, cost (centinats).
     */
   def pieceVocab(docsDf: DataFrame, maxPiece: Int = 4,
-                 minCount: Int = 5): DataFrame = {
-    // Persisted: both the pruned vocab and the 1-row total derive from
-    // this frame — without the persist the corpus piece-explode and its
-    // aggregation run twice (visible as two full scan subplans in the
-    // formatted plan). Piece-bounded (Σ_{l<=maxPiece}|Σ|^l), so cheap;
-    // released session-side by CacheHygiene.releaseAll (the round-9
-    // lifecycle contract — see Similarity.lshCandidatePairs' note).
-    val counts = normPieces(docsDf, maxPiece)
+                 minCount: Int = 5): DataFrame =
+    // One job: the total is a window sum over the piece-bounded counts
+    // (Σ_{l<=maxPiece}|Σ|^l rows, so one partition holds them), taken
+    // before the prune so costs are log-probabilities of the whole
+    // corpus.
+    normPieces(docsDf, maxPiece)
       .groupBy("piece").agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = counts.agg(sum("cnt").as("tot"))
-    counts
+      .select(col("piece"), col("cnt"), sum("cnt").over().as("tot"))
       .filter(col("cnt") >= minCount || length(col("piece")) === 1)
-      .crossJoin(broadcast(total)) // 1-row total — the e07 shape
       .select(col("piece"),
         round(-lit(1000.0) * log(col("cnt").cast("double") / col("tot")))
           .cast("long").as("cost"))
-  }
 
   /** Viterbi segmentation summary per document against `pieceVocab`:
     * doc_id, n_chars (normalized), n_tokens, total_cost (centinats).
     * The minimal-cost segmentation is unique as a VALUE (cost and
     * token count) by the packed-min construction even when multiple
-    * segmentations attain it.
+    * segmentations attain it. Every input row keeps one output row: a
+    * NULL text gives NULL n_chars, n_tokens and total_cost.
     */
   def encode(docsDf: DataFrame, maxPiece: Int = 4,
              minCount: Int = 5): DataFrame = {
-    val vocab = pieceVocab(docsDf, maxPiece, minCount)
-
-    // All (i, j) candidates, j = 1..maxPiece, VALID iff j <= i and the
-    // piece survived pruning; invalid cells carry Inf so the packed
-    // array always has exactly maxPiece·n slots and element_at is pure
-    // index arithmetic.
-    // Candidate extraction is a SIZE-HYBRID (see PieceBlock): docs
-    // that fit one block run the whole-stage-codegen'd per-position
-    // explode — carrying their ≤ PieceBlock-char `norm` per row is
-    // bounded and fast (the HOF-based blocked path below is ~3×
-    // slower on a normal corpus because higher-order functions are
-    // interpreted, measured at sf0.1) — while longer docs take the
-    // blocked path, whose rows carry only a ~4 KiB segment (plus
-    // maxPiece−1 lead chars, since the (i, j) grid addresses pieces
-    // ENDING at i) and emit their maxPiece·m candidate structs in one
-    // flatten. Without the split, a near-bound doc copies positions ×
-    // doc-size heap through the explode (OOM'd a 16g JVM at 2M chars).
-    //
-    // Routing predicate: RAW length(text), not normalized length —
-    // normalization only removes/replaces chars so n <= length(text),
-    // making the small branch safe, and the cheap predicate means the
-    // expensive normalization regex runs ONCE per doc in exactly one
-    // branch (routing on n made each union branch re-normalize the
-    // whole corpus: 2× wall on the t41 bench). A raw-long doc that
-    // normalizes small just takes the blocked path — equally correct.
-    def normed(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), TextFns.normalized(col("text")).as("norm"))
-        .select(col("doc_id"), col("norm"), length(col("norm")).as("n"))
-    val largeNorm = normed(docsDf.filter(length(col("text")) > lit(PieceBlock)))
-    // Packing-bound guard (see MaxChars): overlong docs never enter
-    // the explode; they surface as explicit NULL-overflow rows. The
-    // vocabulary still counts their pieces — they are valid corpus
-    // text; only their own segmentation is out of the DP's range.
-    val over = largeNorm.filter(col("n") > MaxChars)
-      .select(col("doc_id"), col("n").cast("long").as("n_chars"),
-        lit(null).cast("long").as("n_tokens"),
-        lit(null).cast("long").as("total_cost"))
-    val candSmall = normed(docsDf.filter(length(col("text")) <= lit(PieceBlock)))
-      .select(col("doc_id"), col("n"),
-        explode(sequence(lit(1), greatest(col("n"), lit(1)))).as("i"),
-        col("norm"))
-      .select(col("doc_id"), col("n"), col("i"),
-        explode(sequence(lit(1), lit(maxPiece))).as("j"), col("norm"))
-      .select(col("doc_id"), col("n"), col("i"), col("j"),
-        when(col("j") <= col("i"),
-          col("norm").substr(col("i") - col("j") + 1, col("j")))
-          .as("piece"))
-    val candLarge = largeNorm
-      .filter(col("n") <= MaxChars)
-      .select(col("doc_id"), col("n"),
-        explode(sequence(lit(0),
-          floor((greatest(col("n"), lit(1)) - 1) / lit(PieceBlock))
-            .cast("int"))).as("blk"),
-        col("norm"))
-      .select(col("doc_id"), col("n"), col("blk"),
-        least(lit(PieceBlock), col("n") - col("blk") * PieceBlock).as("m"),
-        greatest(col("blk") * PieceBlock + 2 - maxPiece, lit(1))
-          .as("seg_start"),
-        col("norm"))
-      .select(col("doc_id"), col("n"), col("blk"), col("m"),
-        (col("blk") * PieceBlock + 1 - col("seg_start")).as("off"),
-        col("norm").substr(col("seg_start"),
-          col("blk") * PieceBlock + lit(PieceBlock) - col("seg_start") + 1)
-          .as("seg"))
-      // same O(B²)-substr avoidance as normPieces: chars once per block
-      .select(col("doc_id"), col("n"), col("blk"), col("m"), col("off"),
-        split(col("seg"), "").as("seg_chars"))
-      .select(col("doc_id"), col("n"),
-        // greatest(m, 1): an empty normalized doc (n = 0, m = 0) still
-        // emits its i = 1 Inf row — same as the pre-blocking layout —
-        // and sequence(1, 0) would count DOWN (the TextFns trap).
-        // j is unrolled in SCALA (maxPiece is a constant), so each
-        // piece is one concat of j O(1) element_at reads — the
-        // array_join(slice(...)) form allocated a slice array per
-        // piece and benched 5× slower on the normal corpus.
-        explode(flatten(transform(
-          sequence(lit(1), greatest(col("m"), lit(1))), li =>
-            array((1 to maxPiece).map { j =>
-              struct(
-                (col("blk") * PieceBlock + li).as("i"),
-                lit(j).as("j"),
-                when(lit(j) <= col("blk") * PieceBlock + li,
-                  concat((0 until j).map(d =>
-                    element_at(col("seg_chars"),
-                      col("off") + li - lit(j) + 1 + lit(d))): _*))
-                  .as("piece"))
-            }: _*)))).as("c"))
-      .select(col("doc_id"), col("n"), col("c.i").as("i"),
-        col("c.j").as("j"), col("c.piece").as("piece"))
-    val cand = candSmall.unionAll(candLarge)
-      .join(broadcast(vocab), Seq("piece"), "left")
-
-    val packed = cand
-      .groupBy(col("doc_id"), col("n"))
-      .agg(sort_array(collect_list(struct(
-        ((col("i") - 1) * maxPiece + col("j")).as("slot"),
-        coalesce(col("cost"), lit(Inf)).as("c")))).as("cells"))
-      .select(col("doc_id"), col("n").cast("long").as("n_chars"),
-        transform(col("cells"), c => c.getField("c")).as("costs"))
-
-    // DP fold: acc = [dp(i-1), dp(i-2), ..., dp(i-maxPiece)] packed;
-    // dp(0) = 0. One int64 expression per step, evaluated where the
-    // row lives.
-    val dpInit = array((lit(0L) +: Seq.fill(maxPiece - 1)(lit(Inf))): _*)
-    val stepped = packed.select(
-      col("doc_id"), col("n_chars"),
-      aggregate(
-        sequence(lit(1), greatest(col("n_chars"), lit(1L)).cast("int")),
-        dpInit,
-        (acc, i) => {
-          val best = (1 to maxPiece).map { j =>
-            val c = element_at(col("costs"), (i - 1) * maxPiece + lit(j))
-            val prev = element_at(acc, j)
-            when(prev >= Inf || c >= Inf, lit(Inf))
-              .otherwise(prev + c * Shift + 1L)
-          }.reduce(least(_, _))
-          concat(array(best), slice(acc, 1, maxPiece - 1))
-        },
-        acc => element_at(acc, 1)).as("enc"))
-
-    stepped.select(
-      col("doc_id"),
-      col("n_chars"),
-      when(col("n_chars") === 0L, lit(0L))
-        .otherwise(pmod(col("enc"), lit(Shift))).as("n_tokens"),
-      // DIV, not floor(a/b): `/` on longs is DOUBLE division, which
-      // loses exactness once enc > 2^53 (cost > 2^32 centinats, ~300k
-      // chars) — inside the documented 2M-char validity range.
-      when(col("n_chars") === 0L, lit(0L))
-        .otherwise(expr(s"enc DIV ${Shift}L")).as("total_cost"))
-      .unionAll(over)
+    UnigramViterbi.register(docsDf.sparkSession)
+    val vocab = pieceVocab(docsDf, maxPiece, minCount).collect()
+    val pieces = typedlit(vocab.map(_.getString(0)).toSeq)
+    val costs = typedlit(vocab.map(_.getLong(1)).toSeq)
+    docsDf
+      .select(col("doc_id"), TextFns.normalized(col("text")).as("norm"))
+      .select(col("doc_id"), length(col("norm")).cast("long").as("n_chars"),
+        // Packing-bound guard (see MaxChars): overlong docs skip the DP
+        // and surface as explicit NULL-overflow rows. The vocabulary
+        // still counts their pieces — they are valid corpus text.
+        when(length(col("norm")) <= MaxChars,
+          UnigramViterbi.encode(col("norm"), pieces, costs)).as("enc"))
+      .select(
+        col("doc_id"),
+        col("n_chars"),
+        pmod(col("enc"), lit(Shift)).as("n_tokens"),
+        // DIV, not floor(a/b): `/` on longs is DOUBLE division, which
+        // loses exactness once enc > 2^53 (cost > 2^32 centinats, ~300k
+        // chars) — inside the documented 2M-char validity range.
+        expr(s"enc DIV ${Shift}L").as("total_cost"))
   }
 
-  // Position-block width for piece extraction. A per-POSITION explode
-  // that carries the document text would copy the whole string into
-  // every row — for a multi-MB web document that is positions × doc
+  // Position-block width for vocab piece extraction. A per-POSITION
+  // explode that carries the document text would copy the whole string
+  // into every row — for a multi-MB web document that is positions × doc
   // size of heap (measured: one 2M-char doc OOM'd a 16g JVM). Blocks
   // bound the carried text to ~4 KiB per row AND spread a huge doc's
   // piece counting across rows (the parallelism a skewed crawl needs).
@@ -237,14 +118,18 @@ object UnigramLm {
 
   // (piece) rows: every 1..maxPiece-gram occurrence of the normalized
   // corpus (occurrence counts, not distinct — the LM is count-based).
-  // Size-hybrid like encode's candidate extraction: single-block docs
-  // keep the codegen'd per-position explode; longer docs go through a
-  // two-level explode — (doc → position blocks) carrying only the
-  // block's substring (+ maxPiece−1 overlap chars so grams crossing a
-  // block edge are counted exactly once, by their START block), then
-  // (block → pieces) from that bounded segment.
+  // Size-hybrid: single-block docs keep the codegen'd per-position
+  // explode; longer docs go through a two-level explode — (doc →
+  // position blocks) carrying only the block's substring (+ maxPiece−1
+  // overlap chars so grams crossing a block edge are counted exactly
+  // once, by their START block), then (block → pieces) from that
+  // bounded segment.
   private def normPieces(docsDf: DataFrame, maxPiece: Int): DataFrame = {
-    // routed on RAW length — see encode's routing-predicate comment
+    // Routed on RAW length(text), not normalized length: normalization
+    // only removes/replaces chars so n <= length(text), making the small
+    // branch safe, and the cheap predicate runs the normalization regex
+    // ONCE per doc, in exactly one branch. A raw-long doc that
+    // normalizes small just takes the blocked path — equally correct.
     def normed(df: DataFrame): DataFrame = df
       .select(TextFns.normalized(col("text")).as("norm"))
       .select(col("norm"), length(col("norm")).as("n"))
@@ -275,7 +160,10 @@ object UnigramLm {
       // is O(j) and finishes in seconds.
       .select(col("m"), length(col("seg")).as("seg_len"),
         split(col("seg"), "").as("seg_chars"))
-      // j unrolled in Scala — same one-concat-per-piece move as encode
+      // j unrolled in SCALA (maxPiece is a constant), so each piece is
+      // one concat of j O(1) element_at reads — the
+      // array_join(slice(...)) form allocated a slice array per piece
+      // and benched 5× slower on the normal corpus.
       .select(explode(flatten(
         transform(sequence(lit(1), col("m")), i =>
           filter(

@@ -2414,9 +2414,10 @@ object TrainingData {
   // SentencePiece unigram family): corpus-scored piece vocabulary +
   // exact-integer Viterbi segmentation. Piece costs are integer
   // centinats, so the minimal (cost, n_tokens) value is
-  // engine-independent; the oracle replays the DP as a `list_reduce`
-  // fold over the same packed per-position cost layout the Spark fold
-  // consumes ((p-1)·4+j slots, Inf in invalid cells). Oracle notes:
+  // engine-independent; the oracle replays the engine's DP (the
+  // `UnigramViterbi` expression) as a `list_reduce` fold over a packed
+  // per-position cost layout ((p-1)·4+j slots, Inf in invalid cells).
+  // Oracle notes:
   // a recursive-CTE formulation is also correct (validated equal at
   // sf0.01) but re-joins the vocab per character step — 40 s at
   // sf0.01, >50 min at sf0.1 — while the fold is one pass (2 s / 9 s);

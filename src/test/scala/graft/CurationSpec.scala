@@ -297,11 +297,14 @@ class CurationSpec extends SparkTestBase {
     // A doc one char past MaxChars would wrap n_tokens into the cost
     // field under the all-1-gram segmentation; the guard must surface
     // NULLs (explicit overflow) instead of plausible wrong numbers —
-    // and must not take the short doc with it.
+    // and must not take the short doc with it. A NULL text keeps its
+    // row too, with NULL in every measure.
     val long = "a" * (UnigramLm.MaxChars.toInt + 2)
     val out = UnigramLm.encode(
-        Seq((1L, "the cat sat"), (2L, long)).toDF("doc_id", "text"))
+        Seq((1L, "the cat sat"), (2L, long), (3L, null)).toDF("doc_id", "text"))
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
+    Seq("n_chars", "n_tokens", "total_cost").foreach(c =>
+      assert(out(3L).isNullAt(out(3L).fieldIndex(c)), c))
     assert(out(2L).getAs[Long]("n_chars") > UnigramLm.MaxChars)
     assert(out(2L).isNullAt(out(2L).fieldIndex("n_tokens")))
     assert(out(2L).isNullAt(out(2L).fieldIndex("total_cost")))
