@@ -13,26 +13,22 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** The engine's SQL function surface (idempotent): the codegen dot
-    * product, the t-digest quantile aggregate, the Misra-Gries
-    * heavy-hitters aggregate, the shingle UDTF, the sign-LSH bucket
-    * loop, and the curation/media/text scalars (`graft_gopher_pass`,
-    * `graft_winnow_digest`, `graft_cdc_cuts`, `graft_ahash64`,
-    * `graft_lang_id`, `graft_quality_score`, `graft_token_count`,
-    * `graft_fingerprint`, `graft_sq8_encode`, `graft_sq8_dot`) — so
-    * `spark.sql` users get them without touching the Scala API.
-    * (Optimizer rules are not functions: [[builder]] injects
-    * [[graft.plans.CompactHllRewrite]] into every session it builds;
-    * the opt-in range-join rule and grouped top-k strategy come with
-    * `graft.plans.GraftExtensions` via `spark.sql.extensions`.)
+  /** Fails unless `spark` carries the engine's SQL function surface —
+    * every name in [[graft.plans.GraftExtensions.functionNames]]. The
+    * functions are injected when the session is built, never at run
+    * time, so a session from [[builder]] (or any session built with
+    * `spark.sql.extensions=graft.plans.GraftExtensions`) always passes.
     */
   def registerFunctions(spark: SparkSession): Unit = {
-    graft.functions.expressions.DotProduct.register(spark)
-    graft.functions.expressions.QuantileDigest.register(spark)
-    graft.functions.expressions.MisraGries.register(spark)
-    graft.functions.expressions.ShingleGen.register(spark)
-    graft.functions.expressions.SignBuckets.register(spark)
-    graft.functions.expressions.CurationSql.register(spark)
+    // the registry itself: `spark.catalog.functionExists` resolves each
+    // name through the analyzer, about 1 s more at session start
+    val registry = spark.sessionState.functionRegistry
+    val missing = graft.plans.GraftExtensions.functionNames.filterNot(n =>
+      registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"session lacks the graft SQL functions ${missing.mkString(", ")}: " +
+        "build it with graft.core.GraftSession.builder or set " +
+        "spark.sql.extensions=graft.plans.GraftExtensions")
   }
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -92,8 +88,6 @@ object GraftSession {
       // (SnapshotCatalog.footerFileStats) AND leave ts files unprunable
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
-      // approx_count_distinct as one binary HLL++ buffer instead of one
-      // long column per 10 registers (1,639 at rsd 0.01) — same
-      // estimates, see CompactHll
-      .withExtensions(_.injectOptimizerRule(_ => graft.plans.CompactHllRewrite))
+      // every graft SQL function, optimizer rule and planner strategy
+      .withExtensions(new graft.plans.GraftExtensions)
 }

@@ -127,22 +127,11 @@ case class BpeMerges(first: Expression, second: Expression,
 
 object BpeMerges {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   val FnName = "graft_bpe_merge"
 
-  /** Idempotent registry hookup (same pattern as [[DotProduct]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident =
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        FnName, exprs => BpeMerges(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-  }
-
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def merge(syms: Column, lefts: Column, rights: Column): Column =
     org.apache.spark.sql.functions.call_function(FnName, syms, lefts, rights)
 }

@@ -77,22 +77,11 @@ case class BucketedSum(left: Expression, right: Expression)
 
 object BucketedSum {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   val FnName = "graft_bucket_sum"
 
-  /** Idempotent registry hookup (same pattern as [[DotProduct]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident =
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        FnName, exprs => BucketedSum(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def bucketSum(bks: Column, w: Column): Column =
     org.apache.spark.sql.functions.call_function(FnName, bks, w)
 }

@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   */
 object CentroidOps {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   /** take-the-candidate rule shared by every argmax in this file:
     * first candidate unconditionally; then `s >= best` (ties → larger
@@ -56,22 +56,6 @@ object CentroidOps {
   val ResidualFn = "graft_centroid_residual"
   val PqErrorFn = "graft_pq_error"
   val TopCellsFn = "graft_top_cells"
-
-  /** Idempotent registry hookup for this file's expressions. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String, b: Seq[Expression] => Expression): Unit = {
-      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!registry.functionExists(ident)) {
-        registry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-    }
-    reg(NearestCellFn, es => NearestCell(es(0), es(1), es(2)))
-    reg(PqEncodeFn, es => PqEncode(es(0), es(1), es(2)))
-    reg(ResidualFn, es => CentroidResidual(es(0), es(1), es(2)))
-    reg(PqErrorFn, es => PqError(es(0), es(1), es(2)))
-    reg(TopCellsFn, es => TopCells(es(0), es(1), es(2)))
-  }
 
   def topCells(vec: Column, cents: Column, nProbe: Column): Column =
     org.apache.spark.sql.functions.call_function(

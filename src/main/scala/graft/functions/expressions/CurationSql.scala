@@ -1,13 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.PlanExec
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** SQL registration for the curation/media operators (round-9 VERDICT
+/** SQL builders for the curation/media operators (round-9 VERDICT
   * item 5): the Tier-B arbitrary-SQL pass-through (the reference's
   * `duckdb_rest_server.py:73-78` surface) reaches the quality gate,
   * fingerprinting, chunking, and perceptual hashing the same way
@@ -38,63 +37,51 @@ object CurationSql {
   val Fk100Fn = "graft_fk100"
   val CleanLinesFn = "graft_clean_lines"
 
-  /** Idempotent registry hookup for the functions above (the four
-    * curation/media kernels, the four text-analysis scalars, and the
-    * readability / line-cleaning scalars), plus the two SQ8
-    * vector-codec functions ([[Sq8]]'s names — registered here too so
-    * the SQL bridge gets them without a separate call).
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String, b: Seq[Expression] => Expression): Unit = {
-      val ident = FunctionIdentifier(name)
-      if (!registry.functionExists(ident)) {
-        registry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-    }
-    def c(e: Expression): Column = PlanExec.columnOf(e)
-    def litInt(e: Expression, what: String): Int = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval().asInstanceOf[Number].intValue()
-    }
-    reg(GopherPassFn, es => PlanExec.expressionOf(
-      graft.operators.QualityRules.keepColumn(c(es(0)))))
-    reg(WinnowDigestFn, es => PlanExec.expressionOf(
-      graft.operators.Winnowing.digestColumn(c(es(0)))))
-    reg(CdcCutsFn, es => PlanExec.expressionOf(
-      graft.operators.Cdc.cutsColumn(c(es(0)),
-        divisor =
-          if (es.length > 1) litInt(es(1), "graft_cdc_cuts divisor")
-          else 64)))
-    reg(AHashFn, es => AHash64(es(0)))
-    // the text-analysis scalars (t03/t04/t05/t06's kernels): same
-    // one-builder-two-surfaces pattern
-    reg(LangIdFn, es => PlanExec.expressionOf(
-      graft.functions.TextFns.langIdColumn(c(es(0)))))
-    reg(QualityScoreFn, es => PlanExec.expressionOf(
-      graft.functions.TextFns.qualityScore(c(es(0)))))
-    reg(TokenCountFn, es => PlanExec.expressionOf(
-      org.apache.spark.sql.functions.size(
-        graft.functions.TextFns.tokens(c(es(0)))).cast("long")))
-    reg(FingerprintFn, es => PlanExec.expressionOf(
-      graft.functions.TextFns.fingerprint(c(es(0)))))
-    // readability (t52) and line cleaning (t53): the same
-    // one-builder-two-surfaces pattern
-    reg(Fre100Fn, es => PlanExec.expressionOf(
-      graft.operators.QualityRules.fre100Column(c(es(0)))))
-    reg(Fk100Fn, es => PlanExec.expressionOf(
-      graft.operators.QualityRules.fk100Column(c(es(0)))))
-    reg(CleanLinesFn, es => PlanExec.expressionOf(
-      graft.operators.QualityRules.cleanedColumn(c(es(0)),
-        minChars =
-          if (es.length > 1) litInt(es(1), "graft_clean_lines minChars")
-          else 30)))
-    // the SQ8 codec (e15's kernels): raw-Expression builders, same
-    // names Sq8.register installs — whichever runs first wins, both
-    // build identical trees
-    reg(Sq8.EncodeFnName, es => Sq8Encode(es(0)))
-    reg(Sq8.DotFnName, es => Sq8Dot(es(0), es(1)))
+  // SQL builders, injected by `graft.plans.GraftExtensions` (which
+  // checks the argument count first)
+  private def c(e: Expression): Column = PlanExec.columnOf(e)
+  private def expr(col: Column): Expression = PlanExec.expressionOf(col)
+  private def litInt(e: Expression, what: String): Int = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval().asInstanceOf[Number].intValue()
   }
+
+  def gopherPass(es: Seq[Expression]): Expression =
+    expr(graft.operators.QualityRules.keepColumn(c(es(0))))
+
+  def winnowDigest(es: Seq[Expression]): Expression =
+    expr(graft.operators.Winnowing.digestColumn(c(es(0))))
+
+  def cdcCuts(es: Seq[Expression]): Expression =
+    expr(graft.operators.Cdc.cutsColumn(c(es(0)),
+      divisor = if (es.length > 1) litInt(es(1), "graft_cdc_cuts divisor") else 64))
+
+  // the text-analysis scalars (t03/t04/t05/t06's kernels): same
+  // one-builder-two-surfaces pattern
+  def langId(es: Seq[Expression]): Expression =
+    expr(graft.functions.TextFns.langIdColumn(c(es(0))))
+
+  def qualityScore(es: Seq[Expression]): Expression =
+    expr(graft.functions.TextFns.qualityScore(c(es(0))))
+
+  def tokenCount(es: Seq[Expression]): Expression =
+    expr(org.apache.spark.sql.functions.size(
+      graft.functions.TextFns.tokens(c(es(0)))).cast("long"))
+
+  def fingerprint(es: Seq[Expression]): Expression =
+    expr(graft.functions.TextFns.fingerprint(c(es(0))))
+
+  // readability (t52) and line cleaning (t53): the same
+  // one-builder-two-surfaces pattern
+  def fre100(es: Seq[Expression]): Expression =
+    expr(graft.operators.QualityRules.fre100Column(c(es(0))))
+
+  def fk100(es: Seq[Expression]): Expression =
+    expr(graft.operators.QualityRules.fk100Column(c(es(0))))
+
+  def cleanLines(es: Seq[Expression]): Expression =
+    expr(graft.operators.QualityRules.cleanedColumn(c(es(0)),
+      minChars = if (es.length > 1) litInt(es(1), "graft_clean_lines minChars") else 30))
 }
 
 /** 64-bit perceptual average-hash of an encoded image (`binary` →

@@ -69,26 +69,11 @@ case class DotProduct(left: Expression, right: Expression)
 
 object DotProduct {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   val FnName = "graft_dot"
 
-  /** Register in the session's function registry (idempotent — skips
-    * when already present so repeated operator calls don't spam
-    * "function replaced" warnings), so the expression is reachable
-    * through the public Column API (`call_function`) and SQL alike.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident =
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        FnName, exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function(FnName, a, b)
 }

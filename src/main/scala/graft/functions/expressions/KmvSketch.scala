@@ -167,30 +167,22 @@ object KmvSketch {
   */
 object Kmv {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.catalyst.expressions.Literal
   import org.apache.spark.sql.functions._
 
   val FnName = "graft_kmv"
 
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(FnName))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        val k = if (exprs.length > 1) exprs(1) match {
-          case Literal(i: Int, _) => i
-          case other => sys.error(s"$FnName: k must be an int literal, got $other")
-        } else 256
-        KmvSketch(exprs(0), k).toAggregateExpression()
-      },
-      "built-in")
+  /** SQL builder for `graft_kmv(col[, k])`; `k` must be an int literal. */
+  def build(exprs: Seq[Expression]): Expression = {
+    val k = if (exprs.length > 1) exprs(1) match {
+      case Literal(i: Int, _) => i
+      case other => sys.error(s"$FnName: k must be an int literal, got $other")
+    } else 256
+    KmvSketch(exprs(0), k).toAggregateExpression()
   }
 
-  /** Aggregate: KMV sketch of a 64-bit-hashable column. Requires
-    * `register(spark)` once per session.
-    */
+  /** Aggregate: KMV sketch of a 64-bit-hashable column. */
   def sketch(x: Column, k: Int = 256): Column =
     call_function(FnName, x, lit(k))
 

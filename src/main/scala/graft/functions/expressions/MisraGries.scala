@@ -165,28 +165,21 @@ object MisraGries {
     }
   }
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.catalyst.expressions.Literal
 
   val FnName = "graft_heavy_hitters"
 
-  /** Register as `graft_heavy_hitters(col[, capacity])` (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(FnName))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        val cap = if (exprs.length > 1) exprs(1) match {
-          case Literal(c: Int, _) => c
-          case other => sys.error(s"$FnName: capacity must be an int literal, got $other")
-        } else 256
-        MisraGries(exprs.head, cap).toAggregateExpression()
-      },
-      "built-in")
+  /** SQL builder for `graft_heavy_hitters(col[, capacity])`. */
+  def build(exprs: Seq[Expression]): Expression = {
+    val cap = if (exprs.length > 1) exprs(1) match {
+      case Literal(c: Int, _) => c
+      case other => sys.error(s"$FnName: capacity must be an int literal, got $other")
+    } else 256
+    MisraGries(exprs.head, cap).toAggregateExpression()
   }
 
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def candidates(x: Column, capacity: Int = 256): Column =
     org.apache.spark.sql.functions.call_function(FnName, x,
       org.apache.spark.sql.functions.lit(capacity))

@@ -208,43 +208,35 @@ object QuantileDigest {
     }
   }
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
   import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
   import org.apache.spark.sql.catalyst.util.ArrayData
 
   val FnName = "graft_tdigest"
 
-  /** Register as `graft_tdigest(col, array(p...)[, compression])`
-    * (idempotent), reachable through `call_function` and SQL alike —
-    * same surface pattern as [[DotProduct.register]].
+  /** SQL builder for `graft_tdigest(col, array(p...)[, compression])`:
+    * the percentages and compression must be literals.
     */
-  def register(spark: SparkSession): Unit = {
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(FnName))) return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => {
-        val ps = exprs(1) match {
-          case Literal(arr: ArrayData, ArrayType(DoubleType, _)) =>
-            arr.toDoubleArray().toSeq
-          case ca: CreateArray => ca.children.map { // SQL `array(0.5, ...)`
-            case Literal(d, _: org.apache.spark.sql.types.NumericType) =>
-              d.asInstanceOf[Number].doubleValue()
-            case other => sys.error(s"$FnName: non-literal percentage $other")
-          }
-          case other => sys.error(
-            s"$FnName: percentages must be a literal array<double>, got $other")
-        }
-        val comp = if (exprs.length > 2) exprs(2) match {
-          case Literal(c: Int, _) => c
-          case other => sys.error(s"$FnName: compression must be an int literal, got $other")
-        } else 256
-        QuantileDigest(exprs(0), ps, comp).toAggregateExpression()
-      },
-      "built-in")
+  def build(exprs: Seq[Expression]): Expression = {
+    val ps = exprs(1) match {
+      case Literal(arr: ArrayData, ArrayType(DoubleType, _)) =>
+        arr.toDoubleArray().toSeq
+      case ca: CreateArray => ca.children.map { // SQL `array(0.5, ...)`
+        case Literal(d, _: org.apache.spark.sql.types.NumericType) =>
+          d.asInstanceOf[Number].doubleValue()
+        case other => sys.error(s"$FnName: non-literal percentage $other")
+      }
+      case other => sys.error(
+        s"$FnName: percentages must be a literal array<double>, got $other")
+    }
+    val comp = if (exprs.length > 2) exprs(2) match {
+      case Literal(c: Int, _) => c
+      case other => sys.error(s"$FnName: compression must be an int literal, got $other")
+    } else 256
+    QuantileDigest(exprs(0), ps, comp).toAggregateExpression()
   }
 
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def quantiles(x: Column, ps: Seq[Double], compression: Int = 256): Column =
     org.apache.spark.sql.functions.call_function(FnName, x,
       org.apache.spark.sql.functions.typedlit(ps),

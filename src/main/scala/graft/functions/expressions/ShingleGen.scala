@@ -1,6 +1,5 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -24,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * eval-based there; `CodegenFallback` only affects the expression's
   * own code path).
   *
-  * SQL surface after [[ShingleGen.register]]:
+  * SQL surface (injected by `graft.plans.GraftExtensions`):
   * `SELECT ... LATERAL VIEW graft_shingles(toks, 3) g AS pos, shingle`
   * or `SELECT graft_shingles(toks, 3) FROM ...`.
   */
@@ -63,14 +62,4 @@ case class ShingleGen(tokens: Expression, n: Expression)
 object ShingleGen {
 
   val FnName = "graft_shingles"
-
-  /** Idempotent session registration, same pattern as [[DotProduct]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        FnName, exprs => ShingleGen(exprs(0), exprs(1)), "built-in")
-    }
-  }
 }

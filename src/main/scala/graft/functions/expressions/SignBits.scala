@@ -85,21 +85,11 @@ case class SignBits(left: Expression, right: Expression)
 
 object SignBits {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   val FnName = "graft_sign_bits"
 
-  /** Idempotent registry hookup, same pattern as [[SignBuckets]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(FnName,
-        exprs => SignBits(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def of(vec: Column, planes: Column): Column =
     org.apache.spark.sql.functions.call_function(FnName, vec, planes)
 }

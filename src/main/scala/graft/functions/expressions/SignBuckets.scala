@@ -112,30 +112,16 @@ case class SignBuckets(left: Expression, right: Expression)
 
 object SignBuckets {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   val FnName = "graft_sign_buckets"
   val CpFnName = "graft_cp_buckets"
 
-  /** Idempotent registry hookup, same pattern as [[DotProduct]]. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    def reg(name: String,
-        b: Seq[Expression] => Expression): Unit = {
-      val ident = org.apache.spark.sql.catalyst.FunctionIdentifier(name)
-      if (!registry.functionExists(ident)) {
-        registry.createOrReplaceTempFunction(name, b, "built-in")
-      }
-    }
-    reg(FnName, exprs => SignBuckets(exprs(0), exprs(1)))
-    reg(CpFnName, exprs => CpBuckets(exprs(0), exprs(1)))
-  }
-
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def of(vec: Column, planes: Column): Column =
     org.apache.spark.sql.functions.call_function(FnName, vec, planes)
 
-  /** Cross-polytope buckets; requires `register(spark)` once. */
+  /** Cross-polytope buckets. */
   def cp(vec: Column, rotations: Column): Column =
     org.apache.spark.sql.functions.call_function(CpFnName, vec, rotations)
 }

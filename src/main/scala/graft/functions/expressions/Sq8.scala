@@ -116,28 +116,12 @@ case class Sq8Dot(left: Expression, right: Expression)
 
 object Sq8 {
 
-  import org.apache.spark.sql.{Column, SparkSession}
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.Column
 
   val EncodeFnName = "graft_sq8_encode"
   val DotFnName = "graft_sq8_dot"
 
-  /** Idempotent registry hookup for both functions (the DotProduct
-    * pattern) so they are reachable from the Column API and raw SQL.
-    */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(EncodeFnName))) {
-      registry.createOrReplaceTempFunction(
-        EncodeFnName, exprs => Sq8Encode(exprs(0)), "built-in")
-    }
-    if (!registry.functionExists(FunctionIdentifier(DotFnName))) {
-      registry.createOrReplaceTempFunction(
-        DotFnName, exprs => Sq8Dot(exprs(0), exprs(1)), "built-in")
-    }
-  }
-
-  /** Column-level handles; require `register(spark)` once per session. */
+  /** Column-level handles. */
   def encode(v: Column): Column =
     org.apache.spark.sql.functions.call_function(EncodeFnName, v)
 

@@ -90,7 +90,7 @@ case class UnigramViterbi(first: Expression, second: Expression,
 
 object UnigramViterbi {
 
-  import org.apache.spark.sql.{Column, SparkSession}
+  import org.apache.spark.sql.Column
 
   val FnName = "graft_unigram_viterbi"
 
@@ -100,18 +100,7 @@ object UnigramViterbi {
   val Shift: Long = 1L << 21
   val Inf: Long = Long.MaxValue / 4
 
-  /** Idempotent registry hookup (same pattern as [[BpeMerges]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident =
-      org.apache.spark.sql.catalyst.FunctionIdentifier(FnName)
-    if (!registry.functionExists(ident)) {
-      registry.createOrReplaceTempFunction(
-        FnName, exprs => UnigramViterbi(exprs(0), exprs(1), exprs(2)), "built-in")
-    }
-  }
-
-  /** Column-level handle; requires `register(spark)` once per session. */
+  /** Column-level handle. */
   def encode(text: Column, pieces: Column, costs: Column): Column =
     org.apache.spark.sql.functions.call_function(FnName, text, pieces, costs)
 }

@@ -69,8 +69,7 @@ object Bpe {
     * earlier `aggregate`-fold form was replaced). Non-overlap is
     * structural: a fused tail is the string a+b, which can never equal
     * `a` (b is nonempty), so "aaa" under (a,a) correctly gives
-    * ["aa","a"] — the standard BPE single-pass semantics. Requires
-    * `BpeMerges.register` (the operator entry points do it).
+    * ["aa","a"] — the standard BPE single-pass semantics.
     */
   private[graft] def mergePair(syms: Column, a: String, b: String): Column =
     BpeMerges.merge(syms, typedlit(Seq(a)), typedlit(Seq(b)))
@@ -95,7 +94,6 @@ object Bpe {
   def train(docs: DataFrame, nMerges: Int,
       textCol: String = "text",
       maxBatch: Int = 64): (Seq[(String, String)], DataFrame) = {
-    BpeMerges.register(docs.sparkSession)
     var v = vocab(docs, textCol).localCheckpoint(true)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var exhausted = false
@@ -190,7 +188,6 @@ object Bpe {
     */
   def applyMerges(vocabDf: DataFrame,
       merges: Seq[(String, String)]): DataFrame = {
-    BpeMerges.register(vocabDf.sparkSession)
     vocabDf.withColumn("syms", BpeMerges.merge(col("syms"),
       typedlit(merges.map(_._1)), typedlit(merges.map(_._2))))
   }

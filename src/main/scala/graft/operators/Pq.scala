@@ -108,7 +108,6 @@ object Pq {
     */
   private def trainCodebooksUnit(unit: DataFrame, m: Int, ksub: Int,
       dim: Int, iters: Int): Codebooks = {
-    CentroidOps.register(unit.sparkSession)
     val sd = subdim(dim, m)
     var books = seedCodebooks(unit, m, ksub, dim)
     for (_ <- 1 to iters) {
@@ -144,7 +143,6 @@ object Pq {
 
   private def encodeUnit(unit: DataFrame, codebooks: Codebooks,
       dim: Int): DataFrame = {
-    CentroidOps.register(unit.sparkSession)
     // a pure projection: one codegen'd PqEncode per vector, codes in
     // subspace order by construction — no explode, no join, no shuffle
     unit.select(col("id"), CentroidOps.pqEncode(col("uv"),
@@ -228,7 +226,6 @@ object Pq {
     // `coarseCentroids`/`codebooks` in.
     val coarse = coarseCentroids.getOrElse(
       Similarity.kmeansCentroidsUnit(unit, nCells, iters))
-    CentroidOps.register(vecs.sparkSession)
     val assigned = assignedRows(unit, coarse)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val books = codebooks.getOrElse(trainCodebooksUnit(
@@ -253,7 +250,6 @@ object Pq {
     */
   def indexRows(vecs: DataFrame, coarse: Array[Array[Double]],
       books: Codebooks, idCol: String = "vec_id"): DataFrame = {
-    CentroidOps.register(vecs.sparkSession)
     assignedRows(Similarity.unitVectors(vecs, idCol, "id", "uv"), coarse)
       .select(col("id"), col("cell"),
         CentroidOps.pqEncode(col("resid"),
@@ -272,7 +268,6 @@ object Pq {
   def trainResidualCodebooks(vecs: DataFrame,
       coarse: Array[Array[Double]], m: Int, ksub: Int, dim: Int,
       iters: Int = 3, idCol: String = "vec_id"): Codebooks = {
-    CentroidOps.register(vecs.sparkSession)
     val assigned =
       assignedRows(Similarity.unitVectors(vecs, idCol, "id", "uv"), coarse)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -293,7 +288,6 @@ object Pq {
     */
   def quantizationError(vecs: DataFrame, coarse: Array[Array[Double]],
       books: Codebooks, idCol: String = "vec_id"): DataFrame = {
-    CentroidOps.register(vecs.sparkSession)
     assignedRows(Similarity.unitVectors(vecs, idCol, "id", "uv"), coarse)
       .select(col("cell"),
         CentroidOps.pqError(col("resid"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,14 +38,13 @@ import graft.plans.GroupedTopK
   */
 object Similarity {
 
-  /** id + L2-normalized double vector, with the custom dot registered.
+  /** id + L2-normalized double vector (norm by the custom dot).
     * An all-zero vector keeps its zeros (divisor clamped to 1) instead
     * of going NaN — NaN scores would poison every downstream argmax /
     * top-k it participates in.
     */
   private[graft] def unitVectors(vecs: DataFrame, idCol: String, idAs: String,
       vecAs: String): DataFrame = {
-    CentroidOps.register(vecs.sparkSession)
     normalized(vecs.select(col(idCol).as(idAs),
       asDouble(col("embedding")).as("_v")), col("_v"), vecAs)
       .select(idAs, vecAs)
@@ -56,7 +55,6 @@ object Similarity {
     * an all-zero vector keeps its zeros (see [[unitVectors]]).
     */
   private def normalized(df: DataFrame, v: Column, as: String): DataFrame = {
-    DotProduct.register(df.sparkSession)
     df.withColumn("_nrm", sqrt(DotProduct.dot(v, v)))
       .withColumn("_nrm", when(col("_nrm") === 0d, lit(1.0)).otherwise(col("_nrm")))
       .withColumn(as, transform(v, x => x / col("_nrm")))
@@ -77,7 +75,6 @@ object Similarity {
     */
   def randomProject(vecs: DataFrame, dimIn: Int, dimOut: Int,
       idCol: String = "vec_id", seed: Long = 7L): DataFrame = {
-    DotProduct.register(vecs.sparkSession)
     val rnd = new scala.util.Random(seed)
     val mat = Array.fill(dimOut, dimIn)(rnd.nextGaussian() / math.sqrt(dimOut))
     val v = asDouble(col("embedding"))
@@ -473,7 +470,6 @@ object Similarity {
     */
   private def signBuckets(vecs: DataFrame, nPlanes: Int, dim: Int,
       idCol: String, nTables: Int, seedBase: Long): DataFrame = {
-    SignBuckets.register(vecs.sparkSession)
     vecs.select(col(idCol).as("id"), asDouble(col("embedding")).as("v"))
       .withColumn("buckets",
         SignBuckets.of(col("v"), planesLit(nPlanes, dim, nTables, seedBase)))
@@ -545,8 +541,6 @@ object Similarity {
     // dot literals (the SignBuckets janino argument) plus interpreted
     // HOF eval per table; same outputs, tie/NaN parity documented on
     // the expression
-    SignBuckets.register(vecs.sparkSession)
-    DotProduct.register(vecs.sparkSession)
     val v = asDouble(col("embedding"))
     val rotations = typedlit[Seq[Seq[Seq[Double]]]]((0 until nTables).map { t =>
       val rnd = new scala.util.Random(seedBase + t)
@@ -818,7 +812,6 @@ object Similarity {
     */
   def knnSq8(vecs: DataFrame, k: Int, queryFilter: Column,
       rerank: Int = 50, idCol: String = "vec_id"): DataFrame = {
-    Sq8.register(vecs.sparkSession)
     // lazy persist (consumed by the code scan AND the rerank joins),
     // released by CacheHygiene — the annFromBuckets contract
     val unit = unitVectors(vecs, idCol, "id", "uv")
@@ -861,7 +854,7 @@ object Similarity {
   def knnHamming(vecs: DataFrame, k: Int, queryFilter: Column,
       nBits: Int = 256, dim: Int = 64, rerank: Int = 100,
       idCol: String = "vec_id", seed: Long = 42L): DataFrame = {
-    val codec = new SignCodec(vecs.sparkSession, nBits, dim, seed)
+    val codec = new SignCodec(nBits, dim, seed)
     // lazy persist (consumed by the signature scan AND the rerank
     // joins), released by CacheHygiene — the annFromBuckets contract
     val unit = unitVectors(vecs, idCol, "id", "uv")
@@ -874,18 +867,15 @@ object Similarity {
   }
 
   /** The `nBits`-bit sign-signature codec shared by the Hamming
-    * operators: the bit-width guard, one registration, and the
-    * hyperplanes. nBits > dim is the standard binary-quantization
-    * regime (bits are cheap; 128 bits of a 64-dim vector still scan at
-    * 1/4 the float32 bandwidth) — each 64-plane word packs into its
-    * own long column, and the scan distance is the sum of per-word
-    * popcounts, all built-in codegen.
+    * operators: the bit-width guard and the hyperplanes. nBits > dim is
+    * the standard binary-quantization regime (bits are cheap; 128 bits
+    * of a 64-dim vector still scan at 1/4 the float32 bandwidth) — each
+    * 64-plane word packs into its own long column, and the scan
+    * distance is the sum of per-word popcounts, all built-in codegen.
     */
-  private final class SignCodec(spark: SparkSession, nBits: Int, dim: Int,
-      seed: Long) {
+  private final class SignCodec(nBits: Int, dim: Int, seed: Long) {
     require(nBits >= 1 && (nBits % 64 == 0 || nBits < 64),
       s"nBits must be >= 1 and either < 64 or a multiple of 64, got $nBits")
-    SignBits.register(spark)
     private val planes = hyperplanes(nBits, dim, seed).map(_.toSeq).toSeq
     private val words = math.max(1, (nBits + 63) / 64)
 
@@ -926,7 +916,7 @@ object Similarity {
       queryFilter: Column, nBits: Int = 256, dim: Int = 64,
       rerank: Int = 100, idCol: String = "vec_id", seed: Long = 42L,
       centroids: Option[Array[Array[Double]]] = None): DataFrame = {
-    val codec = new SignCodec(vecs.sparkSession, nBits, dim, seed)
+    val codec = new SignCodec(nBits, dim, seed)
     val cents = centroids.getOrElse(seedCentroids(vecs, nCells, idCol))
     // lazy persist (signature/cell scan + the rerank joins), released
     // by CacheHygiene — the annFromBuckets contract
@@ -964,7 +954,7 @@ object Similarity {
   def hammingIndexRows(vecs: DataFrame, centroids: Array[Array[Double]],
       nBits: Int = 256, dim: Int = 64, seed: Long = 42L,
       idCol: String = "vec_id"): DataFrame = {
-    val codec = new SignCodec(vecs.sparkSession, nBits, dim, seed)
+    val codec = new SignCodec(nBits, dim, seed)
     unitVectors(vecs, idCol, "id", "uv")
       .select(col("id").as(idCol) +: homeCell(centroids).as("cell") +:
         codec.sigs("sig") :+ col("uv"): _*)
@@ -987,7 +977,7 @@ object Similarity {
       nProbe: Int, centroids: Array[Array[Double]], nBits: Int = 256,
       dim: Int = 64, rerank: Int = 100, seed: Long = 42L,
       queryFilter: Column = lit(true), idCol: String = "vec_id"): DataFrame = {
-    val codec = new SignCodec(queries.sparkSession, nBits, dim, seed)
+    val codec = new SignCodec(nBits, dim, seed)
     // the unit vectors ride the join (the index stores them), so the
     // rerank needs no lookup
     val cands = withoutSelf(probe(unitVectors(queries, idCol, "id", "uv")
@@ -1167,7 +1157,6 @@ object Similarity {
   def maxSimPruned(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       nSub: Int = 4, nCells: Int = 16, nProbe: Int = 4,
       idCol: String = "vec_id"): DataFrame = {
-    CentroidOps.register(queries.sparkSession)
     val sub = dim / nSub
     val q = broadcast(subVectors(queries, idCol, "query_id", dim, nSub, "_qs"))
     val d = subVectors(corpus, idCol, "doc_id", dim, nSub, "_s")

@@ -36,7 +36,6 @@ object TextClassifier {
     */
   def featurize(docs: DataFrame, nBuckets: Int,
       textCol: String = "text"): DataFrame = {
-    BucketedSum.register(docs.sparkSession)
     docs.withColumn("_bks",
       transform(TextFns.tokens(col(textCol)),
         t => pmod(xxhash64(t), lit(nBuckets)).cast("int")))

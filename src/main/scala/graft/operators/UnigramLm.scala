@@ -86,7 +86,6 @@ object UnigramLm {
     */
   def encode(docsDf: DataFrame, maxPiece: Int = 4,
              minCount: Int = 5): DataFrame = {
-    UnigramViterbi.register(docsDf.sparkSession)
     val vocab = pieceVocab(docsDf, maxPiece, minCount).collect()
     val pieces = typedlit(vocab.map(_.getString(0)).toSeq)
     val costs = typedlit(vocab.map(_.getLong(1)).toSeq)

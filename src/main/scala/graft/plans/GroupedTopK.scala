@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -49,6 +49,9 @@ import org.apache.spark.sql.graft.PlanExec
   * sort wins; the partial stage detects that at runtime and degrades
   * to pass-through (see [[GroupedTopKExec]]), but prefer the window
   * formulation outright there.
+  *
+  * The session plans the node through [[GroupedTopKStrategy]], which
+  * [[GraftExtensions]] injects.
   */
 object GroupedTopK {
 
@@ -61,7 +64,6 @@ object GroupedTopK {
     require(k > 0, s"k must be positive, got $k")
     require(order.nonEmpty, "at least one order column is required")
     val spark = df.sparkSession
-    register(spark)
     val plan = df.queryExecution.analyzed
     def resolve(n: String): Attribute = plan.output
       .find(a => spark.sessionState.conf.resolver(a.name, n))
@@ -73,13 +75,6 @@ object GroupedTopK {
     PlanExec.ofRows(spark,
       GroupedTopKPlan(group.map(resolve), sortOrder, k, plan))
   }
-
-  /** Idempotently install [[GroupedTopKStrategy]] into the session's
-    * planner (runtime path; [[GraftExtensions]] wires the same strategy
-    * at session build for `spark.sql.extensions` users).
-    */
-  def register(spark: SparkSession): Unit =
-    PlanExec.addStrategy(spark, GroupedTopKStrategy)
 }
 
 /** Logical per-group top-k. Pure metadata — all semantics live in the

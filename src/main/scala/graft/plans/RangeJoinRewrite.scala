@@ -2,28 +2,11 @@ package graft.plans
 
 import scala.util.Try
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
-
-/** `SparkSessionExtensions` entry point — register with
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)` on the builder) to get
-  * [[RangeJoinRewrite]] and [[CompactHllRewrite]] in every session's
-  * optimizer and [[GroupedTopKStrategy]] in its planner. Sessions from
-  * `graft.core.GraftSession.builder` already carry
-  * [[CompactHllRewrite]].
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => RangeJoinRewrite)
-    e.injectOptimizerRule(_ => CompactHllRewrite)
-    e.injectPlannerStrategy(_ => GroupedTopKStrategy)
-  }
-}
 
 /** Optimizer rule: rewrite point-in-interval non-equi joins
   * (`p BETWEEN s AND e`) into the bucketed equi-join of
@@ -46,7 +29,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   * Every matching pair meets in exactly one bucket (the point's), so
   * results are identical to the nested loop, no dedup needed.
   *
-  * Opt-in: fires only when `spark.graft.rangeJoin.bucketWidth` is set —
+  * [[GraftExtensions]] injects it into every session's operator
+  * optimization batch, but it is opt-in: it fires only when
+  * `spark.graft.rangeJoin.bucketWidth` is set —
   * either to a positive long (the domain bucket size, same unit as the
   * point column: a data-layout decision, the same reason other engines
   * expose range-join bin-size hints) or to `auto`, which derives the

@@ -593,7 +593,6 @@ object Relational {
   // ≤ 2e-4 at sf0.01-0.1; the 0.005 bound is ~25× that while still
   // catching any real digest regression.
   private def q24(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.expressions.QuantileDigest.register(s)
     val bound = 0.005
     t(s, dir, "lineitem")
       .groupBy("l_returnflag")
@@ -1083,7 +1082,6 @@ object Relational {
   // The estimator contracts themselves are pinned in OperatorSpec.
   private def q36(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.expressions.Kmv
-    Kmv.register(s)
     val nextOf = date_format(
       add_months(to_date(concat(col("month"), lit("-01"))), 1), "yyyy-MM")
     val o = t(s, dir, "orders")
@@ -1552,11 +1550,10 @@ object Relational {
   // ---------------------------------------------------------------- q45
   // RangeJoinRewrite exercised through the SQL surface: a RAW
   // `BETWEEN` join (no operator call, no manual bucketing) submitted
-  // as text to the Engine's SQL bridge, with the optimizer rule
-  // registered on the session (PlanExec.addOptimizerRule — the
-  // runtime form of `spark.sql.extensions=graft.plans.
-  // GraftExtensions`) and `bucketWidth=auto` so the width derives
-  // from span stats at plan time. The query body plan-asserts the
+  // as text to the Engine's SQL bridge. The rule is already in every
+  // session's optimizer (graft.plans.GraftExtensions); setting
+  // `bucketWidth=auto` switches it on, with the width derived from
+  // span stats at plan time. The query body plan-asserts the
   // rewrite actually fired: no BroadcastNestedLoop/Cartesian — the
   // plans Spark gives this join without the rule — and the bucket
   // key present. The conf is graft-namespaced and set once to a
@@ -1569,8 +1566,6 @@ object Relational {
 
   private def q45(s: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(s, dir, Seq("orders", "lineitem"))
-    org.apache.spark.sql.graft.PlanExec
-      .addOptimizerRule(s, graft.plans.RangeJoinRewrite)
     s.conf.set(graft.plans.RangeJoinRewrite.WidthConf, "auto")
     val eng = new graft.query.Engine(s,
       new graft.catalog.SnapshotCatalog(s, q45Wh))
@@ -1783,7 +1778,6 @@ object Relational {
 
   private def q50(s: SparkSession, dir: String): DataFrame = {
     Tables.registerAll(s, dir, Seq("documents"))
-    graft.core.GraftSession.registerFunctions(s)
     val eng = new graft.query.Engine(s,
       new graft.catalog.SnapshotCatalog(s, q50Wh))
     eng.sqlDataFrame(

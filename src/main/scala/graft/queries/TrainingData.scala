@@ -1576,7 +1576,6 @@ object TrainingData {
   // total rides a broadcast scalar, not a driver collect.
   private def t22(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.expressions.MisraGries
-    MisraGries.register(s)
     val tok = docs(s, dir)
       .select(explode(TextFns.tokens(col("text"))).as("tok"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -3,6 +3,8 @@ package graft.query
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** The reference's two Flask REST servers as real HTTP endpoints over
@@ -128,7 +130,7 @@ class HttpApi(engine: Engine, kind: HttpApi.Kind, port: Int = 0,
     server.createContext(path, (ex: HttpExchange) => {
       val (code, body) =
         try handler(ex)
-        catch { case e: Throwable => (500, Engine.errorJson(e)) }
+        catch { case NonFatal(e) => (500, Engine.errorJson(e)) }
       val bytes = body.getBytes(StandardCharsets.UTF_8)
       ex.getResponseHeaders.set("Content-Type", "application/json")
       ex.sendResponseHeaders(code, bytes.length.toLong)

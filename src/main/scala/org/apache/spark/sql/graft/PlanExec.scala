@@ -9,7 +9,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * bridge — which substitutes catalog relations in the PLAN, never in
   * the query text — needs `classic.Dataset.ofRows`. This object lives
   * under `org.apache.spark.sql` purely to satisfy that access scope;
-  * the standard pattern used by Spark extension libraries.
+  * the standard pattern used by Spark extension libraries. Functions,
+  * optimizer rules and planner strategies need no shim: they reach the
+  * session through the public `SparkSessionExtensions` hooks
+  * (`graft.plans.GraftExtensions`).
   *
   * Analysis is eager (`ofRows` runs the analyzer), so callers may drop
   * any temp views the plan references as soon as this returns.
@@ -18,46 +21,8 @@ object PlanExec {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Idempotently append a planner strategy to the session's
-    * `experimental.extraStrategies` — the runtime-registration path for
-    * custom physical operators (`SparkSession.experimental` is only
-    * exposed on the classic session, hence the shim).
-    */
-  def addStrategy(spark: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraStrategies.contains(strategy))
-      cs.experimental.extraStrategies = cs.experimental.extraStrategies :+ strategy
-  }
-
-  /** Idempotently append an optimizer rule to the session's
-    * `experimental.extraOptimizations` — the runtime-registration path
-    * for sessions built without `spark.sql.extensions` (the driver's
-    * Verify/Bench sessions). Same shim rationale as [[addStrategy]].
-    */
-  def addOptimizerRule(spark: SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]): Unit = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (!cs.experimental.extraOptimizations.contains(rule))
-      cs.experimental.extraOptimizations =
-        cs.experimental.extraOptimizations :+ rule
-  }
-
-  /** Test-side probe for `SparkSessionExtensions.buildOptimizerRules`
-    * (`private[sql]`): lets specs assert an extensions class wires its
-    * rules without racing other suites for the JVM's default session.
-    */
-  def optimizerRulesOf(exts: org.apache.spark.sql.SparkSessionExtensions,
-      spark: SparkSession): Seq[org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan]] =
-    exts.buildOptimizerRules(spark.asInstanceOf[classic.SparkSession])
-
-  /** Same probe for `buildPlannerStrategies`. */
-  def strategiesOf(exts: org.apache.spark.sql.SparkSessionExtensions,
-      spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
-    exts.buildPlannerStrategies(spark.asInstanceOf[classic.SparkSession])
-
   /** Column ↔ Catalyst Expression bridges (`private[sql]` in Spark 4's
-    * classic module) — what lets graft register COMPOSED functions in
+    * classic module) — what lets graft inject COMPOSED functions into
     * the FunctionRegistry: a registry builder receives Expressions,
     * and the curation functions (`graft_gopher_pass` & co.) are built
     * from the public Column API rather than hand-written expression

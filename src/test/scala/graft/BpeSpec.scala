@@ -53,7 +53,6 @@ class BpeSpec extends SparkTestBase {
     "newest newest newest", "widest widest", "low lower newest")
 
   test("mergePair fold: overlap and repetition semantics") {
-    graft.functions.expressions.BpeMerges.register(spark)
     val df = Seq(Seq("a", "a", "a"), Seq("a", "b", "a", "b"), Seq("x"))
       .toDF("syms")
     val got = df.select(Bpe.mergePair(col("syms"), "a", "a").as("m"))
@@ -70,7 +69,6 @@ class BpeSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       import graft.functions.expressions.BpeMerges
-      BpeMerges.register(spark)
       val merges = Seq(("l", "o"), ("lo", "w"), ("e", "s"), ("es", "t"))
       val words = Seq("low", "lowest", "slow", "x", "")
       val got = words.map(w => (w, w.map(_.toString)))
@@ -91,7 +89,6 @@ class BpeSpec extends SparkTestBase {
 
   test("BpeMerges equals the driver-side reference on 400 randomized cases") {
     import graft.functions.expressions.BpeMerges
-    BpeMerges.register(spark)
     val rnd = new scala.util.Random(2026)
     val alphabet = Vector("a", "b", "c")
     // reference: encodeWord's loop over arbitrary start symbols

@@ -491,6 +491,52 @@ class EngineSpec extends SparkTestBase {
     assert(bounds("a BETWEEN 10 AND a").isEmpty)
   }
 
+  // ------------------------------------------------- graft SQL functions
+  // Injected once at session build (graft.plans.GraftExtensions), so
+  // they resolve in any session of the JVM with no register call.
+
+  test("every graft SQL function resolves in a new session without a register call") {
+    val fresh = spark.newSession()
+    val names = Seq("graft_dot", "graft_bucket_sum", "graft_sign_bits",
+      "graft_sign_buckets", "graft_cp_buckets", "graft_sq8_encode",
+      "graft_sq8_dot", "graft_shingles", "graft_bpe_merge",
+      "graft_unigram_viterbi", "graft_nearest_cell", "graft_pq_encode",
+      "graft_centroid_residual", "graft_pq_error", "graft_top_cells",
+      "graft_tdigest", "graft_kmv", "graft_heavy_hitters",
+      "graft_gopher_pass", "graft_winnow_digest", "graft_cdc_cuts",
+      "graft_ahash64", "graft_lang_id", "graft_quality_score",
+      "graft_token_count", "graft_fingerprint", "graft_fre100",
+      "graft_fk100", "graft_clean_lines")
+    assert(names.filterNot(n => fresh.catalog.functionExists(n)).isEmpty)
+    assert(graft.plans.GraftExtensions.functionNames.sorted == names.sorted)
+    graft.core.GraftSession.registerFunctions(fresh) // the check passes
+    val row = fresh.sql(
+      """SELECT graft_sign_bits(array(1.0D, -1.0D),
+        |    array(array(1.0D, 0.0D), array(0.0D, 1.0D), array(-1.0D, -1.0D))) AS sig,
+        |  (SELECT size(graft_kmv(id)) FROM range(10)) AS kmv,
+        |  graft_unigram_viterbi('ab', array('a', 'b', 'ab'), array(3L, 3L, 5L))
+        |    AS enc""".stripMargin).head()
+    assert(row.getLong(0) == 5L) // planes 0 and 2 see a non-negative dot
+    assert(row.getInt(1) == 10)
+    assert(row.getLong(2) == 5L * graft.operators.UnigramLm.Shift + 1)
+  }
+
+  test("sqlQuery: a graft function called with the wrong argument count is an error") {
+    def err(sql: String): String = {
+      val out = engine.sqlQuery(sql)
+      assert(out.startsWith("""{"error":"""), out)
+      out
+    }
+    val few = err("SELECT graft_dot(array(1.0D)) AS d")
+    assert(few.contains("graft_dot: argument count must be 2, got 1"), few)
+    val many = err("SELECT graft_dot(array(1.0D), array(1.0D), array(1.0D)) AS d")
+    assert(many.contains("graft_dot: argument count must be 2, got 3"), many)
+    val kmv = err("SELECT graft_kmv(id, 16, 3) AS s FROM range(3)")
+    assert(kmv.contains("graft_kmv: argument count must be 1 or 2, got 3"), kmv)
+    val none = err("SELECT graft_gopher_pass() AS k")
+    assert(none.contains("graft_gopher_pass: argument count must be 1, got 0"), none)
+  }
+
   // --------------------------------------------- curation SQL surface
   // round-9 VERDICT item 5: the Tier-B arbitrary-SQL pass-through must
   // reach the curation/media operators. Each case goes through
@@ -498,7 +544,6 @@ class EngineSpec extends SparkTestBase {
   // SQL function's values to the corresponding frame operator's.
 
   test("sqlQuery: graft_gopher_pass equals the gopher frame operator's keep") {
-    graft.core.GraftSession.registerFunctions(spark)
     val out = engine.sqlQuery(
       s"""SELECT doc_id, graft_gopher_pass(text) AS keep
          |FROM parquet.`$sf0001/documents.parquet`
@@ -517,7 +562,6 @@ class EngineSpec extends SparkTestBase {
 
   test("sqlQuery: readability and line-cleaning scalars match their " +
       "t52/t53 kernels") {
-    graft.core.GraftSession.registerFunctions(spark)
     import org.apache.spark.sql.functions.{col, md5}
     val out = engine.sqlQuery(
       s"""SELECT doc_id, graft_fre100(text) AS fre,
@@ -550,7 +594,6 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("sqlQuery: graft_sq8_encode/dot round-trip a unit vector in raw SQL") {
-    graft.core.GraftSession.registerFunctions(spark)
     // self-dot of the encoded unit vector ≈ 127² · ‖u‖² = 16129, off
     // only by int8 rounding — pin the EXACT value the Column API gives
     val out = engine.sqlQuery(
@@ -565,7 +608,6 @@ class EngineSpec extends SparkTestBase {
          |ORDER BY vec_id""".stripMargin)
     import org.apache.spark.sql.functions._
     import graft.functions.expressions.{DotProduct, Sq8}
-    Sq8.register(spark); DotProduct.register(spark)
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
       .filter(col("vec_id") < 10)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
@@ -587,7 +629,6 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("sqlQuery: graft_winnow_digest equals fingerprints' fp_digest") {
-    graft.core.GraftSession.registerFunctions(spark)
     val out = engine.sqlQuery(
       s"""SELECT doc_id, graft_winnow_digest(text) AS d
          |FROM parquet.`$sf0001/documents.parquet`
@@ -604,7 +645,6 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("sqlQuery: graft_cdc_cuts equals the chunks() boundary list") {
-    graft.core.GraftSession.registerFunctions(spark)
     val out = engine.sqlQuery(
       s"""SELECT doc_id, graft_cdc_cuts(text) AS cuts
          |FROM parquet.`$sf0001/documents.parquet`
@@ -637,7 +677,6 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("sqlQuery: text-analysis scalars match their t03/t04/t05/t06 kernels") {
-    graft.core.GraftSession.registerFunctions(spark)
     import graft.functions.TextFns
     import org.apache.spark.sql.functions.{col, size}
     val out = engine.sqlQuery(
@@ -672,7 +711,6 @@ class EngineSpec extends SparkTestBase {
   }
 
   test("sqlQuery: graft_ahash64 matches Multimodal's aHash and nulls on garbage") {
-    graft.core.GraftSession.registerFunctions(spark)
     // deterministic synthetic image -> PNG bytes
     val img = new java.awt.image.BufferedImage(16, 16,
       java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.plans.{GroupedTopK, GroupedTopKStrategy}
+import graft.plans.GroupedTopK
 
 /** The custom physical operator: per-group top-k planned as
   * partial-heap → exchange → final-heap, equal to the window-function
@@ -124,11 +124,13 @@ class GroupedTopKSpec extends SparkTestBase {
   }
 
   test("GraftExtensions wires the strategy") {
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(exts)
-    // registration goes through the runtime path in the op itself too;
-    // here just assert the extensions object injects it
-    val strategies = org.apache.spark.sql.graft.PlanExec.strategiesOf(exts, spark)
-    assert(strategies.exists(_ eq GroupedTopKStrategy))
+    // nothing registers the strategy at run time: a new session of the
+    // shipped one plans the node through the injected strategy
+    val fresh = spark.newSession()
+    val df = GroupedTopK(fresh.range(100).select((col("id") % 3).as("grp"), col("id")),
+      Seq("grp"), Seq(("id", false)), 2)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("GroupedTopKFinal"), plan)
+    assert(df.collect().map(_.getLong(1)).sorted.toSeq == (94L to 99L))
   }
 }

@@ -22,7 +22,6 @@ class HeavyHittersSpec extends SparkTestBase {
   }
 
   test("every item above n/(capacity+1) survives partial+merge aggregation") {
-    MisraGries.register(spark)
     // capacity 99 → guarantee line at ~1%; planted heavies sit at 2%
     val df = stream.toDF("item").repartition(16) // force many partial buffers
     val cands = df.agg(MisraGries.candidates(col("item"), 99).as("c"))
@@ -35,7 +34,6 @@ class HeavyHittersSpec extends SparkTestBase {
   }
 
   test("sketch candidates + exact recount equals the full groupBy answer") {
-    MisraGries.register(spark)
     val df = stream.toDF("item").repartition(8).persist()
     val n = stream.size.toLong
     val threshold = 0.015 // above the 1/(99+1) guarantee line
@@ -107,7 +105,6 @@ class HeavyHittersSpec extends SparkTestBase {
   }
 
   test("SQL surface: graft_heavy_hitters over a table") {
-    MisraGries.register(spark)
     stream.toDF("item").createOrReplaceTempView("hh_items")
     val cands = spark.sql(
       "SELECT graft_heavy_hitters(item, 99) AS c FROM hh_items")

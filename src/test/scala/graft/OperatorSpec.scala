@@ -67,7 +67,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("KMV sketch: partition-independent, union-closed, set-op error bounds") {
     import graft.functions.expressions.Kmv
-    Kmv.register(spark)
     val k = 256
     // partition independence: same sketch from 1 and 13 partitions
     val a = spark.range(0, 20000).select(col("id"))
@@ -284,7 +283,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("TopCells / CpBuckets loop expressions match the composed forms they replaced") {
     import graft.functions.expressions.{CentroidOps, DotProduct, SignBuckets}
-    CentroidOps.register(spark); SignBuckets.register(spark); DotProduct.register(spark)
     val rnd = new scala.util.Random(31L)
     val vecs = (1L to 300L).map(i => (i, Array.fill(16)(rnd.nextGaussian())))
       .toDF("id", "embedding")
@@ -386,7 +384,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("ShingleGen generator: positional n-grams via select and LATERAL VIEW") {
     import graft.functions.expressions.ShingleGen
-    ShingleGen.register(spark)
     val df = Seq((1L, Seq("a", "b", "c", "d")), (2L, Seq("x")))
       .toDF("id", "toks")
     // generator in the SELECT list → Generate node, like explode
@@ -424,7 +421,6 @@ class OperatorSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       import graft.functions.expressions.DotProduct
-      DotProduct.register(spark)
       val df = Seq((Seq(1.0, 2.0), Seq(3.0, 4.0))).toDF("a", "b")
       val row = df.select(
         DotProduct.dot(col("a"), col("b")).as("ab"),
@@ -445,7 +441,6 @@ class OperatorSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       import graft.functions.expressions.BucketedSum
-      BucketedSum.register(spark)
       val w = Seq(0.5, -1.0, 2.0, 0.25)
       val df = Seq(
         (1L, Seq(0, 2, 2)),          // 0.5 + 2 + 2
@@ -496,7 +491,6 @@ class OperatorSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
       import graft.functions.expressions.CentroidOps
-      CentroidOps.register(spark)
       val cents2 = typedlit(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0)))
       val zeros2 = typedlit(Seq(0.0, 0.0))
       val df = Seq(
@@ -565,7 +559,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("CentroidOps equal driver-side references on 300 randomized cases") {
     import graft.functions.expressions.CentroidOps
-    CentroidOps.register(spark)
     val rnd = new scala.util.Random(7)
     def refNearest(v: Seq[Double], cents: Seq[Seq[Double]],
         biases: Seq[Double]): Int = {
@@ -743,7 +736,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("Sq8: encode rounds/clamps to signed bytes; int dot matches by hand") {
     import graft.functions.expressions.Sq8
-    Sq8.register(spark)
     val df = Seq((Seq(1.0, -1.0, 0.5, 0.0), Seq(1.0, 1.0, -0.5, 0.25)))
       .toDF("a", "b")
     val row = df.select(
@@ -994,7 +986,6 @@ class OperatorSpec extends SparkTestBase {
 
   test("QuantileDigest: partial+merge across partitions, pinned error bound") {
     import graft.functions.expressions.QuantileDigest
-    QuantileDigest.register(spark)
     // 50k uniform values over 16 partitions -> forces serialize +
     // partial/final merge through the exchange
     val df = spark.range(50000).repartition(16)

@@ -31,16 +31,13 @@ class RangeJoinRuleSpec extends SparkTestBase {
   private def planOf(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private def withRule[A](width: Long)(body: => A): A = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRewrite
-    spark.conf.set(RangeJoinRewrite.WidthConf, width.toString)
+  /** The session already carries the rule (GraftExtensions); the
+    * width conf alone switches it on.
+    */
+  private def withRule[A](width: String)(body: => A): A = {
+    spark.conf.set(RangeJoinRewrite.WidthConf, width)
     try body
-    finally {
-      spark.conf.unset(RangeJoinRewrite.WidthConf)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq RangeJoinRewrite)
-    }
+    finally spark.conf.unset(RangeJoinRewrite.WidthConf)
   }
 
   test("disabled by default: BETWEEN join stays a nested loop") {
@@ -49,7 +46,7 @@ class RangeJoinRuleSpec extends SparkTestBase {
   }
 
   test("enabled: same results, equi-join plan, nested loop gone") {
-    withRule(16) {
+    withRule("16") {
       val df = rangeJoin()
       val plan = planOf(df)
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
@@ -61,7 +58,7 @@ class RangeJoinRuleSpec extends SparkTestBase {
   }
 
   test("point side may be on the right; strict bounds keep exact semantics") {
-    withRule(16) {
+    withRule("16") {
       val df = intervals.join(points,
         col("p") > col("s") && col("p") < col("e")) // strict, mirrored sides
       assert(!planOf(df).contains("NestedLoop"))
@@ -77,7 +74,7 @@ class RangeJoinRuleSpec extends SparkTestBase {
   }
 
   test("joins with an equality conjunct are left alone") {
-    withRule(16) {
+    withRule("16") {
       val iv2 = intervals.withColumn("itag", col("iv_id") % 7)
       val df = points.join(iv2,
         col("tag") === col("itag") && col("p").between(col("s"), col("e")))
@@ -90,7 +87,7 @@ class RangeJoinRuleSpec extends SparkTestBase {
     // widths straddling the interval spans: 1 (max fan-out), typical,
     // larger than the whole domain (single bucket) — results must be
     // identical in all of them
-    for (w <- Seq(1L, 7L, 16L, 1000L)) withRule(w) {
+    for (w <- Seq(1L, 7L, 16L, 1000L)) withRule(w.toString) {
       val got = rangeJoin().select("p", "iv_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected, s"width $w diverged")
@@ -101,10 +98,7 @@ class RangeJoinRuleSpec extends SparkTestBase {
     // fixture stats: mean span (9+25+0-5)/4 = 7.25, domain 150-10 = 140,
     // P = 200 → w* = sqrt(7.25·140/200) ≈ 2.25 → 2 (cap 4·7.25 = 29)
     assert(graft.operators.RangeJoin.widthFrom(7.25, 140.0, 200L) == 2L)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRewrite
-    spark.conf.set(RangeJoinRewrite.WidthConf, "auto")
-    try {
+    withRule("auto") {
       val df = rangeJoin()
       val plan = planOf(df)
       assert(!plan.contains("NestedLoop") && !plan.contains("Cartesian"),
@@ -112,10 +106,6 @@ class RangeJoinRuleSpec extends SparkTestBase {
       val got = df.select("p", "iv_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == expected)
-    } finally {
-      spark.conf.unset(RangeJoinRewrite.WidthConf)
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_ eq RangeJoinRewrite)
     }
   }
 
@@ -126,10 +116,19 @@ class RangeJoinRuleSpec extends SparkTestBase {
   }
 
   test("GraftExtensions wires the rule into session extensions") {
-    val exts = new org.apache.spark.sql.SparkSessionExtensions
-    new graft.plans.GraftExtensions().apply(exts)
-    val rules = org.apache.spark.sql.graft.PlanExec.optimizerRulesOf(exts, spark)
-    assert(rules.exists(_ eq RangeJoinRewrite))
-    assert(rules.exists(_ eq graft.plans.CompactHllRewrite))
+    // behaviour of the shipped session, in a new session of it: the
+    // range join is rewritten with only the conf set, and
+    // approx_count_distinct plans the one-buffer CompactHll
+    val fresh = spark.newSession()
+    fresh.conf.set(RangeJoinRewrite.WidthConf, "16")
+    val df = fresh.range(200).select(col("id").as("p"))
+      .join(fresh.range(0, 200, 40).select(col("id").as("s"), (col("id") + 9).as("e")),
+        col("p").between(col("s"), col("e")))
+    assert(planOf(df).contains("_rj_"), planOf(df))
+    assert(df.count() == 50L) // 5 intervals of 10 points each
+    val hll = fresh.range(100).agg(approx_count_distinct("id"))
+      .queryExecution.optimizedPlan
+    assert(hll.collect { case p => p.expressions }.flatten
+      .exists(_.exists(_.isInstanceOf[graft.functions.expressions.CompactHll])), hll)
   }
 }

@@ -121,15 +121,31 @@ class TablesSpec extends SparkTestBase {
       .get("parquet.statistics.truncate.length") == Int.MaxValue.toString)
   }
 
-  test("GraftSession.scala is the only source that builds a SparkSession") {
+  /** File name → text of every Scala source under `roots`. */
+  private def sources(roots: String*): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    val call = raw"SparkSession\s*\.\s*builder\s*\(\s*\)".r
-    val builders = Seq("src/main", "src/test").flatMap { root =>
+    roots.flatMap { root =>
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
       finally files.close()
-    }.filter(f => call.findFirstIn(java.nio.file.Files.readString(f)).isDefined)
-      .map(_.getFileName.toString)
+    }.map(f => f.getFileName.toString -> java.nio.file.Files.readString(f))
+  }
+
+  test("GraftSession.scala is the only source that builds a SparkSession") {
+    val call = raw"SparkSession\s*\.\s*builder\s*\(\s*\)".r
+    val builders = sources("src/main", "src/test")
+      .collect { case (name, text) if call.findFirstIn(text).isDefined => name }
     assert(builders == Seq("GraftSession.scala"))
+  }
+
+  test("GraftExtensions.scala is the only source that extends a session") {
+    // functions, rules and strategies enter a session at build time
+    // through GraftExtensions' inject* calls, never at run time
+    val runtime = raw"createOrReplaceTempFunction|extraStrategies|extraOptimizations".r
+    val inject = raw"\.\s*inject[A-Z]\w*".r
+    val main = sources("src/main")
+    assert(main.collect { case (n, t) if runtime.findFirstIn(t).isDefined => n }.isEmpty)
+    assert(main.collect { case (n, t) if inject.findFirstIn(t).isDefined => n } ==
+      Seq("GraftExtensions.scala"))
   }
 }

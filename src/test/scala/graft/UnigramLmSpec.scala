@@ -48,7 +48,6 @@ class UnigramLmSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      UnigramViterbi.register(spark)
       val (pieces, costs) = vocab.toSeq.unzip
       val df = texts.zipWithIndex.toDF("text", "i").repartition(2)
         .select(col("i"), col("text"),
@@ -97,7 +96,6 @@ class UnigramLmSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("duplicate pieces keep their smallest cost; NULL pieces are skipped") {
-    UnigramViterbi.register(spark)
     val got = Seq("ab").toDF("text").repartition(1)
       .select(UnigramViterbi.encode(col("text"),
         typedlit(Seq("a", "b", "ab", "ab", null)), typedlit(Seq(3L, 3L, 9L, 5L, 0L))))
