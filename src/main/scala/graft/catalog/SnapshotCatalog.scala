@@ -10,6 +10,7 @@ import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{WriteJobStatsTracker, WriteTaskStats, WriteTaskStatsTracker}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -461,6 +462,18 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       extraProperties: Map[String, String]): TableMeta =
     appendImpl(ns, name, df, toBranch = None, extraProperties)
 
+  /** [[append]] of an at-least-once writer's batch `batchId`, recorded
+    * under property `key` in the same commit. The marker is checked
+    * against the metadata each commit attempt loads, so when two
+    * writers replay one batch only the first commits: the other finds
+    * the id recorded, deletes its own unreferenced files and returns
+    * the table as it found it.
+    */
+  def appendOnce(ns: String, name: String, df: DataFrame, key: String,
+      batchId: Long): TableMeta =
+    appendImpl(ns, name, df, toBranch = None, Map(key -> batchId.toString),
+      recorded = SnapshotCatalog.batchRecorded(_, key, batchId))
+
   /** Append to a named BRANCH: the new snapshot chains off the branch
     * head and the branch ref moves to it; the table's current pointer
     * (what readers see) is untouched. With [[publish]] this is the
@@ -505,7 +518,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       toBranch: Option[String],
       extraProperties: Map[String, String] = Map.empty,
       replaceManifest: Boolean = false,
-      replaceSchema: Boolean = false): TableMeta =
+      replaceSchema: Boolean = false,
+      recorded: TableMeta => Boolean = _ => false): TableMeta =
     {
       // Data files are written once, into a dir keyed by a unique
       // write id; the commit loop below re-reads table state on each
@@ -526,7 +540,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // bucket/identity/truncate specs.
       val tblProps = describe(ns, name).properties
       val specStr = tblProps.get(PartitionSpec.PropertyKey).map(_.trim)
-      val spec = specStr.map(PartitionSpec.parse)
       // Declared clustering at WRITE time ([[WriteOrderProp]], the
       // Iceberg write sort-order + range distribution): when the table
       // declares `write.order`, the batch range-distributes on its
@@ -556,30 +569,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
             .drop("_graft_wz")
         case None => df
       }
-      spec match {
-        case Some(p) =>
-          toWrite.withColumn(PartitionSpec.HiddenCol,
-              p.valueExprFor(df.schema.find(_.name == p.column).map(_.dataType)))
-            .write.partitionBy(PartitionSpec.HiddenCol)
-            .parquet(snapDir.toString)
-        case None => toWrite.write.parquet(snapDir.toString)
-      }
-      def walk(d: File): Seq[File] =
-        Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-          case f if f.isDirectory => walk(f)
-          case f if f.getName.endsWith(".parquet") => Seq(f)
-          case _ => Seq.empty
-        }
-      val newFiles0 = walk(snapDir.toFile).map(_.getAbsolutePath).sorted
-      val pvalRe = (PartitionSpec.HiddenCol + "=([^/]+)/").r
-      def pvalOf(path: String): Option[String] =
-        pvalRe.findFirstMatchIn(path)
-          .map(m => PartitionSpec.unescapePathName(m.group(1)))
-      val stats = collectFileStats(df.schema, newFiles0,
-          bloomColsFor(ns, name, df.schema))
-        .map(s => s.copy(pval = pvalOf(s.path),
-          pspec = specStr.filter(_ => pvalOf(s.path).isDefined)))
-      val newFiles = dropEmptyParts(newFiles0, stats)
+      val stats = writeFiles(toWrite, snapDir, df.schema,
+        bloomColsFor(ns, name, df.schema), specStr)
+      val newFiles = stats.map(_.path)
 
       var attempt = 0
       while (true) {
@@ -589,6 +581,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         // through the CREATE_NEW retry below
         val committed: Option[TableMeta] = synchronized {
         val (version, meta) = loadMeta(ns, name)
+        if (recorded(meta)) {
+          deleteRecursively(snapDir)
+          return meta
+        }
         // base = branch head (re-resolved per retry — the branch may
         // have moved) or the table's current snapshot
         val base = toBranch match {
@@ -1028,11 +1024,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       newMeta
     }
 
-  /** Manifest-style per-file min/max stats for numeric and timestamp
-    * columns (timestamps as epoch seconds), one aggregation job over
-    * the freshly-written files — the write-side half of manifest
-    * pruning (SURVEY §4).
-    */
   /** The table's configured bloom columns, restricted to types with a
     * canonical string rendering (string + integral): a float bloom
     * would hash a rendering the probe side can't reproduce.
@@ -1048,13 +1039,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     })
   }
 
-  /** One aggregation per bloom column: every row contributes its
-    * [[BloomProbes]] bit positions (an expression mirror of
+  /** Blooms of files the catalog did NOT write ([[addFiles]]' imports):
+    * one read-back aggregation per bloom column, every row contributing
+    * its [[BloomProbes]] bit positions (an expression mirror of
     * [[SnapshotCatalog.bloomPositions]]); `collect_set` bounds what
     * reaches the driver at ≤ [[BloomBits]] ints per file regardless of
-    * row count. Returns path → base64 bitset.
+    * row count. Returns path → column → base64 bitset. Files the
+    * catalog writes get theirs from [[writeFiles]]' write tasks.
     */
-  private def collectFileBlooms(schema: StructType, files: Seq[String],
+  private[graft] def collectFileBlooms(schema: StructType, files: Seq[String],
       bloomCols: Seq[String]): Map[String, Map[String, String]] = {
     import org.apache.spark.sql.functions._
     if (files.isEmpty || bloomCols.isEmpty) return Map.empty
@@ -1082,21 +1075,80 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
-  /** Written part files with ZERO rows carry no stats row (the
-    * per-file aggregation yields nothing for them) — drop them from
-    * the manifest AND from disk. Referencing them would permanently
-    * poison the manifest's completeness (statsRowCount needs stats for
-    * every file, so the metadata-count fast path would die) and every
-    * read would list them for nothing. Empty parts appear whenever a
-    * write's input is empty (an all-deleted rewrite, an empty CDC data
-    * side) or a partition coalesces empty.
+  /** The one way the catalog writes data and delete files: `df` goes
+    * out as parquet under `dir` in ONE Spark job — `FileFormatWriter`
+    * over `df`'s executed plan with the session's commit protocol, what
+    * `df.write.parquet` runs, under `df`'s own execution id so
+    * QueryExecutionListeners see it. Returns the [[FileStats]] of every
+    * non-empty file in path order: rows and min/max from the footers
+    * ([[collectFileStats]]), `bloomCols` bitsets built in the write
+    * tasks ([[SnapshotCatalog.BloomTracker]]) — a commit never re-reads
+    * what it wrote. `specStr` splits the rows into value-pure
+    * hidden-partition dirs (PartitionSpec scaladoc) and records each
+    * file's pval/pspec.
     */
-  private def dropEmptyParts(files: Seq[String],
-      stats: Seq[FileStats]): Seq[String] = {
-    val withStats = stats.map(_.path).toSet
-    val (keep, empty) = files.partition(withStats)
-    empty.foreach(f => Files.deleteIfExists(Paths.get(f)))
-    keep
+  private def writeFiles(df: DataFrame, dir: Path, statsSchema: StructType,
+      bloomCols: Seq[String] = Seq.empty,
+      specStr: Option[String] = None): Seq[FileStats] = {
+    import org.apache.spark.internal.io.FileCommitProtocol
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val frame = specStr.map(PartitionSpec.parse) match {
+      case Some(p) => df.withColumn(PartitionSpec.HiddenCol,
+        p.valueExprFor(df.schema.find(_.name == p.column).map(_.dataType)))
+      case None => df
+    }
+    val session = frame.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val qe = frame.queryExecution
+    val plan = qe.executedPlan
+    val root = dir.toAbsolutePath
+    val out = root.toString
+    val partCols = plan.output.filter(_.name == PartitionSpec.HiddenCol)
+    val tracker = new SnapshotCatalog.BloomTracker(
+      plan.output.filterNot(partCols.contains).zipWithIndex.collect {
+        case (a, i) if bloomCols.contains(a.name) => (a.name, i, a.dataType)
+      })
+    val committer = FileCommitProtocol.instantiate(
+      session.sessionState.conf.fileCommitProtocolClass,
+      java.util.UUID.randomUUID().toString, out)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      FileFormatWriter.write(session, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(out, Map.empty, plan.output),
+        session.sessionState.newHadoopConf(), partCols, None,
+        if (tracker.cols.isEmpty) Seq.empty else Seq(tracker), Map.empty)
+    }
+    def walk(f: File): Seq[File] =
+      Option(f.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
+        case d if d.isDirectory => walk(d)
+        case p if p.getName.endsWith(".parquet") => Seq(p)
+        case _ => Seq.empty
+      }
+    val files = walk(root.toFile).map(_.getAbsolutePath).sorted
+    val pvalRe = (PartitionSpec.HiddenCol + "=([^/]+)/").r
+    val stats = collectFileStats(statsSchema, files).sortBy(_.path).map { s =>
+      val rel = root.relativize(Paths.get(s.path)).toString
+      val bits = tracker.blooms.getOrElse(rel, Map.empty)
+      // a file with a non-null bloom value (a footer min) the tracker
+      // never saw would silently lose its bloom — refuse instead
+      tracker.cols.map(_._1).filter(c => s.min.contains(c) && !bits.contains(c))
+        .foreach(c => throw new IllegalStateException(
+          s"no bloom for $c of written file $rel"))
+      val pval = pvalRe.findFirstMatchIn(rel)
+        .map(m => PartitionSpec.unescapePathName(m.group(1)))
+      s.copy(
+        blooms = Some(bits.map { case (c, b) =>
+          c -> java.util.Base64.getEncoder.encodeToString(b) })
+          .filter(_.nonEmpty),
+        pval = pval, pspec = specStr.filter(_ => pval.isDefined))
+    }
+    // zero-row parts get no stats entry: referencing them would break
+    // the manifest's completeness (statsRowCount needs stats for every
+    // file) and every read would list them for nothing — delete them
+    files.filterNot(stats.map(_.path).toSet)
+      .foreach(f => Files.deleteIfExists(Paths.get(f)))
+    stats
   }
 
   /** input_file_name yields a URI (file:///...); manifests store plain
@@ -1170,7 +1222,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         val blocks = footer.getBlocks.asScala.toSeq
         val rows = blocks.map(_.getRowCount).sum
         // zero-row file: the Spark groupBy path yields no stats row —
-        // mirror that (dropEmptyParts reaps the file)
+        // mirror that (writeFiles deletes the file)
         if (rows == 0L) return None
         val mins = Map.newBuilder[String, String]
         val maxs = Map.newBuilder[String, String]
@@ -1319,15 +1371,18 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     }
   }
 
+  /** Per-file rows and min/max — the write-side half of manifest
+    * pruning (SURVEY §4): from the footers ([[footerFileStats]]) when
+    * provably exact, else one Spark aggregation. Zero-row files get no
+    * entry. Blooms come from [[writeFiles]] or [[collectFileBlooms]].
+    */
   private def collectFileStats(schema: StructType,
-      files: Seq[String], bloomCols: Seq[String] = Seq.empty): Seq[FileStats] = {
+      files: Seq[String]): Seq[FileStats] = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
     if (files.isEmpty) return Seq.empty
-    val blooms = collectFileBlooms(schema, files, bloomCols)
     footerFileStats(schema, files) match {
-      case Some(stats) =>
-        return stats.map(s => s.copy(blooms = blooms.get(s.path)))
+      case Some(stats) => return stats
       case None => () // fall through to the Spark read-back job
     }
     val statCols = schema.fields.collect {
@@ -1355,8 +1410,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
             .map(v => n -> (if (stringCols(n)) truncLower(v) else v)) }.toMap,
         max = statCols.flatMap { case (n, _) =>
           Option(r.getAs[String](s"_max_$n"))
-            .map(v => n -> (if (stringCols(n)) truncUpper(v) else v)) }.toMap,
-        blooms = blooms.get(path))
+            .map(v => n -> (if (stringCols(n)) truncUpper(v) else v)) }.toMap)
     }
   }
 
@@ -1640,13 +1694,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         .unionByName(deletes.select(keyCast: _*))
         .dropDuplicates(keyCols)
       val delDir = dataDir(ns, name).resolve(s"cdc-$writeId-delete-eq")
-      touched.coalesce(1).write.parquet(delDir.toString)
-      val newDelFiles0 = Option(delDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
       val keySchema = StructType(keyCols.map(c => schema(c)))
-      val delStats = collectFileStats(keySchema, newDelFiles0)
-      val newDelFiles = dropEmptyParts(newDelFiles0, delStats)
+      val delStats = writeFiles(touched.coalesce(1), delDir, keySchema)
+      val newDelFiles = delStats.map(_.path)
       val dataDirNew = dataDir(ns, name).resolve(s"cdc-$writeId-data")
       // write the batch's OWN columns (cast to declared types): a batch
       // narrower than a concurrently-evolved table schema is fine —
@@ -1666,35 +1716,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // pruned read
       val specStr = meta0.properties.get(PartitionSpec.PropertyKey)
         .map(_.trim)
-      val spec0 = specStr.map(PartitionSpec.parse)
-        .filter(p => writtenSchema.fieldNames.contains(p.column))
-      spec0 match {
-        case Some(p) =>
-          written.withColumn(PartitionSpec.HiddenCol,
-              p.valueExprFor(
-                writtenSchema.find(_.name == p.column).map(_.dataType)))
-            .write.partitionBy(PartitionSpec.HiddenCol)
-            .parquet(dataDirNew.toString)
-        case None => written.write.parquet(dataDirNew.toString)
-      }
-      def walkCdc(d: File): Seq[File] =
-        Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-          case f if f.isDirectory => walkCdc(f)
-          case f if f.getName.endsWith(".parquet") => Seq(f)
-          case _ => Seq.empty
-        }
-      val newFiles0 = walkCdc(dataDirNew.toFile)
-        .map(_.getAbsolutePath).sorted
-      val pvalRe = (PartitionSpec.HiddenCol + "=([^/]+)/").r
-      def pvalOf(path: String): Option[String] =
-        pvalRe.findFirstMatchIn(path)
-          .map(m => PartitionSpec.unescapePathName(m.group(1)))
-      val stats0 = collectFileStats(schema, newFiles0,
-          bloomColsFor(ns, name, schema))
-        .map(s => s.copy(pval = pvalOf(s.path),
-          pspec = specStr.filter(_ =>
-            spec0.isDefined && pvalOf(s.path).isDefined)))
-      val newFiles = dropEmptyParts(newFiles0, stats0)
+        .filter(p => writtenSchema.fieldNames.contains(PartitionSpec.parse(p).column))
+      val stats0 = writeFiles(written, dataDirNew, schema,
+        bloomColsFor(ns, name, schema), specStr)
+      val newFiles = stats0.map(_.path)
       var attempt = 0
       while (true) {
         // per-attempt lock (appendImpl discipline): the batch's file
@@ -1836,15 +1861,11 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val out = remain.unionByName(df, allowMissingColumns = true)
       val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
       val snapDir = dataDir(ns, name).resolve(s"snap-$snapshotId-upsert")
-      out.write.parquet(snapDir.toString)
-      val newFiles0 = Option(snapDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      val newStats = collectFileStats(out.schema, newFiles0,
+      val newStats = writeFiles(out, snapDir, out.schema,
           bloomColsFor(ns, name, out.schema))
         .map(_.copy(colIds = colIdsStamp(meta.fieldIds, out.schema),
           seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-      val newFiles = dropEmptyParts(newFiles0, newStats)
+      val newFiles = newStats.map(_.path)
       val untouchedStats = current.fileStats.filter(s => untouched.contains(s.path))
       val (carryDel, carryDelStats) =
         carryDeletes(ns, name, snapshotId.toString, current, untouched)
@@ -1881,22 +1902,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val (disjoint, straddling) = rest.partition(f =>
         bound(f).exists { case (mn, mx) => mx < lower || mn > upper })
       val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-      val newFiles =
+      val newStats =
         if (straddling.isEmpty) Seq.empty
-        else {
-          val snapDir = dataDir(ns, name).resolve(s"snap-$snapshotId-delete")
-          readFilesOf(current, schema, straddling, meta.fieldIds)
-            .filter(!col(column).between(lower, upper))
-            .write.parquet(snapDir.toString)
-          Option(snapDir.toFile.listFiles()).getOrElse(Array.empty)
-            .filter(_.getName.endsWith(".parquet"))
-            .map(_.getAbsolutePath).sorted.toSeq
-        }
-      val newStats = collectFileStats(schema, newFiles,
-          bloomColsFor(ns, name, schema))
-        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-          seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-      val keptFiles = dropEmptyParts(newFiles, newStats)
+        else writeFiles(
+            readFilesOf(current, schema, straddling, meta.fieldIds)
+              .filter(!col(column).between(lower, upper)),
+            dataDir(ns, name).resolve(s"snap-$snapshotId-delete"), schema,
+            bloomColsFor(ns, name, schema))
+          .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
+            seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
+      val keptFiles = newStats.map(_.path)
       val keptStats = current.fileStats.filter(s => disjoint.contains(s.path))
       val (carryDel, carryDelStats) =
         carryDeletes(ns, name, snapshotId.toString, current, disjoint)
@@ -1982,18 +1997,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         // merge-on-read interplay: the targets are read with their
         // delete entries APPLIED (folded into the rewrite); entries
         // for untouched files are carried forward below
-        transform(readFilesOf(current, schema, targetSet.toSeq.sorted,
-            meta.fieldIds))
-          .select(schema.fieldNames.map(col(_)).toSeq: _*)
-          .write.parquet(snapDir.toString)
-        val newFiles = Option(snapDir.toFile.listFiles())
-          .getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(_.getAbsolutePath).sorted.toSeq
-        val st = collectFileStats(schema, newFiles,
-            bloomColsFor(ns, name, schema))
+        val st = writeFiles(
+            transform(readFilesOf(current, schema, targetSet.toSeq.sorted,
+              meta.fieldIds)).select(schema.fieldNames.map(col(_)).toSeq: _*),
+            snapDir, schema, bloomColsFor(ns, name, schema))
           .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema)))
-        val pruned = dropEmptyParts(newFiles, st)
+        val pruned = st.map(_.path)
         val kept = current.fileStats.filter(s => untouched.contains(s.path))
         val (cd, cds) = carryDeletes(ns, name, writeId, current, untouched)
         (pruned, st, kept, cd, cds)
@@ -2097,16 +2106,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       .parquet(current.deleteFiles: _*)
       .join(survDf, Seq("file_path"), "left_semi")
     val delDir = dataDir(ns, name).resolve(s"delete-carry-$writeId")
-    kept.coalesce(1).write.parquet(delDir.toString)
-    val files = Option(delDir.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(_.getAbsolutePath).sorted.toSeq
-    val stats = collectFileStats(DeleteFileSchema, files)
-    if (stats.map(_.rows).sum == 0L) {
+    val stats = writeFiles(kept.coalesce(1), delDir, DeleteFileSchema)
+    if (stats.isEmpty) {
       // nothing survived: drop the whole empty carry dir immediately
       deleteRecursively(delDir)
       (Seq.empty, Seq.empty)
-    } else (files, stats)
+    } else (stats.map(_.path), stats)
   }
 
   /** Best-effort recursive delete of an abandoned WRITE DIRECTORY —
@@ -2571,15 +2576,11 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           .repartitionByRange(numFiles, col("_graft_z"))
           .sortWithinPartitions("_graft_z")
           .drop("_graft_z")
-      rewritten.write.parquet(snapDir.toString)
-      val newFiles0 = Option(snapDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      val stats = collectFileStats(schema, newFiles0,
+      val stats = writeFiles(rewritten, snapDir, schema,
           bloomColsFor(ns, name, schema))
         .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
           seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-      val newFiles = dropEmptyParts(newFiles0, stats)
+      val newFiles = stats.map(_.path)
       val snap = SnapshotMeta(
         snapshotId = snapshotId,
         parentId = meta.currentSnapshotId,
@@ -3135,35 +3136,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           // value-pure rewritten files record fresh pvals, so pval
           // pruning stays metadata-exact instead of eroding to
           // conservative keeps with every bin-pack pass
-          val specStr = meta.properties.get(PartitionSpec.PropertyKey)
-            .map(_.trim)
-          specStr.map(PartitionSpec.parse) match {
-            case Some(p) =>
-              packed.withColumn(PartitionSpec.HiddenCol,
-                  p.valueExprFor(
-                    schema.find(_.name == p.column).map(_.dataType)))
-                .write.partitionBy(PartitionSpec.HiddenCol)
-                .parquet(snapDir.toString)
-            case None => packed.write.parquet(snapDir.toString)
-          }
-          def walk(dd: File): Seq[File] =
-            Option(dd.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-              case f if f.isDirectory => walk(f)
-              case f if f.getName.endsWith(".parquet") => Seq(f)
-              case _ => Seq.empty
-            }
-          val fs0 = walk(snapDir.toFile).map(_.getAbsolutePath).sorted
-          val pvalRe = (PartitionSpec.HiddenCol + "=([^/]+)/").r
-          def pvalOf(path: String): Option[String] =
-            pvalRe.findFirstMatchIn(path)
-              .map(m => PartitionSpec.unescapePathName(m.group(1)))
-          val st = collectFileStats(schema, fs0,
-              bloomColsFor(ns, name, schema))
-            .map(s => s.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-              seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1),
-              pval = pvalOf(s.path),
-              pspec = specStr.filter(_ => pvalOf(s.path).isDefined)))
-          (dropEmptyParts(fs0, st), st)
+          val st = writeFiles(packed, snapDir, schema,
+              bloomColsFor(ns, name, schema),
+              meta.properties.get(PartitionSpec.PropertyKey).map(_.trim))
+            .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
+              seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
+          (st.map(_.path), st)
         } catch {
           case scala.util.control.NonFatal(e) =>
             throw staleOrRethrow(ns, name, meta, e)
@@ -3308,15 +3286,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         }
       val numOut = math.max(1L, math.min(64L,
         estEntries / DeleteRewriteRowsPerFile + 1)).toInt
-      hidden
+      val st = writeFiles(hidden
         .repartitionByRange(numOut, col("file_path"), col("pos"))
-        .sortWithinPartitions("file_path", "pos")
-        .write.parquet(outDir.toString)
-      val fs0 = Option(outDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      val st = collectFileStats(DeleteFileSchema, fs0)
-      (dropEmptyParts(fs0, st), st.filter(_.rows > 0L))
+        .sortWithinPartitions("file_path", "pos"), outDir, DeleteFileSchema)
+      (st.map(_.path), st)
     } catch {
       case scala.util.control.NonFatal(e) =>
         deleteRecursively(outDir)
@@ -3423,8 +3396,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     // one distributed pass: rows + min/max (+ declared blooms) per
     // file. Zero-row files simply produce no group — they register
     // nothing and are NOT deleted (external bytes are never touched).
-    val stats = collectFileStats(declared, resolved,
-        bloomColsFor(ns, name, declared))
+    val blooms = collectFileBlooms(declared, resolved,
+      bloomColsFor(ns, name, declared))
+    val stats = collectFileStats(declared, resolved)
+      .map(s => s.copy(blooms = blooms.get(s.path)))
       .filter(_.rows > 0L).sortBy(_.path)
     if (stats.isEmpty) return AddFilesReport(0, 0L)
     val files = stats.map(_.path)
@@ -4148,51 +4123,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   def addDeleteFile(ns: String, name: String, positions: DataFrame,
       expectedSnapshotId: Option[Long] = None,
       toBranch: Option[String] = None): (TableMeta, Long) =
-    synchronized {
-      import org.apache.spark.sql.functions.col
-      val (version, meta) = loadMeta(ns, name)
-      val current = writeBase(meta, ns, name, toBranch).getOrElse(
-        throw new IllegalStateException(s"$ns.$name has no data"))
-      expectedSnapshotId.foreach { exp =>
-        if (current.snapshotId != exp)
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name moved to snapshot ${current.snapshotId} " +
-              s"(delete planned against $exp) — re-plan and retry")
-      }
-      val batch = positions
-        .select(col(RowIdFileCol).cast("string").as("file_path"),
-          col(RowIdPosCol).cast("long").as("pos"))
-        .dropDuplicates("file_path", "pos")
-      val fresh =
-        if (current.deleteFiles.isEmpty) batch
-        else batch.join(
-          spark.read.schema(DeleteFileSchema).parquet(current.deleteFiles: _*),
-          Seq("file_path", "pos"), "left_anti")
-      val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-      val delDir = dataDir(ns, name).resolve(s"snap-$snapshotId-delete-mor")
-      fresh.coalesce(1).write.parquet(delDir.toString)
-      val newDelFiles0 = Option(delDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      val newDelStats = collectFileStats(DeleteFileSchema, newDelFiles0)
-      val newDelFiles = dropEmptyParts(newDelFiles0, newDelStats)
-      val written = newDelStats.map(_.rows).sum
-      val snap = SnapshotMeta(
-        snapshotId = snapshotId,
-        parentId = Some(current.snapshotId),
-        sequenceNumber = meta.snapshots.map(_.sequenceNumber).max + 1,
-        files = current.files,
-        rowCount = 0L, // a delete adds no rows
-        createdAtMs = System.currentTimeMillis(),
-        fileStats = current.fileStats,
-        deleteFiles = current.deleteFiles ++ newDelFiles,
-        deleteFileStats = current.deleteFileStats ++ newDelStats,
-        eqDeletes = current.eqDeletes,
-        operation = Some("delete"))
-      val newMeta = advanced(meta, toBranch, snap)
-      commitPlanned(ns, name, version + 1, newMeta)
-      (newMeta, written)
-    }
+    deleteAndAppend(ns, name, positions, None, expectedSnapshotId, toBranch)
 
   /** Merge-on-read UPDATE commit: ONE atomic snapshot that both hides
     * the matched rows (a positional delete file, [[addDeleteFile]]'s
@@ -4208,6 +4139,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       positions: DataFrame, rows: DataFrame,
       expectedSnapshotId: Option[Long] = None,
       toBranch: Option[String] = None): (TableMeta, Long) =
+    deleteAndAppend(ns, name, positions, Some(rows), expectedSnapshotId, toBranch)
+
+  /** [[addDeleteFile]], appending `rows` in the same commit when given
+    * ([[addDeleteFileWithAppend]]). */
+  private def deleteAndAppend(ns: String, name: String,
+      positions: DataFrame, rows: Option[DataFrame],
+      expectedSnapshotId: Option[Long],
+      toBranch: Option[String]): (TableMeta, Long) =
     synchronized {
       import org.apache.spark.sql.functions.col
       val (version, meta) = loadMeta(ns, name)
@@ -4218,7 +4157,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         if (current.snapshotId != exp)
           throw new java.util.ConcurrentModificationException(
             s"$ns.$name moved to snapshot ${current.snapshotId} " +
-              s"(update planned against $exp) — re-plan and retry")
+              s"(${if (rows.isEmpty) "delete" else "update"} planned " +
+              s"against $exp) — re-plan and retry")
       }
       val batch = positions
         .select(col(RowIdFileCol).cast("string").as("file_path"),
@@ -4231,36 +4171,26 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           Seq("file_path", "pos"), "left_anti")
       val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
       val seqNum = meta.snapshots.map(_.sequenceNumber).max + 1
-      val delDir = dataDir(ns, name).resolve(s"snap-$snapshotId-delete-mor")
-      fresh.coalesce(1).write.parquet(delDir.toString)
-      val newDelFiles0 = Option(delDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      val newDelStats = collectFileStats(DeleteFileSchema, newDelFiles0)
-      val newDelFiles = dropEmptyParts(newDelFiles0, newDelStats)
-      val dataDirNew = dataDir(ns, name).resolve(s"snap-$snapshotId-update-mor")
-      rows.select(schema.fieldNames.map(col(_)).toSeq: _*)
-        .write.parquet(dataDirNew.toString)
-      val newFiles0 = Option(dataDirNew.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
-      val newStats = collectFileStats(schema, newFiles0,
+      val newDelStats = writeFiles(fresh.coalesce(1),
+        dataDir(ns, name).resolve(s"snap-$snapshotId-delete-mor"), DeleteFileSchema)
+      val newStats = rows.fold(Seq.empty[FileStats])(r => writeFiles(
+          r.select(schema.fieldNames.map(col(_)).toSeq: _*),
+          dataDir(ns, name).resolve(s"snap-$snapshotId-update-mor"), schema,
           bloomColsFor(ns, name, schema))
         .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-          seq = Some(seqNum)))
-      val newFiles = dropEmptyParts(newFiles0, newStats)
+          seq = Some(seqNum))))
       val snap = SnapshotMeta(
         snapshotId = snapshotId,
         parentId = Some(current.snapshotId),
         sequenceNumber = seqNum,
-        files = current.files ++ newFiles,
-        rowCount = newStats.map(_.rows).sum,
+        files = current.files ++ newStats.map(_.path),
+        rowCount = newStats.map(_.rows).sum, // a delete adds no rows
         createdAtMs = System.currentTimeMillis(),
         fileStats = current.fileStats ++ newStats,
-        deleteFiles = current.deleteFiles ++ newDelFiles,
+        deleteFiles = current.deleteFiles ++ newDelStats.map(_.path),
         deleteFileStats = current.deleteFileStats ++ newDelStats,
         eqDeletes = current.eqDeletes,
-        operation = Some("overwrite"))
+        operation = Some(if (rows.isEmpty) "delete" else "overwrite"))
       val newMeta = advanced(meta, toBranch, snap)
       commitPlanned(ns, name, version + 1, newMeta)
       (newMeta, newDelStats.map(_.rows).sum)
@@ -4299,14 +4229,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val entries = keys
         .select(cols.map(c => col(c).cast(schema(c).dataType).as(c)): _*)
         .dropDuplicates(cols)
-      entries.coalesce(1).write.parquet(delDir.toString)
-      val newFiles0 = Option(delDir.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.endsWith(".parquet"))
-        .map(_.getAbsolutePath).sorted.toSeq
       val keySchema = StructType(cols.map(c => schema(c)))
-      val eqStats = collectFileStats(keySchema, newFiles0)
+      val eqStats = writeFiles(entries.coalesce(1), delDir, keySchema)
       val rows = eqStats.map(_.rows).sum
-      val newFiles = dropEmptyParts(newFiles0, eqStats)
+      val newFiles = eqStats.map(_.path)
       val newEq = newFiles.map { f =>
         val st = eqStats.find(_.path == f)
         EqDeleteMeta(f, cols, seqNum, st.map(_.rows).getOrElse(0L),
@@ -5071,9 +4997,16 @@ object SnapshotCatalog {
 
   /** Columns to build file blooms for on write (comma-separated table
     * property), mirroring Iceberg's write.parquet.bloom-filter-enabled
-    * switches.
+    * switches. The catalog's own writes build them in the write tasks
+    * ([[SnapshotCatalog.BloomTracker]]); imported files through one
+    * read-back job.
     */
   val BloomColumnsProp = "write.bloom-filter.columns"
+
+  /** True iff `meta` records batch `batchId` (or a later one) under the
+    * at-least-once marker property `key` ([[SnapshotCatalog.appendOnce]]). */
+  def batchRecorded(meta: TableMeta, key: String, batchId: Long): Boolean =
+    meta.properties.get(key).exists(_.toLong >= batchId)
 
   /** The probe positions of a value's canonical string rendering —
     * md5 split into four 32-bit words mod [[BloomBits]]. md5 is used
@@ -5083,14 +5016,75 @@ object SnapshotCatalog {
     * drift. Integral/string columns render stably across both; that is
     * the supported probe surface (floats have no canonical rendering).
     */
-  def bloomPositions(value: String): Seq[Int] = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    (0 until BloomProbes).map { i =>
-      (java.lang.Long.parseLong(hex.substring(i * 8, (i + 1) * 8), 16) % BloomBits).toInt
+  def bloomPositions(value: String): Seq[Int] =
+    bloomPositions(java.security.MessageDigest.getInstance("MD5"),
+      value.getBytes(StandardCharsets.UTF_8)).toSeq
+
+  /** [[bloomPositions]] of a rendering's UTF-8 bytes: each probe is one
+    * big-endian unsigned 32-bit word of the digest mod [[BloomBits]]. */
+  private def bloomPositions(md5: java.security.MessageDigest,
+      utf8: Array[Byte]): Array[Int] = {
+    val d = md5.digest(utf8)
+    Array.tabulate(BloomProbes) { i =>
+      ((java.nio.ByteBuffer.wrap(d, i * 4, 4).getInt & 0xffffffffL) % BloomBits).toInt
     }
   }
+
+  /** Builds the blooms of a [[SnapshotCatalog.writeFiles]] job in its
+    * write tasks: each non-null value of a bloom column (`cols`: name,
+    * ordinal among the written columns, type) ORs the [[bloomPositions]]
+    * of its `cast(... as string)` rendering into its (file, column)'s
+    * [[BloomBits]]-bit array. Tasks write under an attempt dir
+    * (`…/_temporary/0/_temporary/attempt_…/<rel>`), so files are keyed
+    * by `<rel>` — with hidden partitioning one task writes the same part
+    * name into several `_graft_p=v/` dirs. [[blooms]] is set on commit.
+    */
+  private[catalog] final class BloomTracker(
+      val cols: Seq[(String, Int, DataType)]) extends WriteJobStatsTracker {
+    import scala.collection.mutable
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types._
+    @transient @volatile var blooms: Map[String, Map[String, Array[Byte]]] = Map.empty
+
+    def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+      private val md5 = java.security.MessageDigest.getInstance("MD5")
+      private val files = mutable.Map.empty[String, mutable.Map[String, Array[Byte]]]
+      private var path: String = _
+      private var perCol: mutable.Map[String, Array[Byte]] = _
+      def newPartition(partitionValues: InternalRow): Unit = ()
+      def newFile(filePath: String): Unit = ()
+      def closeFile(filePath: String): Unit = ()
+      def newRow(filePath: String, row: InternalRow): Unit = {
+        if (filePath ne path) {
+          path = filePath
+          perCol = files.getOrElseUpdate(filePath, mutable.Map.empty)
+        }
+        for ((c, i, dt) <- cols if !row.isNullAt(i)) {
+          val rendering = dt match {
+            case _: StringType => row.getUTF8String(i).getBytes
+            case _ => row.get(i, dt).toString.getBytes(StandardCharsets.UTF_8) // integral
+          }
+          val bits = perCol.getOrElseUpdate(c, new Array[Byte](BloomBits / 8))
+          bloomPositions(md5, rendering).foreach { p =>
+            bits(p >> 3) = (bits(p >> 3) | (1 << (p & 7))).toByte
+          }
+        }
+      }
+      def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+        BloomTaskStats(files.map { case (path, perCol) =>
+          AttemptDir.findFirstMatchIn(path).fold(path)(m => path.substring(m.end)) ->
+            perCol.toMap
+        }.toMap)
+    }
+
+    def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
+      blooms = stats.flatMap { case BloomTaskStats(f) => f }.toMap
+  }
+
+  private final case class BloomTaskStats(
+      files: Map[String, Map[String, Array[Byte]]]) extends WriteTaskStats
+
+  private val AttemptDir = "/_temporary/[^/]+/_temporary/[^/]+/".r
 
   /** Bloom membership for one file's stats: false ONLY when the file
     * provably lacks `value` (absent/None blooms keep the file).

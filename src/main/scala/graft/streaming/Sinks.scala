@@ -36,7 +36,7 @@ object Sinks {
   private[graft] def alreadyCommitted(catalog: SnapshotCatalog,
       ns: String, table: String, key: String, batchId: Long): Boolean =
     catalog.tableExists(ns, table) &&
-      catalog.describe(ns, table).properties.get(key).exists(_.toLong >= batchId)
+      SnapshotCatalog.batchRecorded(catalog.describe(ns, table), key, batchId)
 
   /** S6 — Iceberg-like append sink: every trigger (default 5 s, matching
     * `iceberg.control.commit-interval-ms=5000`,
@@ -62,6 +62,9 @@ object Sinks {
 
   /** The icebergLike per-batch commit, extracted so replay idempotence
     * is directly testable (StreamingSpec calls it twice with one id).
+    * The marker check before the write skips an ordinary replay
+    * cheaply; `appendOnce` repeats it inside the commit, where it
+    * decides a race between two writers replaying the same batch.
     */
   private[graft] def appendBatch(catalog: SnapshotCatalog, ns: String,
       table: String, checkpointDir: String)(
@@ -70,8 +73,7 @@ object Sinks {
     if (!alreadyCommitted(catalog, ns, table, key, batchId)) {
       if (!catalog.tableExists(ns, table))            // auto-create-enabled
         catalog.createTable(ns, table, batch.schema)
-      catalog.append(ns, table, batch,                // evolve inside
-        Map(key -> batchId.toString)): Unit
+      catalog.appendOnce(ns, table, batch, key, batchId): Unit // evolve inside
     }
   }
 
@@ -112,8 +114,7 @@ object Sinks {
             // bootstrap: no snapshot to branch from yet — the staged
             // view IS the batch, so audit it directly
             if (audit(batch))
-              catalog.append(ns, table, batch,
-                Map(key -> batchId.toString)): Unit
+              catalog.appendOnce(ns, table, batch, key, batchId): Unit
           } else {
             // (re)point the staging branch at the published state,
             // stage, audit, publish or discard. The batch marker rides

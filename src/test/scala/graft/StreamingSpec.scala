@@ -1,11 +1,24 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.catalog.SnapshotCatalog
 import graft.ingest.PurchaseEvents
 import graft.streaming.Sinks
+
+/** Holds a write job's task until the test releases it. */
+object ReplayGate {
+  @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    entered = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pass(): Boolean = { entered.countDown(); release.await(); true }
+}
 
 class StreamingSpec extends SparkTestBase {
 
@@ -64,6 +77,31 @@ class StreamingSpec extends SparkTestBase {
     val commit2 = Sinks.appendBatch(cat, "s", "ev", "ckpt-other") _
     commit2(Seq((4L, "d")).toDF("id", "v"), 0L)
     assert(cat.read("s", "ev").count() == 4)
+  }
+
+  test("sink replay race: two writers replaying one batch id commit it once") {
+    // both writers pass the marker check before writing; the first is
+    // held inside its write job until the second has committed
+    val wh = tmpDir("graft-replay-race-wh")
+    val cat = new SnapshotCatalog(spark, wh)
+    val rows = spark.range(0, 500, 1, 1).toDF("id")
+    cat.createTable("s", "ev", rows.schema)
+    val commit = Sinks.appendBatch(cat, "s", "ev", "ckpt-race") _
+    val gate = udf(() => ReplayGate.pass()).asNondeterministic()
+    ReplayGate.reset()
+    val first = new Thread(() => commit(rows.where(gate()), 0L))
+    first.start()
+    assert(ReplayGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    try commit(rows, 0L) finally ReplayGate.release.countDown()
+    first.join(120000L)
+    assert(!first.isAlive)
+    assert(cat.read("s", "ev").count() == 500)
+    assert(cat.describe("s", "ev").snapshots.size == 1)
+    // the loser deleted its unreferenced write dir
+    val writeDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(wh))
+    try assert(writeDirs.iterator().asScala
+      .count(_.getFileName.toString.startsWith("write-")) == 1)
+    finally writeDirs.close()
   }
 
   test("WAP sink: failing audit discards the batch unseen; passing publishes") {

@@ -148,4 +148,29 @@ class TablesSpec extends SparkTestBase {
     assert(main.collect { case (n, t) if inject.findFirstIn(t).isDefined => n } ==
       Seq("GraftExtensions.scala"))
   }
+
+  /** `text` from the line declaring `sig` to the end of that member
+    * (the next line closing a brace at the member's indent). */
+  private def member(text: String, sig: String): (Int, Int) = {
+    val from = text.indexOf(sig)
+    assert(from >= 0, s"no $sig")
+    val indent = from - text.lastIndexOf('\n', from) - 1
+    val end = text.indexOf("\n" + " " * indent + "}\n", from)
+    assert(end > from, s"no end of $sig")
+    (from, end)
+  }
+
+  test("the catalog writes files only through writeFiles, and only addFiles " +
+      "reads blooms back") {
+    val text = sources("src/main/scala/graft/catalog").map(_._2).mkString("\n")
+    // every data and delete file goes through the one writer, which
+    // builds manifest blooms in its write tasks
+    val (w0, w1) = member(text, "private def writeFiles(")
+    val write = raw"\.\s*write\s*\.\s*(parquet|partitionBy)\s*\(".r
+    assert(write.findFirstIn(text.take(w0) + text.drop(w1)).isEmpty)
+    // the read-back bloom job serves imported files only
+    val calls = raw"(?<!def )collectFileBlooms\(".r.findAllMatchIn(text).map(_.start).toSeq
+    val (a0, a1) = member(text, "def addFiles(")
+    assert(calls.size == 1 && calls.forall(i => i > a0 && i < a1), calls)
+  }
 }
