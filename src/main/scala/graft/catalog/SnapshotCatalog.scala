@@ -1675,6 +1675,25 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       deletes: DataFrame, keyCols: Seq[String],
       extraProperties: Map[String, String] = Map.empty,
       toBranch: Option[String] = None): TableMeta =
+    cdcUpsertImpl(ns, name, rows, deletes, keyCols, extraProperties, toBranch)
+
+  /** [[cdcUpsert]] of an at-least-once writer's batch `batchId`, the
+    * [[appendOnce]] contract: the marker under `key` rides the commit
+    * and is checked against the metadata each attempt loads, so of two
+    * writers replaying one batch only the first commits; the other
+    * deletes its own write dirs and returns the table as it found it.
+    */
+  def cdcUpsertOnce(ns: String, name: String, rows: DataFrame,
+      deletes: DataFrame, keyCols: Seq[String], key: String,
+      batchId: Long): TableMeta =
+    cdcUpsertImpl(ns, name, rows, deletes, keyCols,
+      Map(key -> batchId.toString), toBranch = None,
+      recorded = SnapshotCatalog.batchRecorded(_, key, batchId))
+
+  private def cdcUpsertImpl(ns: String, name: String, rows: DataFrame,
+      deletes: DataFrame, keyCols: Seq[String],
+      extraProperties: Map[String, String], toBranch: Option[String],
+      recorded: TableMeta => Boolean = _ => false): TableMeta =
     {
       import org.apache.spark.sql.functions.col
       require(keyCols.nonEmpty, "cdcUpsert needs at least one key column")
@@ -1727,6 +1746,11 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         // other in-process commits behind its IO
         val committed: Option[TableMeta] = synchronized {
         val (version, meta) = loadMeta(ns, name)
+        if (recorded(meta)) {
+          deleteRecursively(delDir)
+          deleteRecursively(dataDirNew)
+          return meta
+        }
         val current = writeBase(meta, ns, name, toBranch).getOrElse(
           throw new IllegalStateException(s"$ns.$name has no data"))
         // revalidate against the FRESHLY loaded state every attempt: a

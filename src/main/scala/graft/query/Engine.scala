@@ -4,6 +4,8 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, DayTimeIntervalType,
+  MapType, StructType, TimestampNTZType, TimestampType, YearMonthIntervalType}
 
 import graft.catalog.SnapshotCatalog
 
@@ -2502,33 +2504,13 @@ class Engine(val spark: SparkSession, val catalog: SnapshotCatalog,
   def health(): String = """{"status":"healthy"}"""
 
   private def recordsJson(d: DataFrame): Try[String] =
-    Try(epochMillisTimestamps(d).toJSON.collect())
-      .map(rows => s"""{"records":[${rows.mkString(",")}]}""")
+    Try(jsonRecords(d)).map(rows => s"""{"records":[${rows.mkString(",")}]}""")
 
   private def envelope(df: Try[DataFrame]): String =
     df.flatMap(recordsJson) match {
       case Success(json) => json
       case Failure(e) => errorJson(e)
     }
-
-  /** JSON fidelity (SURVEY §7.4 risk 3): the reference's DuckDB path
-    * renders timestamps as epoch MILLISECONDS (pandas
-    * `to_json(orient='records')` default, duckdb_rest_server.py:81-82);
-    * Spark's toJSON renders ISO strings. Convert top-level timestamp
-    * columns to epoch millis so the wire format matches.
-    */
-  private def epochMillisTimestamps(d: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, unix_millis}
-    import org.apache.spark.sql.types.{TimestampType, TimestampNTZType}
-    val cols = d.schema.fields.map {
-      case f if f.dataType == TimestampType =>
-        unix_millis(col(f.name)).as(f.name)
-      case f if f.dataType == TimestampNTZType =>
-        unix_millis(col(f.name).cast(TimestampType)).as(f.name)
-      case f => col(f.name)
-    }
-    d.select(cols.toSeq: _*)
-  }
 }
 
 object Engine {
@@ -2587,12 +2569,63 @@ object Engine {
     * cancellation — one timer thread serves every Engine in the JVM
     * (it only ever runs `cancelJobGroup`, a cheap scheduler call).
     */
-  private[query] val watchdog: java.util.concurrent.ScheduledExecutorService =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
+  private[graft] val watchdog: java.util.concurrent.ScheduledThreadPoolExecutor = {
+    val w = new java.util.concurrent.ScheduledThreadPoolExecutor(1, r => {
       val t = new Thread(r, "graft-engine-watchdog")
       t.setDaemon(true)
       t
     })
+    // a request's timer is cancelled when the request returns; without
+    // this the cancelled task would stay queued for the whole budget
+    w.setRemoveOnCancelPolicy(true)
+    w
+  }
+
+  /** Every row of `d` as its JSON object text, in `d`'s order: the
+    * records of a reply. One projection on top of `d`,
+    * `to_json(struct(…))` over `d`'s columns taken BY POSITION, so a
+    * dotted or repeated column name is never re-resolved. The
+    * projection is deterministic, so the optimizer pushes it below a
+    * root `limit`: a limited reply plans as `CollectLimitExec` (or
+    * `TakeOrderedAndProjectExec` under an ORDER BY) and runs Spark's
+    * incremental take — the first partition is read first, the JSON is
+    * built in the scan tasks, and there is no exchange and no row
+    * object round trip.
+    *
+    * Wire format. Top-level timestamps are epoch MILLISECONDS: the
+    * reference's DuckDB path renders pandas `to_json(orient='records')`
+    * (duckdb_rest_server.py:81-82, SURVEY §7.4 risk 3); nested ones
+    * stay ISO strings. ANSI intervals, at any depth, print at their
+    * widest range (`INTERVAL '1 00:00:00' DAY TO SECOND`), as the row
+    * object encoding did.
+    */
+  private[graft] def jsonRecords(d: DataFrame): Array[String] = {
+    import org.apache.spark.sql.functions.{col, struct, to_json, unix_millis}
+    val fields = d.schema.fields
+    val byPos = d.toDF(fields.indices.map(i => s"_$i"): _*)
+    val cols = fields.zipWithIndex.map { case (f, i) =>
+      val c = col(s"_$i")
+      (f.dataType match {
+        case TimestampType => unix_millis(c)
+        case TimestampNTZType => unix_millis(c.cast(TimestampType))
+        case t =>
+          val w = widestIntervals(t)
+          if (w == t) c else c.cast(w)
+      }).as(f.name)
+    }
+    byPos.select(to_json(struct(cols.toSeq: _*))).collect().map(_.getString(0))
+  }
+
+  private def widestIntervals(t: DataType): DataType = t match {
+    case _: DayTimeIntervalType => DayTimeIntervalType()
+    case _: YearMonthIntervalType => YearMonthIntervalType()
+    case a: ArrayType => a.copy(elementType = widestIntervals(a.elementType))
+    case m: MapType => m.copy(keyType = widestIntervals(m.keyType),
+      valueType = widestIntervals(m.valueType))
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = widestIntervals(f.dataType))))
+    case other => other
+  }
 
   /** The ≤30-line DuckDB-dialect pre-rewrite (SURVEY §2.5 dialect
     * note): lets the reference README's committed query texts

@@ -252,12 +252,13 @@ object Sinks {
         .select(keyCols.map(col): _*)
       if (!catalog.tableExists(ns, table))
         catalog.createTable(ns, table, rows.schema)
-      val marker = Map(key -> batchId.toString)
+      // the marker is checked again inside the commit, where it decides
+      // a race between two writers replaying the same batch
       if (catalog.describe(ns, table).currentSnapshot.isEmpty)
         // first batch: nothing to delete against, plain marked append
-        catalog.append(ns, table, rows, marker): Unit
+        catalog.appendOnce(ns, table, rows, key, batchId): Unit
       else
-        catalog.cdcUpsert(ns, table, rows, dels, keyCols, marker): Unit
+        catalog.cdcUpsertOnce(ns, table, rows, dels, keyCols, key, batchId): Unit
     }
   }
 

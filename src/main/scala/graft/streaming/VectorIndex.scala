@@ -216,7 +216,7 @@ object VectorIndex {
       if (!catalog.tableExists(ns, table))
         catalog.createTable(ns, table, batch.schema,
           properties = Map(PartitionSpec.PropertyKey -> "identity(cell)"))
-      catalog.append(ns, table, batch, Map(key -> batchId.toString)): Unit
+      catalog.appendOnce(ns, table, batch, key, batchId): Unit
     }
   }
 }

@@ -121,6 +121,20 @@ class EngineSpec extends SparkTestBase {
     assert("\"o_orderdate\":\\d+".r.findFirstIn(out).isDefined, out)
   }
 
+  test("replies keep dotted and repeated column names, by position") {
+    assert(engine.sqlQuery("SELECT 1 AS `a.b`") == """{"records":[{"a.b":1}]}""")
+    assert(engine.sqlQuery("SELECT 1 AS a, 2 AS a") == """{"records":[{"a":1,"a":2}]}""")
+    // the epoch-millis step applies by position too
+    assert(engine.sqlQuery("SELECT TIMESTAMP'1970-01-01 00:00:01' AS `t.s`, " +
+      "TIMESTAMP_NTZ'1970-01-01 00:00:02' AS `t.s`") ==
+      """{"records":[{"t.s":1000,"t.s":2000}]}""")
+  }
+
+  test("the watchdog drops each request's timer when the request returns") {
+    for (_ <- 0 until 200) engine.sqlQuery("SELECT 1 AS one")
+    assert(Engine.watchdog.getQueue.isEmpty, Engine.watchdog.getQueue.size)
+  }
+
   test("rate-source generator stream has the event schema and streams") {
     val s = graft.ingest.PurchaseEvents.stream(spark)
     assert(s.isStreaming)

@@ -64,6 +64,10 @@ class HttpApiSpec extends SparkTestBase {
 
       val (c4, b4) = get(p, s"/list_parquet?path=$sf0001/*.parquet")
       assert(c4 == 200 && b4.endsWith(""","count":10}"""))
+
+      // a dotted or repeated column name is a reply, not an error
+      assert(post(p, "/query", """{"query": "SELECT 1 AS `a.b`, 2 AS c, 3 AS c"}""") ==
+        (200, """{"records":[{"a.b":1,"c":2,"c":3}]}"""))
     } finally api.stop()
   }
 

@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -18,6 +19,28 @@ object ReplayGate {
     release = new java.util.concurrent.CountDownLatch(1)
   }
   def pass(): Boolean = { entered.countDown(); release.await(); true }
+
+  /** Two writers replay batch `id` of `rows` through `commit`: both pass
+    * the sink's marker check before writing, and the first is held
+    * inside its write job until the second has committed. */
+  def race(commit: (DataFrame, Long) => Unit, rows: DataFrame, id: Long): Unit = {
+    val gate = udf(() => pass()).asNondeterministic()
+    reset()
+    val first = new Thread(() => commit(rows.where(gate()), id))
+    first.start()
+    assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    try commit(rows, id) finally release.countDown()
+    first.join(120000L)
+    assert(!first.isAlive)
+  }
+
+  /** The number of directories under `root` whose name starts with `prefix`. */
+  def dirsNamed(root: String, prefix: String): Int = {
+    val all = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+    try all.iterator().asScala.count(p =>
+      java.nio.file.Files.isDirectory(p) && p.getFileName.toString.startsWith(prefix))
+    finally all.close()
+  }
 }
 
 class StreamingSpec extends SparkTestBase {
@@ -86,22 +109,46 @@ class StreamingSpec extends SparkTestBase {
     val cat = new SnapshotCatalog(spark, wh)
     val rows = spark.range(0, 500, 1, 1).toDF("id")
     cat.createTable("s", "ev", rows.schema)
-    val commit = Sinks.appendBatch(cat, "s", "ev", "ckpt-race") _
-    val gate = udf(() => ReplayGate.pass()).asNondeterministic()
-    ReplayGate.reset()
-    val first = new Thread(() => commit(rows.where(gate()), 0L))
-    first.start()
-    assert(ReplayGate.entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    try commit(rows, 0L) finally ReplayGate.release.countDown()
-    first.join(120000L)
-    assert(!first.isAlive)
+    ReplayGate.race(Sinks.appendBatch(cat, "s", "ev", "ckpt-race") _, rows, 0L)
     assert(cat.read("s", "ev").count() == 500)
     assert(cat.describe("s", "ev").snapshots.size == 1)
     // the loser deleted its unreferenced write dir
-    val writeDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(wh))
-    try assert(writeDirs.iterator().asScala
-      .count(_.getFileName.toString.startsWith("write-")) == 1)
-    finally writeDirs.close()
+    assert(ReplayGate.dirsNamed(wh, "write-") == 1)
+  }
+
+  /** A CDC batch of (id, val, seq, op) rows in one partition. */
+  private def cdcBatch(rows: Seq[(Long, String, Long, String)]) = {
+    import spark.implicits._
+    rows.toDF("id", "val", "seq", "op").coalesce(1)
+  }
+
+  test("CDC sink replay race: two writers replaying the first batch append it once") {
+    val wh = tmpDir("graft-cdc-race0-wh")
+    val cat = new SnapshotCatalog(spark, wh)
+    val b0 = cdcBatch((0L until 200L).map(i => (i, s"v$i", 1L, "I")))
+    cat.createTable("db", "kv", b0.drop("op").schema)
+    ReplayGate.race(
+      Sinks.cdcMorBatch(cat, "db", "kv", Seq("id"), "seq", "op", "ckpt-cdc-race0") _, b0, 0L)
+    assert(cat.describe("db", "kv").snapshots.size == 1)
+    assert(cat.read("db", "kv").count() == 200)
+    assert(ReplayGate.dirsNamed(wh, "write-") == 1)
+  }
+
+  test("CDC sink replay race: two writers replaying one upsert batch commit it once") {
+    val wh = tmpDir("graft-cdc-race1-wh")
+    val cat = new SnapshotCatalog(spark, wh)
+    val commit = Sinks.cdcMorBatch(cat, "db", "kv", Seq("id"), "seq", "op", "ckpt-cdc-race1") _
+    commit(cdcBatch((0L until 200L).map(i => (i, s"v$i", 1L, "I"))), 0L)
+    // upsert half the keys, delete ten
+    val b1 = cdcBatch((0L until 100L).map(i => (i, s"w$i", 2L, "U")) ++
+      (190L until 200L).map(i => (i, "", 2L, "D")))
+    ReplayGate.race(commit, b1, 1L)
+    assert(cat.describe("db", "kv").snapshots.size == 2)
+    val state = cat.read("db", "kv").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(state.size == 190 && state(0L) == "w0" && state(150L) == "v150")
+    // the loser deleted both of its write dirs: one delete and one data
+    // dir remain, the winner's
+    assert(ReplayGate.dirsNamed(wh, "cdc-") == 2)
   }
 
   test("WAP sink: failing audit discards the batch unseen; passing publishes") {

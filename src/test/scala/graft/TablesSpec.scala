@@ -149,6 +149,12 @@ class TablesSpec extends SparkTestBase {
       Seq("GraftExtensions.scala"))
   }
 
+  test("replies are built as one projection: no source calls toJSON") {
+    // Dataset.toJSON is a typed mapPartitions: a reply's limit would
+    // plan as a shuffle plus a row-object round trip per row
+    assert(sources("src/main").collect { case (n, t) if t.contains("toJSON") => n }.isEmpty)
+  }
+
   /** `text` from the line declaring `sig` to the end of that member
     * (the next line closing a brace at the member's indent). */
   private def member(text: String, sig: String): (Int, Int) = {

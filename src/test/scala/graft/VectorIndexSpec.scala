@@ -9,6 +9,19 @@ import graft.streaming.VectorIndex
 
 class VectorIndexSpec extends SparkTestBase {
 
+  test("index sink replay race: two writers replaying one batch id commit it once") {
+    val wh = tmpDir("graft-vec-race-wh")
+    val cat = new SnapshotCatalog(spark, wh)
+    val rows = spark.range(0, 400, 1, 1).selectExpr("id AS vec_id", "CAST(id % 4 AS INT) AS cell")
+    cat.createTable("ann", "idx", rows.schema,
+      properties = Map(graft.catalog.PartitionSpec.PropertyKey -> "identity(cell)"))
+    ReplayGate.race(VectorIndex.commitBatch(cat, "ann", "idx", "vec-race-ckpt") _, rows, 0L)
+    assert(cat.describe("ann", "idx").snapshots.size == 1)
+    assert(cat.read("ann", "idx").count() == 400)
+    // the loser deleted its unreferenced write dir
+    assert(ReplayGate.dirsNamed(wh, "write-") == 1)
+  }
+
   test("streamed index equals the batch projection and serves knnIvfPq's answers") {
     import spark.implicits._
     val e = spark.read.parquet(s"$sf0001/embeddings.parquet")
