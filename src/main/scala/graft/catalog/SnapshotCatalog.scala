@@ -28,14 +28,19 @@ import graft.schema.SchemaCompat
   *    `v<N>.metadata.json` (id, parent, sequence number, file manifest),
   *  - `iceberg.properties` → the `properties` map in the same file.
   *
-  * Commit protocol (single-writer-safe, optimistic for concurrent
-  * writers): write `v<N+1>.metadata.json` with CREATE_NEW — a losing
-  * concurrent committer gets FileAlreadyExistsException and must retry
-  * against the new state — then ATOMIC_MOVE a temp pointer file onto
-  * `version-hint.text`. Readers resolve pointer → metadata → file list,
-  * so they always see a consistent snapshot (never a half-committed
-  * file set). Data files are immutable once written; snapshots share
-  * them structurally (append = old manifest ++ new files).
+  * Commit protocol (optimistic for concurrent writers): every commit
+  * goes through one loop, [[transact]]. An attempt loads the current
+  * `v<N>.metadata.json`, evaluates the commit's precondition against
+  * it and returns one of three outcomes — commit this metadata, already
+  * applied, or conflict — and a commit writes `v<N+1>.metadata.json`
+  * with CREATE_NEW, then ATOMIC_MOVEs a temp pointer file onto
+  * `version-hint.text`. A committer that loses the CREATE_NEW race
+  * re-runs its attempt against the new state; an outcome other than a
+  * landed commit deletes the files the commit wrote. Readers resolve
+  * pointer → metadata → file list, so they always see a consistent
+  * snapshot (never a half-committed file set). Data files are immutable
+  * once written; snapshots share them structurally (append = old
+  * manifest ++ new files).
   *
   * Capabilities: namespaces, create/list/describe, append with
   * BACKWARD-gated schema evolution (old files null-pad new columns on
@@ -114,28 +119,94 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     meta
   }
 
-  /** Metadata-only commit with cross-process optimistic retry: `build`
-    * recomputes the new metadata from freshly loaded state on each
-    * attempt (the [[updateProperties]] discipline generalized), so a
-    * lost CREATE_NEW race is absorbed instead of surfacing.
+  /** The commit loop, through which every commit but [[createTable]]'s
+    * first version goes. One attempt holds the catalog monitor only for
+    * load → `attempt` → CREATE_NEW of the next version, so in-process
+    * writers interleave between attempts. `attempt` states the commit's
+    * precondition against the freshly loaded metadata and returns
+    * [[Commit]], [[Applied]] (the change is already in, or there is
+    * nothing to do) or [[Conflict]] (the caller's plan is stale). A lost
+    * CREATE_NEW race — another process or catalog instance committed
+    * that version — backs off outside the monitor and re-runs the
+    * attempt. Ending already applied, in a conflict, in a failed
+    * attempt or with every race lost deletes the `written` dirs, which
+    * nothing references then; work that must follow the commit
+    * (expiry's reap) runs after the loop returns.
     */
-  private def retryMetaCommit(ns: String, name: String)(
-      build: TableMeta => TableMeta): TableMeta = {
-    var attempt = 0
+  private def transact(ns: String, name: String, written: Seq[Path] = Nil)(
+      attempt: TableMeta => Outcome): TableMeta = {
+    def discard(): Unit = written.foreach(deleteRecursively)
+    var lost = 0
     while (true) {
-      val (version, meta) = loadMeta(ns, name)
-      val newMeta = build(meta)
-      try {
-        commit(ns, name, version + 1, newMeta)
-        return newMeta
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < MaxCommitRetries =>
-          attempt += 1
-          Thread.sleep(1L << math.min(attempt, 6))
+      val landed: Option[TableMeta] = synchronized {
+        val (version, meta) = loadMeta(ns, name)
+        val outcome =
+          try attempt(meta)
+          catch { case scala.util.control.NonFatal(e) => discard(); throw e }
+        outcome match {
+          case Commit(next) =>
+            try { commit(ns, name, version + 1, next); Some(next) }
+            catch {
+              case e: java.nio.file.FileAlreadyExistsException =>
+                if (lost < MaxCommitRetries) None else { discard(); throw e }
+            }
+          case Applied(found) => discard(); Some(found)
+          case Conflict(e) => discard(); throw e
+        }
+      }
+      landed match {
+        case Some(m) => return m
+        case None =>
+          lost += 1
+          // the winner may not have moved the pointer yet, in which
+          // case the reload still sees the old version — back off so
+          // the pointer lands instead of burning all retries spinning
+          Thread.sleep(1L << math.min(lost, 6))
       }
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** A streaming writer's outcome: [[Commit]] `next` while `expect`
+    * holds on `meta`, else [[Applied]] — another writer already
+    * recorded this batch or window.
+    */
+  private def unlessApplied(expect: Option[Expect], meta: TableMeta)(
+      next: => TableMeta): Outcome =
+    if (expect.forall(_.holds(meta))) Commit(next) else Applied(meta)
+
+  /** The planned-rewrite precondition. A plan made from `plan` (and
+    * against the caller's `expected` snapshot, when given) commits only
+    * while `fresh` still has the head — the branch ref or the current
+    * pointer — schema and field ids it planned against; otherwise its
+    * files, positions or colIds stamps may be wrong, and the
+    * [[Conflict]] sends the caller back to re-plan
+    * (Engine.retryConcurrent's contract).
+    */
+  private def stale(ns: String, name: String, plan: TableMeta,
+      fresh: TableMeta, toBranch: Option[String] = None,
+      expected: Option[Long] = None): Option[Conflict] = {
+    def head(m: TableMeta) = toBranch.fold(m.currentSnapshotId)(m.refs.get)
+    val why =
+      if (expected.exists(e => !head(plan).contains(e)))
+        s"moved to snapshot ${head(plan).getOrElse("none")} " +
+          s"(planned against ${expected.get})"
+      else if (head(fresh) != head(plan)) "moved since the plan"
+      else if (fresh.schemaJson != plan.schemaJson ||
+          fresh.fieldIds != plan.fieldIds) "schema evolved since the plan"
+      else return None
+    Some(Conflict(new java.util.ConcurrentModificationException(
+      s"$ns.$name $why — re-plan and retry")))
+  }
+
+  /** A fresh write directory under the table's data dir, named by a
+    * unique write id: two writers that load the same version pick the
+    * same snapshot id, so a loser's discard must never reach the
+    * winner's files.
+    */
+  private def writeDir(ns: String, name: String, kind: String): Path =
+    dataDir(ns, name).resolve(
+      s"$kind-${java.util.UUID.randomUUID().toString.take(8)}")
 
   /** Explicit schema evolution — `ALTER TABLE … ADD COLUMNS` as a
     * METADATA-ONLY commit (no snapshot, no data IO): the declared
@@ -146,25 +217,23 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     */
   def addColumns(ns: String, name: String,
       fields: Seq[org.apache.spark.sql.types.StructField]): TableMeta =
-    synchronized {
-      retryMetaCommit(ns, name) { meta =>
-        val current = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-        fields.foreach(f => require(!current.fieldNames.contains(f.name),
-          s"column ${f.name} already exists in $ns.$name"))
-        val target = StructType(current.fields ++
-          fields.map(_.copy(nullable = true)))
-        val evolved = SchemaCompat.evolve(current, target) match {
-          case Right(s) => s
-          case Left(violations) =>
-            throw new IllegalArgumentException(
-              "schema not BACKWARD-compatible: " +
-                violations.map(v => s"${v.field}: ${v.reason}").mkString("; "))
-        }
-        val (extIds, extLast) =
-          extendFieldIds(meta.fieldIds, meta.lastFieldId, evolved)
-        meta.copy(schemaJson = evolved.json,
-          fieldIds = extIds, lastFieldId = extLast)
+    transact(ns, name) { meta =>
+      val current = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+      fields.foreach(f => require(!current.fieldNames.contains(f.name),
+        s"column ${f.name} already exists in $ns.$name"))
+      val target = StructType(current.fields ++
+        fields.map(_.copy(nullable = true)))
+      val evolved = SchemaCompat.evolve(current, target) match {
+        case Right(s) => s
+        case Left(violations) =>
+          throw new IllegalArgumentException(
+            "schema not BACKWARD-compatible: " +
+              violations.map(v => s"${v.field}: ${v.reason}").mkString("; "))
       }
+      val (extIds, extLast) =
+        extendFieldIds(meta.fieldIds, meta.lastFieldId, evolved)
+      Commit(meta.copy(schemaJson = evolved.json,
+        fieldIds = extIds, lastFieldId = extLast))
     }
 
   /** `ALTER TABLE … ALTER COLUMN <c> TYPE <t>` — Iceberg's SAFE type
@@ -197,8 +266,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * gate).
     */
   def promoteColumnTypes(ns: String, name: String,
-      changes: Seq[(String, DataType)]): TableMeta = synchronized {
-    retryMetaCommit(ns, name) { meta =>
+      changes: Seq[(String, DataType)]): TableMeta =
+    transact(ns, name) { meta =>
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       changes.foreach { case (colName, newType) =>
         require(schema.fieldNames.contains(colName),
@@ -230,9 +299,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           case Some(to) => f.copy(dataType = to)
           case None => f
         }))
-      meta.copy(schemaJson = newSchema.json)
+      Commit(meta.copy(schemaJson = newSchema.json))
     }
-  }
 
   /** Whether a partition transform derives the SAME pval from a value
     * before and after the promotion. `bucket` never does for int→long
@@ -294,46 +362,41 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * mapping are backfilled with the at-activation identity mapping.
     */
   def renameColumn(ns: String, name: String, from: String,
-      to: String): TableMeta = synchronized {
-    retryMetaCommit(ns, name) { meta =>
-      renameBuild(ns, name, from, to, meta)
+      to: String): TableMeta = {
+    transact(ns, name) { meta =>
+      val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
+      require(schema.fieldNames.contains(from), s"no column $from in $ns.$name")
+      require(!schema.fieldNames.contains(to),
+        s"column $to already exists in $ns.$name")
+      require(!PartitionSpec.of(meta.properties).exists(_.column == from),
+        s"cannot rename partition column $from — evolve the spec first")
+      val ids0 = activatedIds(meta, schema)
+      val newSchema = StructType(schema.fields.map(f =>
+        if (f.name == from) f.copy(name = to) else f))
+      val props = meta.properties.get(BloomColumnsProp) match {
+        case Some(cs) => meta.properties + (BloomColumnsProp ->
+          cs.split(",").map(_.trim).map(c => if (c == from) to else c)
+            .mkString(","))
+        case None => meta.properties
+      }
+      // O(1) rename (round 16): NO snapshot or manifest is touched —
+      // the rename is recorded as a [[NameLink]] in the slim versioned
+      // metadata and every manifest entry written before it remaps at
+      // LOAD ([[remapNames]]). Stats, blooms, and eq-delete key columns
+      // of a million-file history follow the new name without a byte of
+      // manifest IO.
+      Commit(meta.copy(schemaJson = newSchema.json,
+        fieldIds = (ids0 - from) + (to -> ids0(from)),
+        lastFieldId = math.max(meta.lastFieldId, ids0.values.max),
+        nameLinks = meta.nameLinks :+
+          NameLink(from, Some(to), nextSeqOf(meta)),
+        activationIds =
+          if (meta.fieldIds.nonEmpty) meta.activationIds else ids0,
+        properties = props))
     }: Unit
     // reload: the returned view must carry the remapped (current-name)
     // manifest entries, not the pre-DDL in-memory ones
     describe(ns, name)
-  }
-
-  private def renameBuild(ns: String, name: String, from: String,
-      to: String, meta: TableMeta): TableMeta = {
-    val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
-    require(schema.fieldNames.contains(from), s"no column $from in $ns.$name")
-    require(!schema.fieldNames.contains(to),
-      s"column $to already exists in $ns.$name")
-    require(!partitionSpecOf(ns, name).exists(_.column == from),
-      s"cannot rename partition column $from — evolve the spec first")
-    val ids0 = activatedIds(meta, schema)
-    val newSchema = StructType(schema.fields.map(f =>
-      if (f.name == from) f.copy(name = to) else f))
-    val props = meta.properties.get(BloomColumnsProp) match {
-      case Some(cs) => meta.properties + (BloomColumnsProp ->
-        cs.split(",").map(_.trim).map(c => if (c == from) to else c)
-          .mkString(","))
-      case None => meta.properties
-    }
-    // O(1) rename (round 16): NO snapshot or manifest is touched —
-    // the rename is recorded as a [[NameLink]] in the slim versioned
-    // metadata and every manifest entry written before it remaps at
-    // LOAD ([[remapNames]]). Stats, blooms, and eq-delete key columns
-    // of a million-file history follow the new name without a byte of
-    // manifest IO.
-    meta.copy(schemaJson = newSchema.json,
-      fieldIds = (ids0 - from) + (to -> ids0(from)),
-      lastFieldId = math.max(meta.lastFieldId, ids0.values.max),
-      nameLinks = meta.nameLinks :+
-        NameLink(from, Some(to), nextSeqOf(meta)),
-      activationIds =
-        if (meta.fieldIds.nonEmpty) meta.activationIds else ids0,
-      properties = props)
   }
 
   /** The sequence number the NEXT data commit would take — the name-
@@ -343,21 +406,24 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   private def nextSeqOf(meta: TableMeta): Long =
     meta.snapshots.map(_.sequenceNumber).maxOption.getOrElse(0L) + 1
 
+  /** The snapshot id the next snapshot commit takes. */
+  private def nextIdOf(meta: TableMeta): Long =
+    meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
+
   /** `ALTER TABLE … DROP COLUMN` as a METADATA-ONLY commit: the
     * declared schema loses the field, its id is retired, and its stats/
     * bloom entries are removed from every snapshot (a later re-ADD of
     * the same name gets a FRESH id, so old files' data and stats can
     * never resurface under it). No data file is touched.
     */
-  def dropColumn(ns: String, name: String, colName: String): TableMeta =
-    synchronized {
-      retryMetaCommit(ns, name) { meta =>
+  def dropColumn(ns: String, name: String, colName: String): TableMeta = {
+    transact(ns, name) { meta =>
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       require(schema.fieldNames.contains(colName),
         s"no column $colName in $ns.$name")
       require(schema.fields.length > 1,
         s"cannot drop the only column of $ns.$name")
-      require(!partitionSpecOf(ns, name).exists(_.column == colName),
+      require(!PartitionSpec.of(meta.properties).exists(_.column == colName),
         s"cannot drop partition column $colName — evolve the spec first")
       // an equality delete keyed on the column would become
       // unresolvable (readers anti-join on schema(col)), making every
@@ -379,17 +445,17 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // pre-link manifest entries at LOAD — no manifest rewrite; a
       // later re-ADD of the name gets a fresh field id and fresh
       // entries (post-link seq), so old data/stats never resurface
-      meta.copy(schemaJson = newSchema.json,
+      Commit(meta.copy(schemaJson = newSchema.json,
         fieldIds = ids0 - colName,
         lastFieldId = math.max(meta.lastFieldId, ids0.values.max),
         nameLinks = meta.nameLinks :+
           NameLink(colName, None, nextSeqOf(meta)),
         activationIds =
           if (meta.fieldIds.nonEmpty) meta.activationIds else ids0,
-        properties = props)
-      }: Unit
-      describe(ns, name) // remapped (current-name) view
-    }
+        properties = props))
+    }: Unit
+    describe(ns, name) // remapped (current-name) view
+  }
 
   /** Drop a table (the purge form — Iceberg's `DROP TABLE … PURGE`):
     * the POINTER is removed first, so a reader racing the drop sees a
@@ -456,23 +522,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * property of the very commit that added the rows means a replayed
     * batch either sees its id already recorded (and skips) or the
     * original commit never happened — no window where rows landed but
-    * the marker didn't.
+    * the marker didn't. `expect` is such a writer's precondition
+    * ([[SnapshotCatalog.Expect]]): when two writers replay one batch,
+    * the one whose attempt finds the marker moved deletes its files and
+    * returns the table as it found it.
     */
   def append(ns: String, name: String, df: DataFrame,
-      extraProperties: Map[String, String]): TableMeta =
-    appendImpl(ns, name, df, toBranch = None, extraProperties)
-
-  /** [[append]] of an at-least-once writer's batch `batchId`, recorded
-    * under property `key` in the same commit. The marker is checked
-    * against the metadata each commit attempt loads, so when two
-    * writers replay one batch only the first commits: the other finds
-    * the id recorded, deletes its own unreferenced files and returns
-    * the table as it found it.
-    */
-  def appendOnce(ns: String, name: String, df: DataFrame, key: String,
-      batchId: Long): TableMeta =
-    appendImpl(ns, name, df, toBranch = None, Map(key -> batchId.toString),
-      recorded = SnapshotCatalog.batchRecorded(_, key, batchId))
+      extraProperties: Map[String, String],
+      expect: Option[Expect] = None): TableMeta =
+    appendImpl(ns, name, df, toBranch = None, extraProperties, expect = expect)
 
   /** Append to a named BRANCH: the new snapshot chains off the branch
     * head and the branch ref moves to it; the table's current pointer
@@ -482,8 +540,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * no reader ever saw the bad batch.
     */
   def appendToBranch(ns: String, name: String, branch: String,
-      df: DataFrame): TableMeta =
-    appendImpl(ns, name, df, toBranch = Some(branch))
+      df: DataFrame, expect: Option[Expect] = None): TableMeta =
+    appendImpl(ns, name, df, toBranch = Some(branch), expect = expect)
 
   /** INSERT OVERWRITE semantics: one atomic snapshot whose manifest
     * REPLACES the table's file list with the batch's files — old data
@@ -493,9 +551,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     */
   def overwrite(ns: String, name: String, df: DataFrame,
       extraProperties: Map[String, String] = Map.empty,
-      toBranch: Option[String] = None): TableMeta =
+      toBranch: Option[String] = None,
+      expect: Option[Expect] = None): TableMeta =
     appendImpl(ns, name, df, toBranch, extraProperties,
-      replaceManifest = true)
+      replaceManifest = true, expect = expect)
 
   /** `CREATE OR REPLACE TABLE … AS SELECT` (RTAS): one atomic commit
     * that replaces BOTH the content (an overwrite — empty manifest of
@@ -519,18 +578,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       extraProperties: Map[String, String] = Map.empty,
       replaceManifest: Boolean = false,
       replaceSchema: Boolean = false,
-      recorded: TableMeta => Boolean = _ => false): TableMeta =
+      expect: Option[Expect] = None): TableMeta =
     {
       // Data files are written once, into a dir keyed by a unique
-      // write id; the commit loop below re-reads table state on each
-      // optimistic-concurrency conflict and re-attaches the same files
-      // — the Iceberg retry protocol (files immutable, metadata
-      // contended). The write runs OUTSIDE the catalog lock (round 14:
-      // the streaming-append hot path must not serialize every other
-      // in-process commit behind its file IO); only each commit
-      // attempt below serializes.
-      val writeId = java.util.UUID.randomUUID().toString.take(8)
-      val snapDir = dataDir(ns, name).resolve(s"write-$writeId")
+      // write id, OUTSIDE the catalog lock (round 14: the streaming-
+      // append hot path must not serialize every other in-process
+      // commit behind its file IO); each commit attempt rebuilds the
+      // snapshot on the state it loads and re-attaches the same files —
+      // the Iceberg retry protocol (files immutable, metadata
+      // contended).
+      val snapDir = writeDir(ns, name, "write")
       // Hidden partitioning (PartitionSpec scaladoc): the spec's value
       // expression splits the append into VALUE-PURE files via a
       // partitionBy on a derived column that never reaches file
@@ -572,19 +629,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val stats = writeFiles(toWrite, snapDir, df.schema,
         bloomColsFor(ns, name, df.schema), specStr)
       val newFiles = stats.map(_.path)
-
-      var attempt = 0
-      while (true) {
-        // each ATTEMPT (load → build → commit) holds the lock, so
-        // in-process writers interleave between attempts instead of
-        // colliding on CREATE_NEW; cross-process races still resolve
-        // through the CREATE_NEW retry below
-        val committed: Option[TableMeta] = synchronized {
-        val (version, meta) = loadMeta(ns, name)
-        if (recorded(meta)) {
-          deleteRecursively(snapDir)
-          return meta
-        }
+      transact(ns, name, Seq(snapDir)) { meta => unlessApplied(expect, meta) {
         // base = branch head (re-resolved per retry — the branch may
         // have moved) or the table's current snapshot
         val base = toBranch match {
@@ -613,8 +658,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
                 "schema not BACKWARD-compatible: " +
                   violations.map(v => s"${v.field}: ${v.reason}").mkString("; "))
           }
-        val snapshotId = meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-        val seqNum = meta.snapshots.map(_.sequenceNumber).maxOption.getOrElse(0L) + 1
+        val snapshotId = nextIdOf(meta)
+        val seqNum = nextSeqOf(meta)
         // once field ids are active, evolution-added columns get fresh
         // ids and every new file records its physical-name mapping;
         // every new file also records its commit sequence (the gate
@@ -672,41 +717,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
             if (replaceManifest) Seq.empty
             else base.map(_.eqDeletes).getOrElse(Seq.empty),
           operation = Some(if (replaceManifest) "overwrite" else "append"))
-        val newMeta = toBranch match {
-          case Some(b) => meta.copy(
-            schemaJson = evolved.json,
-            fieldIds = newIds, lastFieldId = newLast,
-            activationIds = rtasActivation,
-            snapshots = meta.snapshots :+ snap,
-            refs = meta.refs + (b -> snapshotId),
-            properties = meta.properties ++ extraProperties)
-          case None => meta.copy(
-            schemaJson = evolved.json,
-            fieldIds = newIds, lastFieldId = newLast,
-            activationIds = rtasActivation,
-            currentSnapshotId = Some(snapshotId),
-            snapshots = meta.snapshots :+ snap,
-            properties = meta.properties ++ extraProperties)
-        }
-        try {
-          commit(ns, name, version + 1, newMeta)
-          Some(newMeta)
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException if attempt < MaxCommitRetries =>
-            None // lost a cross-process race: reload state and retry
-        }
-        }
-        committed match {
-          case Some(m) => return m
-          case None =>
-            attempt += 1
-            // the winner may not have moved the pointer yet, in which
-            // case the reload still sees the old version — back off so
-            // the pointer lands instead of burning all retries spinning
-            Thread.sleep(1L << math.min(attempt, 6))
-        }
-      }
-      throw new IllegalStateException("unreachable")
+        advanced(meta, toBranch, snap).copy(
+          schemaJson = evolved.json,
+          fieldIds = newIds, lastFieldId = newLast,
+          activationIds = rtasActivation,
+          properties = meta.properties ++ extraProperties)
+      }}
     }
 
   /** Update table properties (merge; null-out by empty value is not
@@ -715,25 +731,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * appends — existing files keep their recorded partition values
     * (or none) and every pruning path treats a non-matching/missing
     * pval conservatively, so readers never need to know which spec
-    * era a file came from. Same versioned-commit protocol as appends.
+    * era a file came from. Same versioned-commit protocol as appends;
+    * `expect` makes it a streaming writer's bookmark commit.
     */
   def updateProperties(ns: String, name: String,
-      props: Map[String, String]): TableMeta = synchronized {
-    var attempt = 0
-    while (true) {
-      val (version, meta) = loadMeta(ns, name)
-      val newMeta = meta.copy(properties = meta.properties ++ props)
-      try {
-        commit(ns, name, version + 1, newMeta)
-        return newMeta
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < MaxCommitRetries =>
-          attempt += 1
-          Thread.sleep(1L << math.min(attempt, 6))
-      }
+      props: Map[String, String],
+      expect: Option[Expect] = None): TableMeta =
+    transact(ns, name) { meta =>
+      unlessApplied(expect, meta)(
+        meta.copy(properties = meta.properties ++ props))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Remove table properties (the `ALTER TABLE … UNSET TBLPROPERTIES`
     * primitive): metadata-only commit via the same optimistic retry.
@@ -741,17 +748,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * contract) — evaluated against freshly loaded state per attempt.
     */
   def removeProperties(ns: String, name: String, keys: Seq[String],
-      ifExists: Boolean = false): TableMeta = synchronized {
-    retryMetaCommit(ns, name) { meta =>
+      ifExists: Boolean = false): TableMeta =
+    transact(ns, name) { meta =>
       if (!ifExists) {
         val missing = keys.filterNot(meta.properties.contains)
         require(missing.isEmpty,
           s"no such properties on $ns.$name: ${missing.mkString(", ")} " +
             "(use IF EXISTS)")
       }
-      meta.copy(properties = meta.properties -- keys)
+      Commit(meta.copy(properties = meta.properties -- keys))
     }
-  }
 
   /** Iceberg-style METADATA TABLES: the table's commit history, file
     * inventory, and refs exposed as DataFrames (`db.t.snapshots`,
@@ -905,18 +911,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     createRef(ns, name, tag, at, isTag = true)
 
   private def createRef(ns: String, name: String, ref: String,
-      at: Option[Long], isTag: Boolean): TableMeta = synchronized {
-    val (version, meta) = loadMeta(ns, name)
-    require(!meta.refs.contains(ref), s"ref '$ref' already exists in $ns.$name")
-    val snapId = at.orElse(meta.currentSnapshotId).getOrElse(
-      throw new IllegalStateException(s"$ns.$name has no snapshot to reference"))
-    require(meta.snapshots.exists(_.snapshotId == snapId),
-      s"no snapshot $snapId in $ns.$name")
-    val newMeta = meta.copy(refs = meta.refs + (ref -> snapId),
-      tagNames = if (isTag) meta.tagNames :+ ref else meta.tagNames)
-    commit(ns, name, version + 1, newMeta)
-    newMeta
-  }
+      at: Option[Long], isTag: Boolean): TableMeta =
+    transact(ns, name) { meta =>
+      require(!meta.refs.contains(ref), s"ref '$ref' already exists in $ns.$name")
+      val snapId = at.orElse(meta.currentSnapshotId).getOrElse(
+        throw new IllegalStateException(s"$ns.$name has no snapshot to reference"))
+      require(meta.snapshots.exists(_.snapshotId == snapId),
+        s"no snapshot $snapId in $ns.$name")
+      Commit(meta.copy(refs = meta.refs + (ref -> snapId),
+        tagNames = if (isTag) meta.tagNames :+ ref else meta.tagNames))
+    }
 
   /** The base snapshot a WRITE targets: `toBranch`'s head when set
     * (tags refused — immutable), else the table's current snapshot.
@@ -960,25 +964,22 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * pattern). Tags stay immutable — moving one is refused.
     */
   def setRef(ns: String, name: String, ref: String,
-      snapshotId: Long): TableMeta = synchronized {
-    retryMetaCommit(ns, name) { meta =>
+      snapshotId: Long): TableMeta =
+    transact(ns, name) { meta =>
       require(!meta.tagNames.contains(ref),
         s"'$ref' is a tag — tags are immutable")
       require(meta.snapshots.exists(_.snapshotId == snapshotId),
         s"no snapshot $snapshotId in $ns.$name")
-      meta.copy(refs = meta.refs + (ref -> snapshotId))
+      Commit(meta.copy(refs = meta.refs + (ref -> snapshotId)))
     }
-  }
 
   /** Drop a branch or tag; snapshots stay until [[expireSnapshots]]. */
-  def dropRef(ns: String, name: String, ref: String): TableMeta = synchronized {
-    val (version, meta) = loadMeta(ns, name)
-    require(meta.refs.contains(ref), s"no ref '$ref' in $ns.$name")
-    val newMeta = meta.copy(refs = meta.refs - ref,
-      tagNames = meta.tagNames.filterNot(_ == ref))
-    commit(ns, name, version + 1, newMeta)
-    newMeta
-  }
+  def dropRef(ns: String, name: String, ref: String): TableMeta =
+    transact(ns, name) { meta =>
+      require(meta.refs.contains(ref), s"no ref '$ref' in $ns.$name")
+      Commit(meta.copy(refs = meta.refs - ref,
+        tagNames = meta.tagNames.filterNot(_ == ref)))
+    }
 
   /** Read the table at a named ref (tag or branch head). */
   def readRef(ns: String, name: String, ref: String): DataFrame = {
@@ -1000,29 +1001,27 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * failure mode a table format must never have. A refused publish
     * means the branch is stale: re-stage against the new current state
     * (the WAP sink's retried batch does exactly that) or re-point the
-    * branch and re-apply.
+    * branch and re-apply. `expect` makes it a streaming writer's
+    * marker commit ([[append]]).
     */
   def publish(ns: String, name: String, branch: String,
-      extraProperties: Map[String, String] = Map.empty): TableMeta =
-    synchronized {
-      val (version, meta) = loadMeta(ns, name)
+      extraProperties: Map[String, String] = Map.empty,
+      expect: Option[Expect] = None): TableMeta =
+    transact(ns, name) { meta => unlessApplied(expect, meta) {
       require(meta.refs.contains(branch), s"no ref '$branch' in $ns.$name")
       require(!meta.tagNames.contains(branch), s"'$branch' is a tag")
       val head = meta.refs(branch)
       meta.currentSnapshotId.foreach { cur =>
-        val ancestors = ancestorIds(meta.snapshots, head)
-        if (!ancestors.contains(cur))
+        if (!ancestorIds(meta.snapshots, head).contains(cur))
           throw new java.util.ConcurrentModificationException(
             s"cannot fast-forward $ns.$name to branch '$branch': the " +
               s"current snapshot $cur is not an ancestor of the branch " +
               s"head $head — the table moved since the branch forked; " +
               "re-stage the branch against the new current state")
       }
-      val newMeta = meta.copy(currentSnapshotId = Some(head),
+      meta.copy(currentSnapshotId = Some(head),
         properties = meta.properties ++ extraProperties)
-      commit(ns, name, version + 1, newMeta)
-      newMeta
-    }
+    }}
 
   /** The table's configured bloom columns, restricted to types with a
     * canonical string rendering (string + integral): a float bloom
@@ -1670,30 +1669,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     *   the [[append]]-style idempotence hook (at-least-once streaming
     *   replays record their batch id in the very commit that applied
     *   the batch).
+    * @param expect such a writer's precondition ([[append]]): an
+    *   attempt that finds the marker moved deletes its write dirs and
+    *   returns the table as it found it.
     */
   def cdcUpsert(ns: String, name: String, rows: DataFrame,
       deletes: DataFrame, keyCols: Seq[String],
       extraProperties: Map[String, String] = Map.empty,
-      toBranch: Option[String] = None): TableMeta =
-    cdcUpsertImpl(ns, name, rows, deletes, keyCols, extraProperties, toBranch)
-
-  /** [[cdcUpsert]] of an at-least-once writer's batch `batchId`, the
-    * [[appendOnce]] contract: the marker under `key` rides the commit
-    * and is checked against the metadata each attempt loads, so of two
-    * writers replaying one batch only the first commits; the other
-    * deletes its own write dirs and returns the table as it found it.
-    */
-  def cdcUpsertOnce(ns: String, name: String, rows: DataFrame,
-      deletes: DataFrame, keyCols: Seq[String], key: String,
-      batchId: Long): TableMeta =
-    cdcUpsertImpl(ns, name, rows, deletes, keyCols,
-      Map(key -> batchId.toString), toBranch = None,
-      recorded = SnapshotCatalog.batchRecorded(_, key, batchId))
-
-  private def cdcUpsertImpl(ns: String, name: String, rows: DataFrame,
-      deletes: DataFrame, keyCols: Seq[String],
-      extraProperties: Map[String, String], toBranch: Option[String],
-      recorded: TableMeta => Boolean = _ => false): TableMeta =
+      toBranch: Option[String] = None,
+      expect: Option[Expect] = None): TableMeta =
     {
       import org.apache.spark.sql.functions.col
       require(keyCols.nonEmpty, "cdcUpsert needs at least one key column")
@@ -1701,22 +1685,20 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val schema = DataType.fromJson(meta0.schemaJson).asInstanceOf[StructType]
       keyCols.foreach(c => require(schema.fieldNames.contains(c),
         s"no column $c in $ns.$name"))
-      // Files are written ONCE under a unique write id; the commit loop
-      // below re-reads table state on each optimistic-concurrency
-      // conflict and re-attaches the same files — safe here because a
-      // CDC batch's content is independent of the base snapshot (the
-      // equality delete re-gates on whatever sequence number the
-      // winning retry lands at), the appendImpl retry discipline.
-      val writeId = java.util.UUID.randomUUID().toString.take(8)
+      // Files are written ONCE under a unique write id; each commit
+      // attempt rebuilds the snapshot on the state it loads and
+      // re-attaches the same files — safe here because a CDC batch's
+      // content is independent of the base snapshot (the equality
+      // delete re-gates on whatever sequence number the winning attempt
+      // lands at), the appendImpl retry discipline.
       val keyCast = keyCols.map(c => col(c).cast(schema(c).dataType).as(c))
       val touched = rows.select(keyCast: _*)
         .unionByName(deletes.select(keyCast: _*))
         .dropDuplicates(keyCols)
-      val delDir = dataDir(ns, name).resolve(s"cdc-$writeId-delete-eq")
+      val delDir = writeDir(ns, name, "cdc-delete-eq")
       val keySchema = StructType(keyCols.map(c => schema(c)))
       val delStats = writeFiles(touched.coalesce(1), delDir, keySchema)
-      val newDelFiles = delStats.map(_.path)
-      val dataDirNew = dataDir(ns, name).resolve(s"cdc-$writeId-data")
+      val dataDirNew = writeDir(ns, name, "cdc-data")
       // write the batch's OWN columns (cast to declared types): a batch
       // narrower than a concurrently-evolved table schema is fine —
       // readers null-pad the missing columns, the append discipline
@@ -1739,18 +1721,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       val stats0 = writeFiles(written, dataDirNew, schema,
         bloomColsFor(ns, name, schema), specStr)
       val newFiles = stats0.map(_.path)
-      var attempt = 0
-      while (true) {
-        // per-attempt lock (appendImpl discipline): the batch's file
-        // writes above ran UNLOCKED, so a CDC commit never serializes
-        // other in-process commits behind its IO
-        val committed: Option[TableMeta] = synchronized {
-        val (version, meta) = loadMeta(ns, name)
-        if (recorded(meta)) {
-          deleteRecursively(delDir)
-          deleteRecursively(dataDirNew)
-          return meta
-        }
+      transact(ns, name, Seq(delDir, dataDirNew)) { meta => unlessApplied(expect, meta) {
         val current = writeBase(meta, ns, name, toBranch).getOrElse(
           throw new IllegalStateException(s"$ns.$name has no data"))
         // revalidate against the FRESHLY loaded state every attempt: a
@@ -1767,18 +1738,16 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           throw new java.util.ConcurrentModificationException(
             s"$ns.$name columns ${renamedAway.distinct.mkString(", ")} were " +
               "renamed/dropped concurrently with this CDC batch — replay it")
-        val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-        val seqNum = meta.snapshots.map(_.sequenceNumber).max + 1
-        val newEq = newDelFiles.map { f =>
-          // per-FILE row count (the write coalesces to one part, but a
-          // multi-part delete write must not duplicate the total);
-          // physCols pins the parquet's physical key names for renames;
-          // keyMin/keyMax make later candidate pruning metadata-only
-          val st = delStats.find(_.path == f)
-          EqDeleteMeta(f, keyCols, seqNum, st.map(_.rows).getOrElse(0L),
+        val snapshotId = nextIdOf(meta)
+        val seqNum = nextSeqOf(meta)
+        // per-FILE row count (the write coalesces to one part, but a
+        // multi-part delete write must not duplicate the total);
+        // physCols pins the parquet's physical key names for renames;
+        // keyMin/keyMax make later candidate pruning metadata-only
+        val newEq = delStats.map(st =>
+          EqDeleteMeta(st.path, keyCols, seqNum, st.rows,
             physCols = Some(keyCols),
-            keyMin = st.map(_.min), keyMax = st.map(_.max))
-        }
+            keyMin = Some(st.min), keyMax = Some(st.max)))
         val newStats = stats0.map(_.copy(
           colIds = colIdsStamp(meta.fieldIds, writtenSchema), seq = Some(seqNum)))
         val snap = SnapshotMeta(
@@ -1793,24 +1762,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           deleteFileStats = current.deleteFileStats,
           eqDeletes = current.eqDeletes ++ newEq,
           operation = Some("overwrite")) // row-delta (Iceberg's label)
-        val newMeta = advanced(meta, toBranch, snap)
+        advanced(meta, toBranch, snap)
           .copy(properties = meta.properties ++ extraProperties)
-        try {
-          commit(ns, name, version + 1, newMeta)
-          Some(newMeta)
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException if attempt < MaxCommitRetries =>
-            None
-        }
-        }
-        committed match {
-          case Some(m) => return m
-          case None =>
-            attempt += 1
-            Thread.sleep(1L << math.min(attempt, 6))
-        }
-      }
-      throw new IllegalStateException("unreachable")
+      }}
     }
 
   /** Copy-on-write MERGE (upsert) on a numeric key column: incoming
@@ -1872,7 +1826,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           snap => prunedFiles(snap, keyCol, b.getDouble(0), b.getDouble(1))
       }
     synchronized {
-      val (version, meta) = loadMeta(ns, name)
+      val (_, meta) = loadMeta(ns, name)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       val current = writeBase(meta, ns, name, toBranch).get
       val touched = touchedIn(current)
@@ -1883,20 +1837,18 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         else readFilesOf(current, schema, touched, meta.fieldIds)
           .join(df.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
       val out = remain.unionByName(df, allowMissingColumns = true)
-      val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-      val snapDir = dataDir(ns, name).resolve(s"snap-$snapshotId-upsert")
+      val snapDir = writeDir(ns, name, "upsert")
+      val carryDir = writeDir(ns, name, "delete-carry")
       val newStats = writeFiles(out, snapDir, out.schema,
           bloomColsFor(ns, name, out.schema))
-        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, out.schema),
-          seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-      val newFiles = newStats.map(_.path)
+        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, out.schema)))
       val untouchedStats = current.fileStats.filter(s => untouched.contains(s.path))
-      val (carryDel, carryDelStats) =
-        carryDeletes(ns, name, snapshotId.toString, current, untouched)
-      (commitReplacing(ns, name, version, meta, snapshotId,
-        untouched ++ newFiles, untouchedStats ++ newStats,
-        carryDel, carryDelStats, current.eqDeletes,
-        toBranch, Some(current.snapshotId)), touched.size)
+      val (carryDel, carryDelStats) = carryDeletes(current, untouched, carryDir)
+      (transact(ns, name, Seq(snapDir, carryDir)) { m =>
+        stale(ns, name, meta, m, toBranch).getOrElse(Commit(replacing(m,
+          untouched, untouchedStats, newStats, carryDel, carryDelStats,
+          current.eqDeletes, toBranch)))
+      }, touched.size)
     }
   }
 
@@ -1911,7 +1863,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   def deleteWhere(ns: String, name: String, column: String,
       lower: Double, upper: Double): TableMeta =
     synchronized {
-      val (version, meta) = loadMeta(ns, name)
+      val (_, meta) = loadMeta(ns, name)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       val current = meta.currentSnapshot.getOrElse(
         throw new IllegalStateException(s"$ns.$name has no data"))
@@ -1925,23 +1877,22 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         bound(f).exists { case (mn, mx) => mn >= lower && mx <= upper })
       val (disjoint, straddling) = rest.partition(f =>
         bound(f).exists { case (mn, mx) => mx < lower || mn > upper })
-      val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
+      val snapDir = writeDir(ns, name, "delete")
+      val carryDir = writeDir(ns, name, "delete-carry")
       val newStats =
         if (straddling.isEmpty) Seq.empty
         else writeFiles(
             readFilesOf(current, schema, straddling, meta.fieldIds)
               .filter(!col(column).between(lower, upper)),
-            dataDir(ns, name).resolve(s"snap-$snapshotId-delete"), schema,
-            bloomColsFor(ns, name, schema))
-          .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-            seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-      val keptFiles = newStats.map(_.path)
+            snapDir, schema, bloomColsFor(ns, name, schema))
+          .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema)))
       val keptStats = current.fileStats.filter(s => disjoint.contains(s.path))
-      val (carryDel, carryDelStats) =
-        carryDeletes(ns, name, snapshotId.toString, current, disjoint)
-      commitReplacing(ns, name, version, meta, snapshotId,
-        disjoint ++ keptFiles, keptStats ++ newStats, carryDel, carryDelStats,
-        current.eqDeletes, operation = "delete")
+      val (carryDel, carryDelStats) = carryDeletes(current, disjoint, carryDir)
+      transact(ns, name, Seq(snapDir, carryDir)) { m =>
+        stale(ns, name, meta, m).getOrElse(Commit(replacing(m, disjoint,
+          keptStats, newStats, carryDel, carryDelStats, current.eqDeletes,
+          operation = "delete")))
+      }
     }
 
   /** Copy-on-write rewrite of a TARGETED file subset — the primitive
@@ -1975,29 +1926,18 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // Plan + write OUTSIDE the catalog lock (round 14, the
       // compactFileGroups discipline): a large CoW DELETE/UPDATE/MERGE
       // rewrite must not serialize every other in-process commit
-      // behind its IO. Only the validate-and-commit step locks; if the
-      // table moved mid-rewrite, the written files are discarded and
-      // ConcurrentModificationException sends the CALLER back to
-      // re-plan (Engine.retryConcurrent's contract — the same signal
-      // the expectedSnapshotId check raises).
+      // behind its IO. If the table moved mid-rewrite, the commit
+      // attempt's [[stale]] check discards the written files and sends
+      // the CALLER back to re-plan (Engine.retryConcurrent's contract —
+      // the same signal the expectedSnapshotId check raises).
       val (_, meta) = loadMeta(ns, name)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       val current = writeBase(meta, ns, name, toBranch).getOrElse(
         throw new IllegalStateException(s"$ns.$name has no data"))
-      // the head this plan binds to — branch ref or current pointer
-      def headOf(m: TableMeta): Option[Long] = toBranch match {
-        case Some(b) => m.refs.get(b)
-        case None => m.currentSnapshotId
-      }
-      expectedSnapshotId.foreach { exp =>
-        if (current.snapshotId != exp)
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name moved to snapshot ${current.snapshotId} " +
-              s"(rewrite planned against $exp) — re-plan and retry")
-      }
+      stale(ns, name, meta, meta, toBranch, expectedSnapshotId)
+        .foreach(c => throw c.e)
       val targetSet = targets.toSet.intersect(current.files.toSet)
       val untouched = current.files.filterNot(targetSet)
-      val writeId = java.util.UUID.randomUUID().toString.take(8)
       // the WHOLE unlocked plan/write phase (target read + transform
       // write + stats + delete-side carry, all of which read
       // planned-state files) converts failures through staleOrRethrow
@@ -2007,17 +1947,9 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // transform (the SQL MERGE's insert side) must still write its
       // output — an empty input with a row-preserving transform writes
       // no part files, so the no-op case stays free.
-      // both write dirs are deterministic functions of the writeId so
-      // the discard paths below can reap them WHOLE (dir + _SUCCESS
-      // marker, not just the parquet parts — round-14 ADVICE item 5:
-      // per-file deletes left abandoned-attempt directories
-      // accumulating unboundedly under commit churn)
-      val snapDir = dataDir(ns, name).resolve(s"rewrite-$writeId")
-      val carryDir = dataDir(ns, name).resolve(s"delete-carry-$writeId")
-      def discardWrite(): Unit = {
-        deleteRecursively(snapDir); deleteRecursively(carryDir)
-      }
-      val (prunedNew, newStats0, keptStats, carryDel, carryDelStats) = try {
+      val snapDir = writeDir(ns, name, "rewrite")
+      val carryDir = writeDir(ns, name, "delete-carry")
+      val (newStats, keptStats, carryDel, carryDelStats) = try {
         // merge-on-read interplay: the targets are read with their
         // delete entries APPLIED (folded into the rewrite); entries
         // for untouched files are carried forward below
@@ -2026,46 +1958,20 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
               meta.fieldIds)).select(schema.fieldNames.map(col(_)).toSeq: _*),
             snapDir, schema, bloomColsFor(ns, name, schema))
           .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema)))
-        val pruned = st.map(_.path)
         val kept = current.fileStats.filter(s => untouched.contains(s.path))
-        val (cd, cds) = carryDeletes(ns, name, writeId, current, untouched)
-        (pruned, st, kept, cd, cds)
+        val (cd, cds) = carryDeletes(current, untouched, carryDir)
+        (st, kept, cd, cds)
       } catch {
         case scala.util.control.NonFatal(e) =>
           throw staleOrRethrow(ns, name, meta, e)
       }
-      synchronized {
-        val (v2, m2) = loadMeta(ns, name)
-        if (headOf(m2) != headOf(meta)) {
-          discardWrite()
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name moved during the rewrite — re-plan and retry")
-        }
-        // a metadata-only ALTER (pointer unmoved — the snapshot guard
-        // above can't see it) changes the schema/field ids the written
-        // files' colIds stamps were planned against; committing them
-        // would silently bind stale-schema stamps (round-14 ADVICE
-        // item 1) — refuse and re-plan like any other conflict
-        if (m2.schemaJson != meta.schemaJson || m2.fieldIds != meta.fieldIds) {
-          discardWrite()
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name schema evolved during the rewrite — re-plan and retry")
-        }
-        // equality deletes carry whole: rewritten files get the NEW
-        // sequence number (the rewrite already applied the deletes), so
-        // they only keep applying to the untouched lower-seq files
-        val commitSeq = m2.snapshots.map(_.sequenceNumber).max + 1
-        val newStats = newStats0.map(_.copy(seq = Some(commitSeq)))
-        try commitReplacing(ns, name, v2, m2,
-          m2.snapshots.map(_.snapshotId).max + 1,
-          untouched ++ prunedNew, keptStats ++ newStats,
-          carryDel, carryDelStats, current.eqDeletes,
-          toBranch, Some(current.snapshotId))
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            discardWrite()
-            throw e
-        }
+      // equality deletes carry whole: rewritten files get the NEW
+      // sequence number (the rewrite already applied the deletes), so
+      // they only keep applying to the untouched lower-seq files
+      transact(ns, name, Seq(snapDir, carryDir)) { m =>
+        stale(ns, name, meta, m, toBranch).getOrElse(Commit(replacing(m,
+          untouched, keptStats, newStats, carryDel, carryDelStats,
+          current.eqDeletes, toBranch)))
       }
     }
 
@@ -2092,25 +1998,6 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     } else e
   }
 
-  /** Commit a snapshot whose inputs were planned against a SPECIFIC
-    * base snapshot: a lost cross-process CREATE_NEW race means the
-    * table moved between this method's own loadMeta and its commit, so
-    * the plan (positions, candidate files) may be stale — surface the
-    * same [[java.util.ConcurrentModificationException]] the
-    * expectedSnapshotId check throws, and the caller re-plans
-    * (Engine.retryConcurrent's contract). In-process writers are
-    * serialized by the catalog lock; this closes the cross-process
-    * window.
-    */
-  private def commitPlanned(ns: String, name: String, version: Int,
-      meta: TableMeta): Unit =
-    try commit(ns, name, version, meta)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$ns.$name: a concurrent commit won the race — re-plan and retry")
-    }
-
   /** Delete-side carryover for a copy-on-write rewrite that replaces
     * some data files: entries pointing at SURVIVING files move to a
     * fresh delete file (they still hide live rows); entries for
@@ -2119,17 +2006,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * make [[SnapshotMeta.statsRowCount]] double-subtract. O(delete
     * side) IO, which merge-on-read keeps small by construction.
     */
-  private def carryDeletes(ns: String, name: String, writeId: String,
-      current: SnapshotMeta,
-      survivors: Seq[String]): (Seq[String], Seq[FileStats]) = {
-    import org.apache.spark.sql.functions.col
+  private def carryDeletes(current: SnapshotMeta, survivors: Seq[String],
+      delDir: Path): (Seq[String], Seq[FileStats]) = {
     if (current.deleteFiles.isEmpty) return (Seq.empty, Seq.empty)
     import spark.implicits._
     val survDf = survivors.toDF("file_path")
     val kept = spark.read.schema(DeleteFileSchema)
       .parquet(current.deleteFiles: _*)
       .join(survDf, Seq("file_path"), "left_semi")
-    val delDir = dataDir(ns, name).resolve(s"delete-carry-$writeId")
     val stats = writeFiles(kept.coalesce(1), delDir, DeleteFileSchema)
     if (stats.isEmpty) {
       // nothing survived: drop the whole empty carry dir immediately
@@ -2154,33 +2038,32 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     try rm(dir) catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  /** Commit a snapshot whose manifest REPLACES the current file list
-    * (compact/upsert/delete shape, vs append's cumulative one).
+  /** `meta` advanced by a snapshot whose manifest REPLACES the write
+    * target's file list (compact/upsert/delete shape, vs append's
+    * cumulative one): the `untouched` files keep their `kept` stats and
+    * the `added` files take this commit's sequence number.
     */
-  private def commitReplacing(ns: String, name: String, version: Int,
-      meta: TableMeta, snapshotId: Long,
-      files: Seq[String], stats: Seq[FileStats],
+  private def replacing(meta: TableMeta, untouched: Seq[String],
+      kept: Seq[FileStats], added: Seq[FileStats],
       deleteFiles: Seq[String] = Seq.empty,
       deleteFileStats: Seq[FileStats] = Seq.empty,
       eqDeletes: Seq[EqDeleteMeta] = Seq.empty,
       toBranch: Option[String] = None,
-      parentId: Option[Long] = None,
       operation: String = "overwrite"): TableMeta = {
-    val snap = SnapshotMeta(
-      snapshotId = snapshotId,
-      parentId = parentId.orElse(meta.currentSnapshotId),
-      sequenceNumber = meta.snapshots.map(_.sequenceNumber).max + 1,
-      files = files,
+    val seq = nextSeqOf(meta)
+    val stats = kept ++ added.map(_.copy(seq = Some(seq)))
+    advanced(meta, toBranch, SnapshotMeta(
+      snapshotId = nextIdOf(meta),
+      parentId = toBranch.fold(meta.currentSnapshotId)(meta.refs.get),
+      sequenceNumber = seq,
+      files = untouched ++ added.map(_.path),
       rowCount = stats.map(_.rows).sum,
       createdAtMs = System.currentTimeMillis(),
       fileStats = stats,
       deleteFiles = deleteFiles,
       deleteFileStats = deleteFileStats,
       eqDeletes = eqDeletes,
-      operation = Some(operation))
-    val newMeta = advanced(meta, toBranch, snap)
-    commitPlanned(ns, name, version + 1, newMeta)
-    newMeta
+      operation = Some(operation)))
   }
 
   // -------------------------------------------------------- maintenance
@@ -2198,10 +2081,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     *   when the whole history is old. None = pure count-based trim.
     */
   def expireSnapshots(ns: String, name: String, keepLast: Int,
-      olderThanMs: Option[Long] = None): TableMeta =
-    synchronized {
-      require(keepLast >= 1, "must retain at least one snapshot")
-      val (version, meta) = loadMeta(ns, name)
+      olderThanMs: Option[Long] = None): TableMeta = {
+    require(keepLast >= 1, "must retain at least one snapshot")
+    // what the landed attempt expired: reaped after the commit
+    var orphaned = Seq.empty[String]
+    var droppedManifests = Seq.empty[String]
+    val landed = transact(ns, name) { meta =>
       // REF AGING (round 16, Iceberg's `history.expire.max-ref-age-ms`,
       // opt-in): with the property set, branches and tags whose HEAD
       // snapshot committed before the age window drop in this same
@@ -2237,7 +2122,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // must never reap a delete file a retained snapshot still applies
       val referenced = retained.flatMap(s =>
         s.files ++ s.deleteFiles ++ s.eqDeletes.map(_.path)).toSet
-      val orphaned = meta.snapshots.flatMap(s =>
+      orphaned = meta.snapshots.flatMap(s =>
         s.files ++ s.deleteFiles ++ s.eqDeletes.map(_.path))
         .distinct.filterNot(referenced.contains)
       // RE-PARENT survivors over the expired gaps (round 15): a
@@ -2264,26 +2149,27 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
             stitched = Some(true))
         else s
       }
-      val newMeta = meta.copy(snapshots = healed, refs = liveRefs,
-        tagNames = meta.tagNames.filterNot(agedOut))
-      commit(ns, name, version + 1, newMeta)
-      // physical reap stops at the ownership boundary: [[addFiles]]
-      // imports live OUTSIDE the table tree and are forgotten from
-      // metadata only — expiry must never destroy a source dataset
-      // the catalog merely adopted (native files all live inside, so
-      // the guard costs nothing on the normal path)
-      orphaned.filter(ownsPath(ns, name, _))
-        .foreach(f => Files.deleteIfExists(Paths.get(f)))
       // dropped snapshots' side manifests are unreferenced artifacts
       // too (per-snapshot, never shared) — reclaim them with the data
       val keptManifests = retained.flatMap(_.manifestPath).toSet
-      meta.snapshots.flatMap(_.manifestPath)
-        .filterNot(keptManifests).foreach { p =>
-          manifestCache.synchronized(manifestCache.remove(p)): Unit
-          Files.deleteIfExists(Paths.get(p)): Unit
-        }
-      newMeta
+      droppedManifests = meta.snapshots.flatMap(_.manifestPath)
+        .filterNot(keptManifests)
+      Commit(meta.copy(snapshots = healed, refs = liveRefs,
+        tagNames = meta.tagNames.filterNot(agedOut)))
     }
+    // physical reap stops at the ownership boundary: [[addFiles]]
+    // imports live OUTSIDE the table tree and are forgotten from
+    // metadata only — expiry must never destroy a source dataset
+    // the catalog merely adopted (native files all live inside, so
+    // the guard costs nothing on the normal path)
+    orphaned.filter(ownsPath(ns, name, _))
+      .foreach(f => Files.deleteIfExists(Paths.get(f)))
+    droppedManifests.foreach { p =>
+      manifestCache.synchronized(manifestCache.remove(p)): Unit
+      Files.deleteIfExists(Paths.get(p)): Unit
+    }
+    landed
+  }
 
   /** Roll the table back to an earlier snapshot (Iceberg
     * rollback-to-snapshot semantics): the current-snapshot pointer
@@ -2296,13 +2182,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * commit costs one pointer write, not a restore job).
     */
   def rollback(ns: String, name: String, snapshotId: Long): TableMeta =
-    synchronized {
-      val (version, meta) = loadMeta(ns, name)
+    transact(ns, name) { meta =>
       require(meta.snapshots.exists(_.snapshotId == snapshotId),
         s"no snapshot $snapshotId in $ns.$name")
-      val newMeta = meta.copy(currentSnapshotId = Some(snapshotId))
-      commit(ns, name, version + 1, newMeta)
-      newMeta
+      Commit(meta.copy(currentSnapshotId = Some(snapshotId)))
     }
 
   /** The ancestor chain from `headId` to the root (inclusive, newest
@@ -2332,14 +2215,15 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * as soon as a compaction rewrote the re-attached files, and the
     * retry would silently duplicate every staged row.
     */
-  def isPublished(ns: String, name: String, snapshotId: Long): Boolean = {
-    val meta = describe(ns, name)
+  def isPublished(ns: String, name: String, snapshotId: Long): Boolean =
+    isPublished(describe(ns, name), snapshotId)
+
+  private def isPublished(meta: TableMeta, snapshotId: Long): Boolean =
     meta.currentSnapshotId.exists { cur =>
       val chain = ancestorIds(meta.snapshots, cur)
       chain(snapshotId) || meta.snapshots.exists(x =>
         x.cherrypickedFrom.contains(snapshotId) && chain(x.snapshotId))
     }
-  }
 
   /** True iff `snapshotId` is on the current snapshot's ancestor
     * chain (inclusive) — the guard Iceberg's `rollback_to_snapshot`
@@ -2384,76 +2268,81 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * files are present on the head already).
     */
   def cherrypick(ns: String, name: String, snapshotId: Long): TableMeta =
-    synchronized {
-      val (version, meta) = loadMeta(ns, name)
+    transact(ns, name) { meta =>
       val s = meta.snapshots.find(_.snapshotId == snapshotId).getOrElse(
         throw new IllegalArgumentException(
           s"no snapshot $snapshotId in $ns.$name"))
-      if (meta.currentSnapshotId.contains(snapshotId)) return meta
-      // durable double-publish guard (NOT the path heuristic below —
-      // a compaction after the first publish rewrites the re-attached
-      // files, so paths stop overlapping exactly when a retry would
-      // silently duplicate the rows)
-      require(!isPublished(ns, name, snapshotId),
-        s"snapshot $snapshotId of $ns.$name was already published: it " +
-          "(or a cherry-pick of it) is an ancestor of the current head")
-      if (meta.currentSnapshotId == s.parentId) {
+      if (meta.currentSnapshotId.contains(snapshotId)) Applied(meta)
+      else {
+        // durable double-publish guard (NOT the path heuristic below —
+        // a compaction after the first publish rewrites the re-attached
+        // files, so paths stop overlapping exactly when a retry would
+        // silently duplicate the rows)
+        require(!isPublished(meta, snapshotId),
+          s"snapshot $snapshotId of $ns.$name was already published: it " +
+            "(or a cherry-pick of it) is an ancestor of the current head")
         // built against exactly the current state: publishing is one
         // pointer move
-        val newMeta = meta.copy(currentSnapshotId = Some(snapshotId))
-        commit(ns, name, version + 1, newMeta)
-        return newMeta
+        if (meta.currentSnapshotId == s.parentId)
+          Commit(meta.copy(currentSnapshotId = Some(snapshotId)))
+        else Commit(cherrypicked(ns, name, meta, s))
       }
-      require(s.operation.contains("append"),
-        s"cannot cherry-pick snapshot $snapshotId of $ns.$name onto a " +
-          s"moved head: its operation is " +
-          s"'${s.operation.getOrElse("unknown")}' — only append " +
-          "snapshots re-apply safely after the table advanced")
-      require(!s.stitched.contains(true),
-        s"cannot cherry-pick snapshot $snapshotId of $ns.$name: snapshot " +
-          "expiry stitched its parent edge, so its file delta spans more " +
-          "than its own commit")
-      val parent = s.parentId.flatMap(pid =>
-        meta.snapshots.find(_.snapshotId == pid))
-      require(s.parentId.isEmpty || parent.isDefined,
-        s"cannot cherry-pick snapshot $snapshotId of $ns.$name: its " +
-          "parent snapshot was expired, so its own file delta is unknowable")
-      val parentFiles = parent.map(_.files.toSet).getOrElse(Set.empty)
-      require(parentFiles.subsetOf(s.files.toSet) &&
-          s.deleteFiles == parent.map(_.deleteFiles).getOrElse(Seq.empty) &&
-          s.eqDeletes == parent.map(_.eqDeletes).getOrElse(Seq.empty),
-        s"snapshot $snapshotId of $ns.$name is labeled append but its " +
-          "delta is not purely additive")
-      val added = s.files.filterNot(parentFiles)
-      val head = meta.currentSnapshot
-      val headFiles = head.map(_.files).getOrElse(Seq.empty)
-      require(!added.exists(headFiles.toSet),
-        s"snapshot $snapshotId of $ns.$name was already published: its " +
-          "files are present on the current head")
-      val newSeq = meta.snapshots.map(_.sequenceNumber).max + 1
-      val newId = meta.snapshots.map(_.snapshotId).max + 1
-      val addedSet = added.toSet
-      val addedStats = s.fileStats.filter(fs => addedSet(fs.path))
-        .map(_.copy(seq = Some(newSeq)))
-      val snap = SnapshotMeta(
-        snapshotId = newId,
-        parentId = head.map(_.snapshotId),
-        sequenceNumber = newSeq,
-        files = headFiles ++ added,
-        rowCount = addedStats.map(_.rows).sum,
-        createdAtMs = System.currentTimeMillis(),
-        fileStats = head.map(_.fileStats).getOrElse(Seq.empty) ++ addedStats,
-        deleteFiles = head.map(_.deleteFiles).getOrElse(Seq.empty),
-        deleteFileStats =
-          head.map(_.deleteFileStats).getOrElse(Seq.empty),
-        eqDeletes = head.map(_.eqDeletes).getOrElse(Seq.empty),
-        operation = Some("append"),
-        cherrypickedFrom = Some(snapshotId))
-      val newMeta = meta.copy(currentSnapshotId = Some(newId),
-        snapshots = meta.snapshots :+ snap)
-      commit(ns, name, version + 1, newMeta)
-      newMeta
     }
+
+  /** `meta` with `s`'s added files re-attached to the moved head as a
+    * new snapshot ([[cherrypick]]).
+    */
+  private def cherrypicked(ns: String, name: String, meta: TableMeta,
+      s: SnapshotMeta): TableMeta = {
+    val snapshotId = s.snapshotId
+    require(s.operation.contains("append"),
+      s"cannot cherry-pick snapshot $snapshotId of $ns.$name onto a " +
+        s"moved head: its operation is " +
+        s"'${s.operation.getOrElse("unknown")}' — only append " +
+        "snapshots re-apply safely after the table advanced")
+    require(!s.stitched.contains(true),
+      s"cannot cherry-pick snapshot $snapshotId of $ns.$name: snapshot " +
+        "expiry stitched its parent edge, so its file delta spans more " +
+        "than its own commit")
+    val parent = s.parentId.flatMap(pid =>
+      meta.snapshots.find(_.snapshotId == pid))
+    require(s.parentId.isEmpty || parent.isDefined,
+      s"cannot cherry-pick snapshot $snapshotId of $ns.$name: its " +
+        "parent snapshot was expired, so its own file delta is unknowable")
+    val parentFiles = parent.map(_.files.toSet).getOrElse(Set.empty)
+    require(parentFiles.subsetOf(s.files.toSet) &&
+        s.deleteFiles == parent.map(_.deleteFiles).getOrElse(Seq.empty) &&
+        s.eqDeletes == parent.map(_.eqDeletes).getOrElse(Seq.empty),
+      s"snapshot $snapshotId of $ns.$name is labeled append but its " +
+        "delta is not purely additive")
+    val added = s.files.filterNot(parentFiles)
+    val head = meta.currentSnapshot
+    val headFiles = head.map(_.files).getOrElse(Seq.empty)
+    require(!added.exists(headFiles.toSet),
+      s"snapshot $snapshotId of $ns.$name was already published: its " +
+        "files are present on the current head")
+    val newSeq = nextSeqOf(meta)
+    val newId = nextIdOf(meta)
+    val addedSet = added.toSet
+    val addedStats = s.fileStats.filter(fs => addedSet(fs.path))
+      .map(_.copy(seq = Some(newSeq)))
+    val snap = SnapshotMeta(
+      snapshotId = newId,
+      parentId = head.map(_.snapshotId),
+      sequenceNumber = newSeq,
+      files = headFiles ++ added,
+      rowCount = addedStats.map(_.rows).sum,
+      createdAtMs = System.currentTimeMillis(),
+      fileStats = head.map(_.fileStats).getOrElse(Seq.empty) ++ addedStats,
+      deleteFiles = head.map(_.deleteFiles).getOrElse(Seq.empty),
+      deleteFileStats =
+        head.map(_.deleteFileStats).getOrElse(Seq.empty),
+      eqDeletes = head.map(_.eqDeletes).getOrElse(Seq.empty),
+      operation = Some("append"),
+      cherrypickedFrom = Some(snapshotId))
+    meta.copy(currentSnapshotId = Some(newId),
+      snapshots = meta.snapshots :+ snap)
+  }
 
   /** Delete data files under the table's data directory that no
     * snapshot references (Iceberg remove-orphan-files semantics):
@@ -2583,15 +2472,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
   def compact(ns: String, name: String, numFiles: Int,
       clusterBy: Seq[String] = Nil): TableMeta =
     synchronized {
-      val (version, meta) = loadMeta(ns, name)
+      val (_, meta) = loadMeta(ns, name)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       val current = meta.currentSnapshot.getOrElse(
         throw new IllegalStateException(s"$ns.$name has no data to compact"))
-      val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-      val snapDir = dataDir(ns, name).resolve(s"snap-$snapshotId-compact")
+      val snapDir = writeDir(ns, name, "compact")
       // compact FOLDS merge-on-read delete files back into the data:
       // the rewrite reads with deletes applied and the new snapshot
-      // carries none (SnapshotMeta.deleteFiles defaults empty below)
+      // carries none
       val df = readFilesOf(current, schema, current.files, meta.fieldIds)
       val rewritten =
         if (clusterBy.isEmpty) df.repartition(numFiles)
@@ -2602,23 +2490,11 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           .drop("_graft_z")
       val stats = writeFiles(rewritten, snapDir, schema,
           bloomColsFor(ns, name, schema))
-        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-          seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-      val newFiles = stats.map(_.path)
-      val snap = SnapshotMeta(
-        snapshotId = snapshotId,
-        parentId = meta.currentSnapshotId,
-        sequenceNumber = meta.snapshots.map(_.sequenceNumber).max + 1,
-        files = newFiles,
-        rowCount = stats.map(_.rows).sum,
-        createdAtMs = System.currentTimeMillis(),
-        fileStats = stats,
-        operation = Some("replace")) // content-preserving layout rewrite
-      val newMeta = meta.copy(
-        currentSnapshotId = Some(snapshotId),
-        snapshots = meta.snapshots :+ snap)
-      commit(ns, name, version + 1, newMeta)
-      newMeta
+        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema)))
+      transact(ns, name, Seq(snapDir)) { m =>
+        stale(ns, name, meta, m).getOrElse(Commit(replacing(m, Nil, Nil,
+          stats, operation = "replace"))) // content-preserving layout rewrite
+      }
     }
 
   /** Data files (among `among`) an equality-delete set MAY hit,
@@ -3031,19 +2907,21 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       minFileBytes: Long = DefaultMinFileBytes,
       targetFileBytes: Long = DefaultTargetFileBytes,
       clusterBy: Seq[String] = Nil,
-      fullRewrite: Boolean = false): CompactReport = {
-    val maxAttempts = 6
+      fullRewrite: Boolean = false): CompactReport =
+    replanning(compactGroupsOnce(ns, name, minFileBytes, targetFileBytes,
+      clusterBy, fullRewrite))
+
+  /** A maintenance pass `once`, re-planned on each conflict up to a
+    * bound ([[compactFileGroups]]' concurrency contract): the first two
+    * passes plan unlocked, later ones hold the in-process lock end to
+    * end.
+    */
+  private def replanning[T](once: => T): T = {
     var attempt = 0
     while (true) {
-      try {
-        return if (attempt >= 2)
-          synchronized(compactGroupsOnce(ns, name, minFileBytes,
-            targetFileBytes, clusterBy, fullRewrite))
-        else compactGroupsOnce(ns, name, minFileBytes,
-          targetFileBytes, clusterBy, fullRewrite)
-      } catch {
-        case _: java.util.ConcurrentModificationException
-            if attempt < maxAttempts =>
+      try return (if (attempt >= 2) synchronized(once) else once)
+      catch {
+        case _: java.util.ConcurrentModificationException if attempt < 6 =>
           attempt += 1 // a commit landed mid-rewrite: re-plan
       }
     }
@@ -3111,16 +2989,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           compacted = false)
       val untouched = current.files.filterNot(rewrite.toSet)
       val bytes = rewrite.map(sizeOf).sum
-      // the rewrite dir is keyed by a unique write id, not the target
-      // snapshot id — a re-planned attempt must never collide with an
-      // abandoned one's directory
-      val writeId = java.util.UUID.randomUUID().toString.take(8)
-      val (newFiles, newStats) =
-        if (rewrite.isEmpty) (Seq.empty[String], Seq.empty[FileStats])
+      val snapDir = writeDir(ns, name, "binpack")
+      val newStats =
+        if (rewrite.isEmpty) Seq.empty[FileStats]
         else try {
           val numOut = math.max(1,
             math.ceil(bytes.toDouble / targetFileBytes).toInt)
-          val snapDir = dataDir(ns, name).resolve(s"binpack-$writeId")
           val df = readFilesOf(current, schema, rewrite, meta.fieldIds)
           val packed =
             if (effCluster.isEmpty) df.coalesce(numOut) // no shuffle
@@ -3160,12 +3034,10 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
           // value-pure rewritten files record fresh pvals, so pval
           // pruning stays metadata-exact instead of eroding to
           // conservative keeps with every bin-pack pass
-          val st = writeFiles(packed, snapDir, schema,
+          writeFiles(packed, snapDir, schema,
               bloomColsFor(ns, name, schema),
               meta.properties.get(PartitionSpec.PropertyKey).map(_.trim))
-            .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-              seq = Some(meta.snapshots.map(_.sequenceNumber).max + 1)))
-          (st.map(_.path), st)
+            .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema)))
         } catch {
           case scala.util.control.NonFatal(e) =>
             throw staleOrRethrow(ns, name, meta, e)
@@ -3175,44 +3047,18 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       // the rewrite set covers every file any delete entry can hit
       // (positional by name, equality by candidate pruning), so the
       // delete side folds away COMPLETELY — a dead eq-delete (no
-      // candidates at all) is dropped too.
-      // VALIDATE-AND-COMMIT under the lock: the plan is only valid
-      // against the snapshot it was made from — if the table moved
-      // while rewriting, discard the written files and re-plan
-      synchronized {
-        val (v2, m2) = loadMeta(ns, name)
-        def discard(): Unit =
-          deleteRecursively(dataDir(ns, name).resolve(s"binpack-$writeId"))
-        if (m2.currentSnapshotId != meta.currentSnapshotId) {
-          discard()
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name moved during compaction — re-plan and retry")
-        }
-        // metadata-only ALTER guard (the rewriteFiles discipline): the
-        // rewritten files' colIds/pspec stamps bind the PLANNED schema
-        if (m2.schemaJson != meta.schemaJson || m2.fieldIds != meta.fieldIds) {
-          discard()
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name schema evolved during compaction — re-plan and retry")
-        }
-        // snapshot/sequence ids from the VALIDATED state (a branch
-        // commit may have advanced them without moving the pointer);
-        // the rewritten files' seq restamps to the commit's own
-        val commitSeq = m2.snapshots.map(_.sequenceNumber).max + 1
-        val restamped = newStats.map(_.copy(seq = Some(commitSeq)))
-        try commitReplacing(ns, name, v2, m2,
-          m2.snapshots.map(_.snapshotId).max + 1,
-          untouched ++ newFiles, untouchedStats ++ restamped,
-          operation = "replace") // content-preserving: consumers skip it
-        catch {
-          case e: java.util.ConcurrentModificationException =>
-            discard(); throw e
-        }
+      // candidates at all) is dropped too. The plan is only valid
+      // against the snapshot it was made from: if the table moved while
+      // rewriting, the attempt discards the written files and the pass
+      // re-plans
+      transact(ns, name, Seq(snapDir)) { m =>
+        stale(ns, name, meta, m).getOrElse(Commit(replacing(m, untouched,
+          untouchedStats, newStats, operation = "replace"))) // consumers skip it
       }
       CompactReport(
         rewrittenFiles = rewrite.size,
         untouchedFiles = untouched.size,
-        newFiles = newFiles.size,
+        newFiles = newStats.size,
         bytesRewritten = bytes,
         posDeleteFilesFolded = current.deleteFiles.size,
         eqDeleteFilesFolded = current.eqDeletes.size,
@@ -3250,22 +3096,8 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * lock with validate-and-commit + bounded re-plan on conflict (the
     * [[compactFileGroups]] discipline).
     */
-  def rewriteDeleteFiles(ns: String, name: String): DeleteRewriteReport = {
-    val maxAttempts = 6
-    var attempt = 0
-    while (true) {
-      try {
-        return if (attempt >= 2)
-          synchronized(rewriteDeleteFilesOnce(ns, name))
-        else rewriteDeleteFilesOnce(ns, name)
-      } catch {
-        case _: java.util.ConcurrentModificationException
-            if attempt < maxAttempts =>
-          attempt += 1 // a commit landed mid-rewrite: re-plan
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def rewriteDeleteFiles(ns: String, name: String): DeleteRewriteReport =
+    replanning(rewriteDeleteFilesOnce(ns, name))
 
   private def rewriteDeleteFilesOnce(ns: String,
       name: String): DeleteRewriteReport = {
@@ -3278,8 +3110,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       return DeleteRewriteReport(0, 0, 0L, 0L, 0, rewritten = false)
     val posBefore = current.deleteFileStats.map(_.rows).sum
     val estEntries = posBefore + current.eqDeletes.map(_.rows).sum
-    val writeId = java.util.UUID.randomUUID().toString.take(8)
-    val outDir = dataDir(ns, name).resolve(s"delete-rw-$writeId")
+    val outDir = writeDir(ns, name, "delete-rw")
     val (newFiles, newStats) = try {
       import spark.implicits._
       val hidden =
@@ -3319,38 +3150,19 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         deleteRecursively(outDir)
         throw staleOrRethrow(ns, name, meta, e)
     }
-    synchronized {
-      val (v2, m2) = loadMeta(ns, name)
-      def discard(): Unit = deleteRecursively(outDir)
-      if (m2.currentSnapshotId != meta.currentSnapshotId) {
-        discard()
-        throw new java.util.ConcurrentModificationException(
-          s"$ns.$name moved during the delete rewrite — re-plan and retry")
-      }
-      if (m2.schemaJson != meta.schemaJson || m2.fieldIds != meta.fieldIds) {
-        discard()
-        throw new java.util.ConcurrentModificationException(
-          s"$ns.$name schema evolved during the delete rewrite — " +
-            "re-plan and retry")
-      }
-      if (newFiles.isEmpty) deleteRecursively(outDir) // all entries dead
-      try commitReplacing(ns, name, v2, m2,
-        m2.snapshots.map(_.snapshotId).max + 1,
-        current.files, current.fileStats,
-        newFiles, newStats, Seq.empty,
-        operation = "replace") // content-preserving: consumers skip it
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          discard(); throw e
-      }
-      DeleteRewriteReport(
-        deleteFilesBefore = current.deleteFiles.size,
-        deleteFilesAfter = newFiles.size,
-        entriesBefore = posBefore,
-        entriesAfter = newStats.map(_.rows).sum,
-        eqDeleteFilesConverted = current.eqDeletes.size,
-        rewritten = true)
+    if (newFiles.isEmpty) deleteRecursively(outDir) // all entries dead
+    transact(ns, name, Seq(outDir)) { m =>
+      stale(ns, name, meta, m).getOrElse(Commit(replacing(m, current.files,
+        current.fileStats, Nil, newFiles, newStats,
+        operation = "replace"))) // content-preserving: consumers skip it
     }
+    DeleteRewriteReport(
+      deleteFilesBefore = current.deleteFiles.size,
+      deleteFilesAfter = newFiles.size,
+      entriesBefore = posBefore,
+      entriesAfter = newStats.map(_.rows).sum,
+      eqDeleteFilesConverted = current.eqDeletes.size,
+      rewritten = true)
   }
 
   /** ZERO-COPY import (Iceberg's `add_files` procedure): register
@@ -3428,44 +3240,40 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     if (stats.isEmpty) return AddFilesReport(0, 0L)
     val files = stats.map(_.path)
     val schemaAtPlan = declared.json
-    synchronized {
-      retryMetaCommit(ns, name) { meta =>
-        // stats were keyed under the planned schema — a concurrent
-        // evolution invalidates name-keyed min/max and the colIds
-        // stamp, so refuse rather than commit a mismatched manifest
-        require(meta.schemaJson == schemaAtPlan,
-          s"$ns.$name's schema evolved during the import — retry")
-        val base = meta.currentSnapshot
-        val live = base.map(_.files.toSet).getOrElse(Set.empty)
-        val dup = files.filter(live)
-        require(dup.isEmpty, s"already live in $ns.$name: " +
-          dup.take(3).mkString(", ") +
-          (if (dup.size > 3) s" (+${dup.size - 3} more)" else ""))
-        val snapshotId =
-          meta.snapshots.map(_.snapshotId).maxOption.getOrElse(0L) + 1
-        val seqNum =
-          meta.snapshots.map(_.sequenceNumber).maxOption.getOrElse(0L) + 1
-        val stamped = stats.map(_.copy(
-          colIds = colIdsStamp(meta.fieldIds, declared),
-          seq = Some(seqNum)))
-        val snap = SnapshotMeta(
-          snapshotId = snapshotId,
-          parentId = base.map(_.snapshotId),
-          sequenceNumber = seqNum,
-          files = base.map(_.files).getOrElse(Seq.empty) ++ files,
-          rowCount = stamped.map(_.rows).sum,
-          createdAtMs = System.currentTimeMillis(),
-          fileStats =
-            base.map(_.fileStats).getOrElse(Seq.empty) ++ stamped,
-          deleteFiles = base.map(_.deleteFiles).getOrElse(Seq.empty),
-          deleteFileStats =
-            base.map(_.deleteFileStats).getOrElse(Seq.empty),
-          eqDeletes = base.map(_.eqDeletes).getOrElse(Seq.empty),
-          operation = Some("append"))
-        meta.copy(currentSnapshotId = Some(snapshotId),
-          snapshots = meta.snapshots :+ snap)
-      }: Unit
-    }
+    transact(ns, name) { meta =>
+      // stats were keyed under the planned schema — a concurrent
+      // evolution invalidates name-keyed min/max and the colIds
+      // stamp, so refuse rather than commit a mismatched manifest
+      require(meta.schemaJson == schemaAtPlan,
+        s"$ns.$name's schema evolved during the import — retry")
+      val base = meta.currentSnapshot
+      val live = base.map(_.files.toSet).getOrElse(Set.empty)
+      val dup = files.filter(live)
+      require(dup.isEmpty, s"already live in $ns.$name: " +
+        dup.take(3).mkString(", ") +
+        (if (dup.size > 3) s" (+${dup.size - 3} more)" else ""))
+      val snapshotId = nextIdOf(meta)
+      val seqNum = nextSeqOf(meta)
+      val stamped = stats.map(_.copy(
+        colIds = colIdsStamp(meta.fieldIds, declared),
+        seq = Some(seqNum)))
+      val snap = SnapshotMeta(
+        snapshotId = snapshotId,
+        parentId = base.map(_.snapshotId),
+        sequenceNumber = seqNum,
+        files = base.map(_.files).getOrElse(Seq.empty) ++ files,
+        rowCount = stamped.map(_.rows).sum,
+        createdAtMs = System.currentTimeMillis(),
+        fileStats =
+          base.map(_.fileStats).getOrElse(Seq.empty) ++ stamped,
+        deleteFiles = base.map(_.deleteFiles).getOrElse(Seq.empty),
+        deleteFileStats =
+          base.map(_.deleteFileStats).getOrElse(Seq.empty),
+        eqDeletes = base.map(_.eqDeletes).getOrElse(Seq.empty),
+        operation = Some("append"))
+      Commit(meta.copy(currentSnapshotId = Some(snapshotId),
+        snapshots = meta.snapshots :+ snap))
+    }: Unit
     AddFilesReport(files.size, stats.map(_.rows).sum)
   }
 
@@ -3499,7 +3307,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     val schema = DataType.fromJson(sm.schemaJson).asInstanceOf[StructType]
     createTable(dstNs, dst, schema, sm.properties)
     val cur = sm.currentSnapshot
-    retryMetaCommit(dstNs, dst) { meta =>
+    transact(dstNs, dst) { meta =>
       val snap0 = cur.map(c => SnapshotMeta(
         snapshotId = 1L,
         parentId = None,
@@ -3514,7 +3322,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         deleteFileStats = c.deleteFileStats,
         eqDeletes = c.eqDeletes,
         operation = Some("append")))
-      meta.copy(
+      Commit(meta.copy(
         currentSnapshotId = snap0.map(_.snapshotId),
         snapshots = snap0.toSeq,
         // stats/colIds arrive ALREADY remapped to current names
@@ -3522,7 +3330,7 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         // the fork carries the id space without the links
         fieldIds = sm.fieldIds,
         lastFieldId = sm.lastFieldId,
-        activationIds = sm.activationIds)
+        activationIds = sm.activationIds))
     }: Unit
     describe(dstNs, dst)
   }
@@ -4173,17 +3981,12 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       toBranch: Option[String]): (TableMeta, Long) =
     synchronized {
       import org.apache.spark.sql.functions.col
-      val (version, meta) = loadMeta(ns, name)
+      val (_, meta) = loadMeta(ns, name)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       val current = writeBase(meta, ns, name, toBranch).getOrElse(
         throw new IllegalStateException(s"$ns.$name has no data"))
-      expectedSnapshotId.foreach { exp =>
-        if (current.snapshotId != exp)
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name moved to snapshot ${current.snapshotId} " +
-              s"(${if (rows.isEmpty) "delete" else "update"} planned " +
-              s"against $exp) — re-plan and retry")
-      }
+      stale(ns, name, meta, meta, toBranch, expectedSnapshotId)
+        .foreach(c => throw c.e)
       val batch = positions
         .select(col(RowIdFileCol).cast("string").as("file_path"),
           col(RowIdPosCol).cast("long").as("pos"))
@@ -4193,31 +3996,31 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
         else batch.join(
           spark.read.schema(DeleteFileSchema).parquet(current.deleteFiles: _*),
           Seq("file_path", "pos"), "left_anti")
-      val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-      val seqNum = meta.snapshots.map(_.sequenceNumber).max + 1
-      val newDelStats = writeFiles(fresh.coalesce(1),
-        dataDir(ns, name).resolve(s"snap-$snapshotId-delete-mor"), DeleteFileSchema)
+      val delDir = writeDir(ns, name, "delete-mor")
+      val updDir = writeDir(ns, name, "update-mor")
+      val newDelStats = writeFiles(fresh.coalesce(1), delDir, DeleteFileSchema)
       val newStats = rows.fold(Seq.empty[FileStats])(r => writeFiles(
           r.select(schema.fieldNames.map(col(_)).toSeq: _*),
-          dataDir(ns, name).resolve(s"snap-$snapshotId-update-mor"), schema,
-          bloomColsFor(ns, name, schema))
-        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema),
-          seq = Some(seqNum))))
-      val snap = SnapshotMeta(
-        snapshotId = snapshotId,
-        parentId = Some(current.snapshotId),
-        sequenceNumber = seqNum,
-        files = current.files ++ newStats.map(_.path),
-        rowCount = newStats.map(_.rows).sum, // a delete adds no rows
-        createdAtMs = System.currentTimeMillis(),
-        fileStats = current.fileStats ++ newStats,
-        deleteFiles = current.deleteFiles ++ newDelStats.map(_.path),
-        deleteFileStats = current.deleteFileStats ++ newDelStats,
-        eqDeletes = current.eqDeletes,
-        operation = Some(if (rows.isEmpty) "delete" else "overwrite"))
-      val newMeta = advanced(meta, toBranch, snap)
-      commitPlanned(ns, name, version + 1, newMeta)
-      (newMeta, newDelStats.map(_.rows).sum)
+          updDir, schema, bloomColsFor(ns, name, schema))
+        .map(_.copy(colIds = colIdsStamp(meta.fieldIds, schema))))
+      (transact(ns, name, Seq(delDir, updDir)) { m =>
+        stale(ns, name, meta, m, toBranch).getOrElse {
+          val seqNum = nextSeqOf(m)
+          val stamped = newStats.map(_.copy(seq = Some(seqNum)))
+          Commit(advanced(m, toBranch, SnapshotMeta(
+            snapshotId = nextIdOf(m),
+            parentId = Some(current.snapshotId),
+            sequenceNumber = seqNum,
+            files = current.files ++ stamped.map(_.path),
+            rowCount = stamped.map(_.rows).sum, // a delete adds no rows
+            createdAtMs = System.currentTimeMillis(),
+            fileStats = current.fileStats ++ stamped,
+            deleteFiles = current.deleteFiles ++ newDelStats.map(_.path),
+            deleteFileStats = current.deleteFileStats ++ newDelStats,
+            eqDeletes = current.eqDeletes,
+            operation = Some(if (rows.isEmpty) "delete" else "overwrite"))))
+        }
+      }, newDelStats.map(_.rows).sum)
     }
 
   /** Commit an EQUALITY delete file (Iceberg v2's delete-by-key):
@@ -4235,51 +4038,41 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     synchronized {
       import org.apache.spark.sql.functions.col
       require(cols.nonEmpty, "equality delete needs at least one column")
-      val (version, meta) = loadMeta(ns, name)
+      val (_, meta) = loadMeta(ns, name)
       val schema = DataType.fromJson(meta.schemaJson).asInstanceOf[StructType]
       cols.foreach(c => require(schema.fieldNames.contains(c),
         s"no column $c in $ns.$name"))
       val current = meta.currentSnapshot.getOrElse(
         throw new IllegalStateException(s"$ns.$name has no data"))
-      expectedSnapshotId.foreach { exp =>
-        if (current.snapshotId != exp)
-          throw new java.util.ConcurrentModificationException(
-            s"$ns.$name moved to snapshot ${current.snapshotId} " +
-              s"(delete planned against $exp) — re-plan and retry")
-      }
-      val snapshotId = meta.snapshots.map(_.snapshotId).max + 1
-      val seqNum = meta.snapshots.map(_.sequenceNumber).max + 1
-      val delDir = dataDir(ns, name).resolve(s"snap-$snapshotId-delete-eq")
+      stale(ns, name, meta, meta, expected = expectedSnapshotId)
+        .foreach(c => throw c.e)
+      val delDir = writeDir(ns, name, "delete-eq")
       val entries = keys
         .select(cols.map(c => col(c).cast(schema(c).dataType).as(c)): _*)
         .dropDuplicates(cols)
       val keySchema = StructType(cols.map(c => schema(c)))
       val eqStats = writeFiles(entries.coalesce(1), delDir, keySchema)
-      val rows = eqStats.map(_.rows).sum
-      val newFiles = eqStats.map(_.path)
-      val newEq = newFiles.map { f =>
-        val st = eqStats.find(_.path == f)
-        EqDeleteMeta(f, cols, seqNum, st.map(_.rows).getOrElse(0L),
-          physCols = Some(cols),
-          keyMin = st.map(_.min), keyMax = st.map(_.max))
-      }
-      val snap = SnapshotMeta(
-        snapshotId = snapshotId,
-        parentId = meta.currentSnapshotId,
-        sequenceNumber = seqNum,
-        files = current.files,
-        rowCount = 0L,
-        createdAtMs = System.currentTimeMillis(),
-        fileStats = current.fileStats,
-        deleteFiles = current.deleteFiles,
-        deleteFileStats = current.deleteFileStats,
-        eqDeletes = current.eqDeletes ++ newEq,
-        operation = Some("delete"))
-      val newMeta = meta.copy(
-        currentSnapshotId = Some(snapshotId),
-        snapshots = meta.snapshots :+ snap)
-      commitPlanned(ns, name, version + 1, newMeta)
-      (newMeta, rows)
+      (transact(ns, name, Seq(delDir)) { m =>
+        stale(ns, name, meta, m).getOrElse {
+          val seqNum = nextSeqOf(m)
+          val newEq = eqStats.map(st =>
+            EqDeleteMeta(st.path, cols, seqNum, st.rows,
+              physCols = Some(cols), keyMin = Some(st.min),
+              keyMax = Some(st.max)))
+          Commit(advanced(m, None, SnapshotMeta(
+            snapshotId = nextIdOf(m),
+            parentId = m.currentSnapshotId,
+            sequenceNumber = seqNum,
+            files = current.files,
+            rowCount = 0L,
+            createdAtMs = System.currentTimeMillis(),
+            fileStats = current.fileStats,
+            deleteFiles = current.deleteFiles,
+            deleteFileStats = current.deleteFileStats,
+            eqDeletes = current.eqDeletes ++ newEq,
+            operation = Some("delete"))))
+        }
+      }, eqStats.map(_.rows).sum)
     }
 
   /** Incremental (CDC-style) read: rows added strictly AFTER
@@ -4467,12 +4260,13 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
     * files, one per snapshot), then the SLIM metadata.json (O(1) per
     * snapshot — ids, counts, ref map, manifest pointer), then move the
     * version hint. Carried-forward snapshots reuse their existing
-    * manifests untouched, so a commit's metadata IO is O(its own new
-    * files) + O(#snapshots), never O(history x files) — at 100 TB
-    * (millions of live files, long histories) the old inline shape
-    * would have re-serialized hundreds of MB of per-file stats on
-    * EVERY commit. A losing CREATE_NEW race deletes the manifests it
-    * just wrote (they are referenced by nothing).
+    * manifests untouched, so history is never re-serialized; but a new
+    * snapshot's manifest lists its WHOLE file set (an append's is the
+    * base's live files plus its own), so a commit's metadata IO is
+    * O(the new snapshot's live files) + O(#snapshots) — it grows with
+    * the table, not with the commit. A losing CREATE_NEW race deletes
+    * the manifests it just wrote (they are referenced by nothing).
+    * Called only from [[transact]] and [[createTable]]'s first version.
     */
   private def commit(ns: String, name: String, version: Int, meta: TableMeta): Unit = {
     val dir = metaDir(ns, name)
@@ -4758,6 +4552,31 @@ object SnapshotCatalog {
   /** Optimistic-concurrency commit retries before giving up. */
   val MaxCommitRetries = 10
 
+  /** What one [[SnapshotCatalog.transact]] attempt decided against the
+    * metadata it loaded.
+    */
+  private sealed trait Outcome
+  /** Commit `meta` as the next version. */
+  private final case class Commit(meta: TableMeta) extends Outcome
+  /** Commit nothing: the change is already in `meta`, the table as the
+    * attempt found it.
+    */
+  private final case class Applied(meta: TableMeta) extends Outcome
+  /** The caller's plan is stale; `e` sends it back to re-plan. */
+  private final case class Conflict(
+      e: java.util.ConcurrentModificationException) extends Outcome
+
+  /** A streaming writer's commit precondition, a compare-and-set on the
+    * marker or position property it records: `key` must still hold
+    * `value` (None: unset), the value the writer read before writing.
+    * A commit attempt that finds anything else commits nothing and
+    * returns the table as it found it — another writer already applied
+    * this batch or window.
+    */
+  final case class Expect(key: String, value: Option[String]) {
+    def holds(meta: TableMeta): Boolean = meta.properties.get(key) == value
+  }
+
   /** Positional delete sides at or below this many entries apply as an
     * inline literal filter instead of a broadcast anti-join (see
     * [[SnapshotCatalog.readFilesWithRowId]]): the needle-delete case
@@ -5026,11 +4845,6 @@ object SnapshotCatalog {
     * read-back job.
     */
   val BloomColumnsProp = "write.bloom-filter.columns"
-
-  /** True iff `meta` records batch `batchId` (or a later one) under the
-    * at-least-once marker property `key` ([[SnapshotCatalog.appendOnce]]). */
-  def batchRecorded(meta: TableMeta, key: String, batchId: Long): Boolean =
-    meta.properties.get(key).exists(_.toLong >= batchId)
 
   /** The probe positions of a value's canonical string rendering —
     * md5 split into four 32-bit words mod [[BloomBits]]. md5 is used

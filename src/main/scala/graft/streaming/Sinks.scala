@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.catalog.SnapshotCatalog
+import graft.catalog.SnapshotCatalog.Expect
 
 /** The reference's two sink connectors, re-expressed as Structured
   * Streaming sinks (SURVEY §2.1 S6/S7, §3.3).
@@ -27,16 +29,26 @@ object Sinks {
     s"graft.stream.$h.last-batch-id"
   }
 
-  /** foreachBatch is AT-LEAST-once: a micro-batch retried after a
-    * mid-commit failure re-runs with the same batchId. True iff that
-    * id is already recorded in the table — the recording rides the
-    * same atomic commit as the rows (`append(..., extraProperties)`),
-    * so "marker present" exactly means "rows landed".
+  /** The batch marker of `checkpointDir`'s stream as a writer reads it
+    * before writing — the precondition its commit states — creating the
+    * table from `schema` first if it is missing. foreachBatch is
+    * AT-LEAST-once: a micro-batch retried after a mid-commit failure
+    * re-runs with the same batchId, and the marker rides the same
+    * atomic commit as the rows, so "marker at or past the id" exactly
+    * means "rows landed".
     */
-  private[graft] def alreadyCommitted(catalog: SnapshotCatalog,
-      ns: String, table: String, key: String, batchId: Long): Boolean =
-    catalog.tableExists(ns, table) &&
-      SnapshotCatalog.batchRecorded(catalog.describe(ns, table), key, batchId)
+  private[graft] def marker(catalog: SnapshotCatalog, ns: String,
+      table: String, checkpointDir: String, schema: StructType,
+      properties: Map[String, String] = Map.empty): Expect = {
+    if (!catalog.tableExists(ns, table))
+      catalog.createTable(ns, table, schema, properties)
+    val key = lastBatchKey(checkpointDir)
+    Expect(key, catalog.describe(ns, table).properties.get(key))
+  }
+
+  /** True iff the marker `seen` records batch `batchId` or a later one. */
+  private[graft] def recorded(seen: Expect, batchId: Long): Boolean =
+    seen.value.exists(_.toLong >= batchId)
 
   /** S6 — Iceberg-like append sink: every trigger (default 5 s, matching
     * `iceberg.control.commit-interval-ms=5000`,
@@ -62,19 +74,18 @@ object Sinks {
 
   /** The icebergLike per-batch commit, extracted so replay idempotence
     * is directly testable (StreamingSpec calls it twice with one id).
-    * The marker check before the write skips an ordinary replay
-    * cheaply; `appendOnce` repeats it inside the commit, where it
-    * decides a race between two writers replaying the same batch.
+    * The marker read before the write skips an ordinary replay
+    * cheaply; the append's `expect` repeats it inside the commit
+    * attempt, where it decides a race between two writers replaying
+    * the same batch.
     */
   private[graft] def appendBatch(catalog: SnapshotCatalog, ns: String,
       table: String, checkpointDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val key = lastBatchKey(checkpointDir)
-    if (!alreadyCommitted(catalog, ns, table, key, batchId)) {
-      if (!catalog.tableExists(ns, table))            // auto-create-enabled
-        catalog.createTable(ns, table, batch.schema)
-      catalog.appendOnce(ns, table, batch, key, batchId): Unit // evolve inside
-    }
+    val seen = marker(catalog, ns, table, checkpointDir, batch.schema)
+    if (!recorded(seen, batchId))
+      catalog.append(ns, table, batch, Map(seen.key -> batchId.toString),
+        expect = Some(seen)): Unit // evolve inside
   }
 
   /** Streaming write-audit-publish sink: every micro-batch is staged
@@ -105,41 +116,50 @@ object Sinks {
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val key = lastBatchKey(checkpointDir)
-        if (!alreadyCommitted(catalog, ns, table, key, batchId)) {
-          if (!catalog.tableExists(ns, table))
-            catalog.createTable(ns, table, batch.schema)
-          if (catalog.describe(ns, table).currentSnapshotId.isEmpty) {
-            // bootstrap: no snapshot to branch from yet — the staged
-            // view IS the batch, so audit it directly
-            if (audit(batch))
-              catalog.appendOnce(ns, table, batch, key, batchId): Unit
-          } else {
-            // (re)point the staging branch at the published state,
-            // stage, audit, publish or discard. The batch marker rides
-            // the PUBLISH commit (the first one readers see): a crash
-            // after staging but before publish replays cleanly — the
-            // re-run resets the branch and the orphaned staging
-            // snapshot is abandoned history.
-            //
-            // Audit scope: aggregate invariants (row counts, drift)
-            // need the whole staged view; a PER-ROW/PER-DOC gate
-            // (`auditBatchOnly`) is decided by the new rows alone —
-            // published rows already passed it — so at 100 TB the
-            // audit reads one micro-batch, not the accumulated table.
-            if (catalog.describe(ns, table).refs.contains(branch))
-              catalog.dropRef(ns, table, branch)
-            catalog.createBranch(ns, table, branch)
-            catalog.appendToBranch(ns, table, branch, batch)
-            val auditFrame =
-              if (auditBatchOnly) batch else catalog.readRef(ns, table, branch)
-            if (audit(auditFrame))
-              catalog.publish(ns, table, branch,
-                Map(key -> batchId.toString)): Unit
-          }
-        }
+      .foreachBatch(wapBatch(catalog, ns, table, branch, audit,
+        checkpointDir, auditBatchOnly) _)
+
+  /** The wapSink per-batch commit, extracted for direct replay testing.
+    * Its three commits — the bootstrap append, the branch append and
+    * the publish — each state the marker the batch read, so of two
+    * writers replaying one batch only the first stages and publishes.
+    */
+  private[graft] def wapBatch(catalog: SnapshotCatalog, ns: String,
+      table: String, branch: String, audit: DataFrame => Boolean,
+      checkpointDir: String, auditBatchOnly: Boolean)(
+      batch: DataFrame, batchId: Long): Unit = {
+    val seen = marker(catalog, ns, table, checkpointDir, batch.schema)
+    if (!recorded(seen, batchId)) {
+      val marked = Map(seen.key -> batchId.toString)
+      if (catalog.describe(ns, table).currentSnapshotId.isEmpty) {
+        // bootstrap: no snapshot to branch from yet — the staged
+        // view IS the batch, so audit it directly
+        if (audit(batch))
+          catalog.append(ns, table, batch, marked, expect = Some(seen)): Unit
+      } else {
+        // (re)point the staging branch at the published state,
+        // stage, audit, publish or discard. The batch marker rides
+        // the PUBLISH commit (the first one readers see): a crash
+        // after staging but before publish replays cleanly — the
+        // re-run resets the branch and the orphaned staging
+        // snapshot is abandoned history.
+        //
+        // Audit scope: aggregate invariants (row counts, drift)
+        // need the whole staged view; a PER-ROW/PER-DOC gate
+        // (`auditBatchOnly`) is decided by the new rows alone —
+        // published rows already passed it — so at 100 TB the
+        // audit reads one micro-batch, not the accumulated table.
+        if (catalog.describe(ns, table).refs.contains(branch))
+          catalog.dropRef(ns, table, branch)
+        catalog.createBranch(ns, table, branch)
+        catalog.appendToBranch(ns, table, branch, batch, expect = Some(seen))
+        val auditFrame =
+          if (auditBatchOnly) batch else catalog.readRef(ns, table, branch)
+        if (audit(auditFrame))
+          catalog.publish(ns, table, branch, marked, expect = Some(seen)): Unit
       }
+    }
+  }
 
   /** The per-item contamination report (t56,
     * [[graft.operators.Dedup.contaminationReport]]) as a WAP audit
@@ -241,24 +261,24 @@ object Sinks {
       table: String, keyCols: Seq[String], seqCol: String, opCol: String,
       checkpointDir: String)(batch: DataFrame, batchId: Long): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val key = lastBatchKey(checkpointDir)
-    if (!alreadyCommitted(catalog, ns, table, key, batchId)) {
-      val latest = batch
-        .withColumn("_rk", row_number().over(
-          Window.partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)))
-        .filter(col("_rk") === 1).drop("_rk")
-      val rows = latest.filter(col(opCol) =!= "D").drop(opCol)
-      val dels = latest.filter(col(opCol) === "D")
-        .select(keyCols.map(col): _*)
-      if (!catalog.tableExists(ns, table))
-        catalog.createTable(ns, table, rows.schema)
+    val latest = batch
+      .withColumn("_rk", row_number().over(
+        Window.partitionBy(keyCols.map(col): _*).orderBy(col(seqCol).desc)))
+      .filter(col("_rk") === 1).drop("_rk")
+    val rows = latest.filter(col(opCol) =!= "D").drop(opCol)
+    val dels = latest.filter(col(opCol) === "D")
+      .select(keyCols.map(col): _*)
+    val seen = marker(catalog, ns, table, checkpointDir, rows.schema)
+    if (!recorded(seen, batchId)) {
+      val marked = Map(seen.key -> batchId.toString)
       // the marker is checked again inside the commit, where it decides
       // a race between two writers replaying the same batch
       if (catalog.describe(ns, table).currentSnapshot.isEmpty)
         // first batch: nothing to delete against, plain marked append
-        catalog.appendOnce(ns, table, rows, key, batchId): Unit
+        catalog.append(ns, table, rows, marked, expect = Some(seen)): Unit
       else
-        catalog.cdcUpsertOnce(ns, table, rows, dels, keyCols, key, batchId): Unit
+        catalog.cdcUpsert(ns, table, rows, dels, keyCols, marked,
+          expect = Some(seen)): Unit
     }
   }
 
@@ -369,14 +389,20 @@ object Sinks {
         catalog.createTable(downNs, downTable,
           transform(catalog.read(upNs, upTable)).schema,
           tableProperties): Unit
-      val downMeta = catalog.describe(downNs, downTable)
-      downMeta.properties.get(posKey).map(_.toLong) match {
+      // every commit below states the position this poll read: of two
+      // overlapping polls, only the first applies a bootstrap, window
+      // or resync — the other finds the position moved and its attempt
+      // commits nothing
+      val seen = Expect(posKey,
+        catalog.describe(downNs, downTable).properties.get(posKey))
+      val consumed = Map(posKey -> upSnap.toString)
+      seen.value.map(_.toLong) match {
         case None =>
           // bootstrap: the upstream's current state (transformed), the
           // position recorded atomically with the copy
           catalog.append(downNs, downTable,
-            transform(catalog.read(upNs, upTable)),
-            Map(posKey -> upSnap.toString))
+            transform(catalog.read(upNs, upTable)), consumed,
+            expect = Some(seen))
           pin(upSnap)
           true
         case Some(from) if from == upSnap => false // caught up
@@ -429,7 +455,7 @@ object Sinks {
               // touches ZERO existing downstream files, so every
               // cell/file a window doesn't name stays byte-identical.
               catalog.cdcUpsert(downNs, downTable, transform(ins), dels,
-                keyCols, Map(posKey -> b.toString)): Unit
+                keyCols, Map(posKey -> b.toString), expect = Some(seen)): Unit
             }
             // COMPOSED catch-up for a lagging follower (round 16): a
             // backlog spanning multiple replace-separated runs used to
@@ -474,9 +500,10 @@ object Sinks {
               val dels = ch.filter(col(ct) === "delete")
                 .select(keyCols.map(col): _*).distinct()
               catalog.cdcUpsert(downNs, downTable, transform(ins), dels,
-                keyCols, Map(posKey -> b.toString)): Unit
+                keyCols, Map(posKey -> b.toString), expect = Some(seen)): Unit
             }
-            if (!intact) applyComposed(from, upSnap)
+            // the position the windows below leave recorded
+            val applied = if (!intact) { applyComposed(from, upSnap); upSnap }
             else {
               // collect the replace-separated runs first; a single run
               // takes the direct (no window-function) apply
@@ -499,13 +526,13 @@ object Sinks {
                 applyWindow(a, b)
               }
               else applyComposed(runs.head._1, runs.last._2)
+              runs.lastOption.fold(from)(_._2)
             }
             // trailing replace snapshots applied no window — advance
             // the authoritative bookmark with a metadata-only commit
-            if (catalog.describe(downNs, downTable).properties
-                  .get(posKey).map(_.toLong).getOrElse(from) != upSnap)
-              catalog.updateProperties(downNs, downTable,
-                Map(posKey -> upSnap.toString)): Unit
+            if (applied != upSnap)
+              catalog.updateProperties(downNs, downTable, consumed,
+                expect = Some(Expect(posKey, Some(applied.toString)))): Unit
           } catch {
             // IllegalStateException: data files rewritten by a
             // row-CHANGING commit inside a window (INSERT OVERWRITE,
@@ -520,8 +547,8 @@ object Sinks {
                   "resyncing downstream with one atomic overwrite")
               resyncCount += 1
               catalog.overwrite(downNs, downTable,
-                transform(catalog.read(upNs, upTable)),
-                Map(posKey -> upSnap.toString)): Unit
+                transform(catalog.read(upNs, upTable)), consumed,
+                expect = Some(seen)): Unit
           }
           pin(upSnap)
           true
@@ -542,8 +569,8 @@ object Sinks {
     private def pin(upSnap: Long): Unit =
       try catalog.setRef(upNs, upTable, posRef, upSnap): Unit
       catch {
-        // best-effort means BEST-EFFORT: a lost commit race after
-        // retries (FileAlreadyExistsException) or a concurrently
+        // best-effort means BEST-EFFORT: a commit that lost every
+        // race to other writers or a concurrently
         // expired/rolled-back target must not fail the poll whose
         // authoritative bookmark already landed downstream — the pin
         // simply stays where it was and the next poll advances it

@@ -211,12 +211,10 @@ object VectorIndex {
   private[graft] def commitBatch(catalog: SnapshotCatalog, ns: String,
       table: String, checkpointDir: String)(
       batch: DataFrame, batchId: Long): Unit = {
-    val key = Sinks.lastBatchKey(checkpointDir)
-    if (!Sinks.alreadyCommitted(catalog, ns, table, key, batchId)) {
-      if (!catalog.tableExists(ns, table))
-        catalog.createTable(ns, table, batch.schema,
-          properties = Map(PartitionSpec.PropertyKey -> "identity(cell)"))
-      catalog.appendOnce(ns, table, batch, key, batchId): Unit
-    }
+    val seen = Sinks.marker(catalog, ns, table, checkpointDir, batch.schema,
+      Map(PartitionSpec.PropertyKey -> "identity(cell)"))
+    if (!Sinks.recorded(seen, batchId))
+      catalog.append(ns, table, batch, Map(seen.key -> batchId.toString),
+        expect = Some(seen)): Unit
   }
 }

@@ -137,4 +137,34 @@ class MultiProcessSpec extends SparkTestBase {
     assert(ids == ((0L until 20L).toSet -- Set(0L, 1L, 2L, 3L, 10L) ++
       (100L until 104L)), s"got $ids")
   }
+
+  test("a planned commit that loses its race to another catalog " +
+      "instance refuses and leaves no write dir behind") {
+    import spark.implicits._
+    val wh = tmpDir("graft_lost_race_wh")
+    val a = new SnapshotCatalog(spark, wh)
+    val b = new SnapshotCatalog(spark, wh)
+    a.createTable("db", "t", Seq.empty[(Long, Double)].toDF("id", "v").schema)
+    a.append("db", "t", (0L until 20L).map(i => (i, i.toDouble)).toDF("id", "v"))
+    // a's equality-delete write is the first job to evaluate its keys:
+    // it is held there while b appends
+    val failure = ReplayGate.hold {
+      a.addEqualityDeleteFile("db", "t",
+        Seq(3L).toDF("id").where(ReplayGate.gate()), Seq("id")): Unit
+    } {
+      b.append("db", "t", Seq((100L, 1.0)).toDF("id", "v")): Unit
+    }
+    assert(failure.exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      failure)
+    val eqDirs = {
+      val all = java.nio.file.Files.walk(Paths.get(wh))
+      try {
+        import scala.jdk.CollectionConverters._
+        all.iterator().asScala.filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.contains("delete-eq")).toList
+      } finally all.close()
+    }
+    assert(eqDirs.isEmpty, s"the refused delete left $eqDirs")
+    assert(a.read("db", "t").count() == 21)
+  }
 }

@@ -20,18 +20,32 @@ object ReplayGate {
   }
   def pass(): Boolean = { entered.countDown(); release.await(); true }
 
+  /** A filter that holds the task evaluating it until the gate opens. */
+  def gate(): org.apache.spark.sql.Column =
+    udf(() => pass()).asNondeterministic()()
+
+  /** Runs `first` on a thread until a task of it enters the [[gate]],
+    * runs `second` to completion, then opens the gate and waits for
+    * `first`. Returns what `first` threw, if anything. */
+  def hold(first: => Unit)(second: => Unit): Option[Throwable] = {
+    reset()
+    @volatile var failure: Option[Throwable] = None
+    val t = new Thread(() =>
+      try first catch { case e: Throwable => failure = Some(e) })
+    t.start()
+    assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    try second finally release.countDown()
+    t.join(120000L)
+    assert(!t.isAlive)
+    failure
+  }
+
   /** Two writers replay batch `id` of `rows` through `commit`: both pass
     * the sink's marker check before writing, and the first is held
     * inside its write job until the second has committed. */
   def race(commit: (DataFrame, Long) => Unit, rows: DataFrame, id: Long): Unit = {
-    val gate = udf(() => pass()).asNondeterministic()
-    reset()
-    val first = new Thread(() => commit(rows.where(gate()), id))
-    first.start()
-    assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    try commit(rows, id) finally release.countDown()
-    first.join(120000L)
-    assert(!first.isAlive)
+    val failure = hold(commit(rows.where(gate()), id))(commit(rows, id))
+    assert(failure.isEmpty, failure)
   }
 
   /** The number of directories under `root` whose name starts with `prefix`. */
@@ -149,6 +163,76 @@ class StreamingSpec extends SparkTestBase {
     // the loser deleted both of its write dirs: one delete and one data
     // dir remain, the winner's
     assert(ReplayGate.dirsNamed(wh, "cdc-") == 2)
+  }
+
+  test("WAP replay race: two writers replaying one batch id publish it " +
+      "once, by fast-forward") {
+    val cat = new SnapshotCatalog(spark, tmpDir("graft-wap-race-wh"))
+    val commit = Sinks.wapBatch(cat, "db", "t", "staging", _ => true,
+      "ckpt-wap-race", auditBatchOnly = true) _
+    commit(spark.range(0, 100, 1, 1).toDF("id"), 0L) // a non-empty table
+    val before = cat.describe("db", "t").currentSnapshotId.get
+    ReplayGate.race(commit, spark.range(100, 300, 1, 1).toDF("id"), 1L)
+    assert(cat.read("db", "t").count() == 300)
+    // the published head is the one staged append, chained directly on
+    // the head the batch found: the pointer moved by fast-forward
+    val meta = cat.describe("db", "t")
+    val head = meta.currentSnapshot.get
+    assert(head.parentId.contains(before))
+    assert(head.operation.contains("append") && head.cherrypickedFrom.isEmpty)
+    assert(meta.refs.get("staging").contains(head.snapshotId))
+  }
+
+  /** An upstream table `up.t` of `n` rows in one file, for the follower
+    * races: one file keeps a held follower to one blocked task. */
+  private def followed(wh: String, n: Long): SnapshotCatalog = {
+    import spark.implicits._
+    val cat = new SnapshotCatalog(spark, wh)
+    val rows = (0L until n).map(i => (i, i.toDouble)).toDF("id", "v").coalesce(1)
+    cat.createTable("up", "t", rows.schema)
+    cat.append("up", "t", rows)
+    cat
+  }
+
+  test("changelog follower race: two overlapping polls bootstrap the " +
+      "downstream once") {
+    val wh = tmpDir("graft-follow-race0-wh")
+    val cat = followed(wh, 300L)
+    // the first follower is held inside its bootstrap write
+    val held = Sinks.changelogFollower(cat, "up", "t", "down", "t",
+      Seq("id"), transform = _.where(ReplayGate.gate()))
+    val other = Sinks.changelogFollower(cat, "up", "t", "down", "t", Seq("id"))
+    val failure = ReplayGate.hold(held.poll(): Unit)(other.poll(): Unit)
+    assert(failure.isEmpty, failure)
+    assert(cat.read("down", "t").count() == cat.read("up", "t").count())
+    assert(cat.describe("down", "t").snapshots.size == 1)
+    // the loser deleted its unreferenced write dir
+    assert(ReplayGate.dirsNamed(s"$wh/down", "write-") == 1)
+  }
+
+  test("changelog follower race: two overlapping polls apply a window once") {
+    import spark.implicits._
+    val wh = tmpDir("graft-follow-race1-wh")
+    val cat = followed(wh, 300L)
+    Sinks.changelogFollower(cat, "up", "t", "down", "t", Seq("id")).poll()
+    // an upstream window that updates, deletes and inserts keys
+    cat.cdcUpsert("up", "t",
+      rows = ((0L until 50L).map(i => (i, -1.0)) ++
+        (1000L until 1020L).map(i => (i, 1.0))).toDF("id", "v").coalesce(1),
+      deletes = (290L until 300L).toDF("id"), keyCols = Seq("id"))
+    val held = Sinks.changelogFollower(cat, "up", "t", "down", "t",
+      Seq("id"), transform = _.where(ReplayGate.gate()))
+    val other = Sinks.changelogFollower(cat, "up", "t", "down", "t", Seq("id"))
+    val failure = ReplayGate.hold(held.poll(): Unit)(other.poll(): Unit)
+    assert(failure.isEmpty, failure)
+    // one window snapshot on top of the bootstrap, and the state one
+    // poll gives: the (identity-transformed) upstream's
+    assert(cat.describe("down", "t").snapshots.size == 2)
+    def state(ns: String) = cat.read(ns, "t").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    assert(state("down") == state("up"))
+    // one delete and one data dir remain, the winner's
+    assert(ReplayGate.dirsNamed(s"$wh/down", "cdc-") == 2)
   }
 
   test("WAP sink: failing audit discards the batch unseen; passing publishes") {

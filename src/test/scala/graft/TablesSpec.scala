@@ -179,4 +179,44 @@ class TablesSpec extends SparkTestBase {
     val (a0, a1) = member(text, "def addFiles(")
     assert(calls.size == 1 && calls.forall(i => i > a0 && i < a1), calls)
   }
+
+  test("every catalog commit goes through the one commit loop, and every " +
+      "streaming writer states its precondition") {
+    val text = sources("src/main/scala/graft/catalog")
+      .collect { case ("SnapshotCatalog.scala", t) => t }.head
+    val loop = member(text, "private def transact(")
+    val create = member(text, "def createTable(")
+    def where(pattern: String): Seq[String] =
+      pattern.r.findAllMatchIn(text).map(_.start).toSeq.map { i =>
+        if (i > loop._1 && i < loop._2) "transact"
+        else if (i > create._1 && i < create._2) "createTable"
+        else s"offset $i"
+      }
+    // the loop commits; createTable writes the first version directly
+    assert(where(raw"(?<!def )\bcommit\(").sorted == Seq("createTable", "transact"))
+    // a lost race is caught in the loop; createTable tolerates a
+    // concurrent creator's uuid file
+    assert(where(raw"case\s+\w+\s*:\s*(java\.nio\.file\.)?FileAlreadyExistsException")
+      .sorted == Seq("createTable", "transact"))
+    val main = sources("src/main")
+    for (gone <- Seq("appendOnce", "cdcUpsertOnce", "retryMetaCommit",
+        "commitPlanned", "recorded:"))
+      assert(main.forall(!_._2.contains(gone)), gone)
+    // a streaming writer decides on the marker or position it read
+    // inside the commit attempt: every commit it makes passes `expect`
+    val call = raw"catalog\.(append|overwrite|cdcUpsert|updateProperties|appendToBranch|publish)\(".r
+    val calls = sources("src/main/scala/graft/streaming").flatMap { case (file, t) =>
+      call.findAllMatchIn(t).map { m =>
+        var depth = 1
+        var i = m.end
+        while (depth > 0) {
+          if (t(i) == '(') depth += 1 else if (t(i) == ')') depth -= 1
+          i += 1
+        }
+        s"$file: ${t.substring(m.start, i)}"
+      }
+    }
+    assert(calls.size >= 12, calls)
+    assert(calls.forall(_.contains("expect = ")), calls.filterNot(_.contains("expect = ")))
+  }
 }
