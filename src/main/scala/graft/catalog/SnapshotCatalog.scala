@@ -83,27 +83,36 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
 
   // -------------------------------------------------------------- tables
 
+  /** Creates table `ns.name` at version 1; fails if it exists. With
+    * `ifAbsent` it returns the existing table instead, also when a
+    * concurrent creator commits version 1 first: writers that
+    * auto-create a missing table can start together.
+    */
   def createTable(ns: String, name: String, schema: StructType,
-      properties: Map[String, String] = Map.empty): TableMeta = {
-    require(!tableExists(ns, name), s"table $ns.$name already exists")
+      properties: Map[String, String] = Map.empty,
+      ifAbsent: Boolean = false): TableMeta = {
+    if (tableExists(ns, name)) {
+      require(ifAbsent, s"table $ns.$name already exists")
+      return describe(ns, name)
+    }
     createNamespace(ns)
     Files.createDirectories(metaDir(ns, name))
     Files.createDirectories(dataDir(ns, name))
+    // false when a concurrent creator wrote the file first
+    def createdNew(write: => Unit): Boolean =
+      try { write; true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false }
     // per-INCARNATION uuid (Iceberg's table-uuid): written once at
     // CREATE, deleted by DROP, so a DROP + re-CREATE that reuses
     // version numbers can never alias a cached metadata parse — the
     // uuid is part of [[loadMeta]]'s cache key, closing the residual
     // cross-process window that (path, size, mtime, fileKey) alone
-    // leaves open when the filesystem reuses an inode
-    val uuid = java.util.UUID.randomUUID().toString
-    try Files.write(uuidFile(ns, name),
-      uuid.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
-    catch {
-      // a concurrent creator wrote it — same incarnation either way
-      // (only one racer's v1 commit can win)
-      case _: java.nio.file.FileAlreadyExistsException => ()
-    }
+    // leaves open when the filesystem reuses an inode. A concurrent
+    // creator's uuid is the same incarnation either way (only one
+    // racer's v1 commit can win).
+    createdNew(Files.write(uuidFile(ns, name),
+      java.util.UUID.randomUUID().toString.getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE): Unit): Unit
     val meta = TableMeta(
       tableId = s"$ns.$name",
       tableUuid = incarnationUuid(ns, name),
@@ -115,8 +124,14 @@ class SnapshotCatalog(spark: SparkSession, val warehouse: String) {
       properties = DefaultProperties ++ properties,
       currentSnapshotId = None,
       snapshots = Seq.empty)
-    commit(ns, name, version = 1, meta)
-    meta
+    if (createdNew(commit(ns, name, version = 1, meta))) meta
+    else {
+      require(ifAbsent, s"table $ns.$name already exists")
+      // the winner moves the version hint right after its v1 write
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tableExists(ns, name) && System.nanoTime() < deadline) Thread.sleep(1)
+      describe(ns, name)
+    }
   }
 
   /** The commit loop, through which every commit but [[createTable]]'s

@@ -2,8 +2,10 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+
+import graft.functions.expressions.VectorKernels.{JavaName => K, MatrixType, TablesType, VectorType}
 
 /** Centroid-assignment primitives for the ANN/quantization operators,
   * as native codegen expressions.
@@ -20,16 +22,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * shapes are wrong at 100 TB.
   *
   * These expressions take the centroid table as a LITERAL ARRAY
-  * ARGUMENT (`typedlit` of the nested Seq): the generated code is a
-  * short data-driven loop over `ArrayData` — constant bytecode size
-  * regardless of centroid count, stays inside WholeStageCodegen, and
-  * assignment becomes a pure projection: no join, no Exchange, no
-  * generated row explosion.
+  * ARGUMENT (`typedlit` of the nested Seq): the generated code is one
+  * call to a [[VectorKernels]] loop over the table decoded once per
+  * task — constant bytecode size regardless of centroid count, stays
+  * inside WholeStageCodegen, and assignment becomes a pure projection:
+  * no join, no Exchange, no generated row explosion.
   *
-  * Tie-break parity: all argmaxes update on `>=` while scanning cell
-  * ids ascending — ties go to the LARGER cell id, exactly the order of
-  * the `max(struct(score, cid))` aggregations they replace, so
-  * swapping them in moves no assignment. NaN handling: a NaN score
+  * Tie-break parity (`VectorKernels.takes`): all argmaxes update on
+  * `>=` while scanning cell ids ascending — ties go to the LARGER cell
+  * id, exactly the order of the `max(struct(score, cid))` aggregations
+  * they replace, so swapping them in moves no assignment. NaN handling: a NaN score
   * never wins against a finite one, a finite score always displaces a
   * NaN incumbent, and cell 0 is the fallback winner when EVERY score
   * is NaN — so a NaN embedding gets a valid cell id (never a -1 that
@@ -41,15 +43,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 object CentroidOps {
 
   import org.apache.spark.sql.Column
-
-  /** take-the-candidate rule shared by every argmax in this file:
-    * first candidate unconditionally; then `s >= best` (ties → larger
-    * id), with a finite score always displacing a NaN incumbent and a
-    * NaN score never displacing a finite one (`best != best` ⇔ NaN).
-    */
-  private[expressions] def takes(s: Double, best: Double,
-      bestC: Int): Boolean =
-    bestC < 0 || s >= best || (best != best && s == s)
 
   val NearestCellFn = "graft_nearest_cell"
   val PqEncodeFn = "graft_pq_encode"
@@ -84,77 +77,23 @@ object CentroidOps {
   * k-means / IVF home cell); with biases[c] = |c|²/2 it is Euclidean
   * argmin (plain k-means), since argmin ||x−c||² = argmax (<x,c> −
   * |c|²/2). Dots run over the common prefix length; null elements
-  * contribute 0 (same as [[DotProduct]]). Empty centroid array → -1.
+  * are skipped (same as [[DotProduct]]). Empty centroid array → -1.
   */
 case class NearestCell(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, MatrixType, VectorType)
 
   override def dataType: DataType = IntegerType
 
-  override def prettyName: String = "graft_nearest_cell"
+  override def prettyName: String = CentroidOps.NearestCellFn
 
-  override protected def nullSafeEval(v: Any, cs: Any, bs: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val cents = cs.asInstanceOf[ArrayData]
-    val biases = bs.asInstanceOf[ArrayData]
-    var best = Double.NegativeInfinity
-    var bestC = -1
-    var c = 0
-    val k = cents.numElements()
-    while (c < k) {
-      val cent = cents.getArray(c)
-      val n = math.min(vec.numElements(), cent.numElements())
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        if (!vec.isNullAt(i) && !cent.isNullAt(i)) {
-          s += vec.getDouble(i) * cent.getDouble(i)
-        }
-        i += 1
-      }
-      if (c < biases.numElements() && !biases.isNullAt(c)) {
-        s -= biases.getDouble(c)
-      }
-      if (CentroidOps.takes(s, best, bestC)) { best = s; bestC = c }
-      c += 1
-    }
-    bestC
-  }
+  override protected def nullSafeEval(v: Any, cs: Any, bs: Any): Any =
+    VectorKernels.nearestCell(v.asInstanceOf[ArrayData], mat(1, cs), mat(2, bs))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cs, bs) => {
-      val best = ctx.freshName("best")
-      val bestC = ctx.freshName("bestC")
-      val k = ctx.freshName("k")
-      val c = ctx.freshName("c")
-      val cent = ctx.freshName("cent")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      s"""
-         |double $best = java.lang.Double.NEGATIVE_INFINITY;
-         |int $bestC = -1;
-         |int $k = $cs.numElements();
-         |for (int $c = 0; $c < $k; $c++) {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $cent = $cs.getArray($c);
-         |  int $n = java.lang.Math.min($v.numElements(), $cent.numElements());
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$v.isNullAt($i) && !$cent.isNullAt($i)) {
-         |      $s += $v.getDouble($i) * $cent.getDouble($i);
-         |    }
-         |  }
-         |  if ($c < $bs.numElements() && !$bs.isNullAt($c)) {
-         |    $s -= $bs.getDouble($c);
-         |  }
-         |  if ($bestC < 0 || $s >= $best ||
-         |      (java.lang.Double.isNaN($best) && !java.lang.Double.isNaN($s))) {
-         |    $best = $s; $bestC = $c;
-         |  }
-         |}
-         |${ev.value} = $bestC;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, cs, bs) =>
+      s"${ev.value} = $K.nearestCell($v, ${matCode(ctx, 1, cs)}, ${matCode(ctx, 2, bs)});")
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -177,105 +116,20 @@ case class NearestCell(first: Expression, second: Expression,
   * probe regime this exists for.
   */
 case class TopCells(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, MatrixType, IntegerType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def prettyName: String = "graft_top_cells"
+  override def prettyName: String = CentroidOps.TopCellsFn
 
-  override protected def nullSafeEval(v: Any, cs: Any, np: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val cents = cs.asInstanceOf[ArrayData]
-    val k = cents.numElements()
-    val nOut = math.min(np.asInstanceOf[Int], k)
-    val scores = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val cent = cents.getArray(c)
-      val n = math.min(vec.numElements(), cent.numElements())
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        if (!vec.isNullAt(i) && !cent.isNullAt(i)) {
-          s += vec.getDouble(i) * cent.getDouble(i)
-        }
-        i += 1
-      }
-      scores(c) = s
-      c += 1
-    }
-    val used = new Array[Boolean](k)
-    val out = new Array[Int](math.max(nOut, 0))
-    var r = 0
-    while (r < nOut) {
-      var bestC = -1
-      var cc = 0
-      while (cc < k) {
-        if (!used(cc) && (bestC < 0 || {
-          val cmp = java.lang.Double.compare(scores(cc), scores(bestC))
-          cmp > 0 || (cmp == 0 && cc > bestC)
-        })) bestC = cc
-        cc += 1
-      }
-      used(bestC) = true
-      out(r) = bestC
-      r += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any, cs: Any, np: Any): Any =
+    VectorKernels.topCells(v.asInstanceOf[ArrayData], mat(1, cs), np.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cs, np) => {
-      val k = ctx.freshName("k")
-      val nOut = ctx.freshName("nOut")
-      val scores = ctx.freshName("scores")
-      val used = ctx.freshName("used")
-      val out = ctx.freshName("out")
-      val c = ctx.freshName("c")
-      val cent = ctx.freshName("cent")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val r = ctx.freshName("r")
-      val bestC = ctx.freshName("bestC")
-      val cc = ctx.freshName("cc")
-      val cmp = ctx.freshName("cmp")
-      val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-      s"""
-         |int $k = $cs.numElements();
-         |int $nOut = java.lang.Math.min($np, $k);
-         |if ($nOut < 0) { $nOut = 0; }
-         |double[] $scores = new double[$k];
-         |for (int $c = 0; $c < $k; $c++) {
-         |  $ad $cent = $cs.getArray($c);
-         |  int $n = java.lang.Math.min($v.numElements(), $cent.numElements());
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$v.isNullAt($i) && !$cent.isNullAt($i)) {
-         |      $s += $v.getDouble($i) * $cent.getDouble($i);
-         |    }
-         |  }
-         |  $scores[$c] = $s;
-         |}
-         |boolean[] $used = new boolean[$k];
-         |int[] $out = new int[$nOut];
-         |for (int $r = 0; $r < $nOut; $r++) {
-         |  int $bestC = -1;
-         |  for (int $cc = 0; $cc < $k; $cc++) {
-         |    if (!$used[$cc]) {
-         |      if ($bestC < 0) { $bestC = $cc; }
-         |      else {
-         |        int $cmp = java.lang.Double.compare($scores[$cc], $scores[$bestC]);
-         |        if ($cmp > 0 || ($cmp == 0 && $cc > $bestC)) { $bestC = $cc; }
-         |      }
-         |    }
-         |  }
-         |  $used[$bestC] = true;
-         |  $out[$r] = $bestC;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, cs, np) =>
+      s"${ev.value} = $K.topCells($v, ${matCode(ctx, 1, cs)}, $np);")
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -292,126 +146,24 @@ case class TopCells(first: Expression, second: Expression,
   * silently shifted subspace boundaries).
   */
 case class PqEncode(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, TablesType, MatrixType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
   // null on a length-mismatched vector even over non-null children
   override def nullable: Boolean = true
 
-  override def prettyName: String = "graft_pq_encode"
+  override def prettyName: String = CentroidOps.PqEncodeFn
 
-  override protected def nullSafeEval(v: Any, bk: Any, bs: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val books = bk.asInstanceOf[ArrayData]
-    val biases = bs.asInstanceOf[ArrayData]
-    val m = books.numElements()
-    if (m == 0) return new GenericArrayData(Array.emptyIntArray)
-    if (books.isNullAt(0)) return null
-    val cents0 = books.getArray(0)
-    val sd = if (cents0.numElements() == 0 || cents0.isNullAt(0)) 0
-      else cents0.getArray(0).numElements()
-    if (vec.numElements() != m * sd) return null
-    val codes = new Array[Int](m)
-    var s = 0
-    while (s < m) {
-      val cents = books.getArray(s)
-      val bias = if (s < biases.numElements()) biases.getArray(s) else null
-      var best = Double.NegativeInfinity
-      var bestC = -1
-      var c = 0
-      val k = cents.numElements()
-      while (c < k) {
-        val cent = cents.getArray(c)
-        val n = math.min(sd, cent.numElements())
-        var dot = 0.0
-        var i = 0
-        while (i < n) {
-          val vi = s * sd + i
-          if (!vec.isNullAt(vi) && !cent.isNullAt(i)) {
-            dot += vec.getDouble(vi) * cent.getDouble(i)
-          }
-          i += 1
-        }
-        if (bias != null && c < bias.numElements() && !bias.isNullAt(c)) {
-          dot -= bias.getDouble(c)
-        }
-        if (CentroidOps.takes(dot, best, bestC)) { best = dot; bestC = c }
-        c += 1
-      }
-      codes(s) = bestC
-      s += 1
-    }
-    new GenericArrayData(codes)
-  }
+  override protected def nullSafeEval(v: Any, bk: Any, bs: Any): Any =
+    VectorKernels.pqEncode(v.asInstanceOf[ArrayData], mat(1, bk), mat(2, bs))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, bk, bs) => {
-      val m = ctx.freshName("m")
-      val sd = ctx.freshName("sd")
-      val codes = ctx.freshName("codes")
-      val s = ctx.freshName("s")
-      val cents = ctx.freshName("cents")
-      val cents0 = ctx.freshName("cents0")
-      val bias = ctx.freshName("bias")
-      val best = ctx.freshName("best")
-      val bestC = ctx.freshName("bestC")
-      val k = ctx.freshName("k")
-      val c = ctx.freshName("c")
-      val cent = ctx.freshName("cent")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val i = ctx.freshName("i")
-      val vi = ctx.freshName("vi")
-      val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-      s"""
-         |int $m = $bk.numElements();
-         |int $sd = 0;
-         |boolean ${sd}Bad = false;
-         |if ($m > 0) {
-         |  if ($bk.isNullAt(0)) { ${sd}Bad = true; }
-         |  else {
-         |    $ad $cents0 = $bk.getArray(0);
-         |    $sd = ($cents0.numElements() == 0 || $cents0.isNullAt(0)) ? 0
-         |      : $cents0.getArray(0).numElements();
-         |  }
-         |}
-         |if (${sd}Bad || ($m > 0 && $v.numElements() != $m * $sd)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  int[] $codes = new int[$m];
-         |  for (int $s = 0; $s < $m; $s++) {
-         |    $ad $cents = $bk.getArray($s);
-         |    $ad $bias =
-         |      $s < $bs.numElements() ? $bs.getArray($s) : null;
-         |    double $best = java.lang.Double.NEGATIVE_INFINITY;
-         |    int $bestC = -1;
-         |    int $k = $cents.numElements();
-         |    for (int $c = 0; $c < $k; $c++) {
-         |      $ad $cent = $cents.getArray($c);
-         |      int $n = java.lang.Math.min($sd, $cent.numElements());
-         |      double $dot = 0.0;
-         |      for (int $i = 0; $i < $n; $i++) {
-         |        int $vi = $s * $sd + $i;
-         |        if (!$v.isNullAt($vi) && !$cent.isNullAt($i)) {
-         |          $dot += $v.getDouble($vi) * $cent.getDouble($i);
-         |        }
-         |      }
-         |      if ($bias != null && $c < $bias.numElements() && !$bias.isNullAt($c)) {
-         |        $dot -= $bias.getDouble($c);
-         |      }
-         |      if ($bestC < 0 || $dot >= $best ||
-         |          (java.lang.Double.isNaN($best) && !java.lang.Double.isNaN($dot))) {
-         |        $best = $dot; $bestC = $c;
-         |      }
-         |    }
-         |    $codes[$s] = $bestC;
-         |  }
-         |  ${ev.value} =
-         |    new org.apache.spark.sql.catalyst.util.GenericArrayData($codes);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, bk, bs) =>
+      s"""${ev.value} = $K.pqEncode($v, ${matCode(ctx, 1, bk)}, ${matCode(ctx, 2, bs)});
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =
@@ -431,99 +183,32 @@ case class PqEncode(first: Expression, second: Expression,
   * counts those nulls separately as corrupt rows.
   */
 case class PqError(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] =
+    Seq(VectorType, ArrayType(IntegerType), TablesType)
 
   override def dataType: DataType = DoubleType
 
   // null on a length-mismatched vector even over non-null children
   override def nullable: Boolean = true
 
-  override def prettyName: String = "graft_pq_error"
+  override def prettyName: String = CentroidOps.PqErrorFn
 
   override protected def nullSafeEval(v: Any, cd: Any, bk: Any): Any = {
     val resid = v.asInstanceOf[ArrayData]
-    val codes = cd.asInstanceOf[ArrayData]
-    val books = bk.asInstanceOf[ArrayData]
-    val m = books.numElements()
-    if (m == 0) return 0.0
-    if (books.isNullAt(0)) return null
-    val cents0 = books.getArray(0)
-    val sd = if (cents0.numElements() == 0 || cents0.isNullAt(0)) 0
-      else cents0.getArray(0).numElements()
-    if (resid.numElements() != m * sd) return null
-    var err = 0.0
-    var s = 0
-    while (s < m) {
-      val cents = books.getArray(s)
-      val c = if (s < codes.numElements() && !codes.isNullAt(s))
-        codes.getInt(s) else -1
-      val cent = if (c >= 0 && c < cents.numElements()) cents.getArray(c)
-        else null
-      var i = 0
-      while (i < sd) {
-        val vi = s * sd + i
-        val x = if (resid.isNullAt(vi)) 0.0 else resid.getDouble(vi)
-        val y = if (cent != null && i < cent.numElements() &&
-          !cent.isNullAt(i)) cent.getDouble(i) else 0.0
-        val d = x - y
-        err += d * d
-        i += 1
-      }
-      s += 1
-    }
-    err
+    val books = mat(2, bk)
+    if (VectorKernels.pqFits(resid, books))
+      VectorKernels.pqError(resid, cd.asInstanceOf[ArrayData], books)
+    else null
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (v, cd, bk) => {
-      val m = ctx.freshName("m")
-      val sd = ctx.freshName("sd")
-      val err = ctx.freshName("err")
-      val s = ctx.freshName("s")
-      val cents = ctx.freshName("cents")
-      val c = ctx.freshName("c")
-      val cent = ctx.freshName("cent")
-      val i = ctx.freshName("i")
-      val vi = ctx.freshName("vi")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val d = ctx.freshName("d")
-      val cents0 = ctx.freshName("cents0")
-      val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-      s"""
-         |int $m = $bk.numElements();
-         |double $err = 0.0;
-         |int $sd = 0;
-         |boolean ${sd}Bad = false;
-         |if ($m > 0) {
-         |  if ($bk.isNullAt(0)) { ${sd}Bad = true; }
-         |  else {
-         |    $ad $cents0 = $bk.getArray(0);
-         |    $sd = ($cents0.numElements() == 0 || $cents0.isNullAt(0)) ? 0
-         |      : $cents0.getArray(0).numElements();
-         |  }
-         |}
-         |if (${sd}Bad || ($m > 0 && $v.numElements() != $m * $sd)) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |for (int $s = 0; $s < $m; $s++) {
-         |  $ad $cents = $bk.getArray($s);
-         |  int $c = ($s < $cd.numElements() && !$cd.isNullAt($s))
-         |    ? $cd.getInt($s) : -1;
-         |  $ad $cent = ($c >= 0 && $c < $cents.numElements())
-         |    ? $cents.getArray($c) : null;
-         |  for (int $i = 0; $i < $sd; $i++) {
-         |    int $vi = $s * $sd + $i;
-         |    double $x = $v.isNullAt($vi) ? 0.0 : $v.getDouble($vi);
-         |    double $y = ($cent != null && $i < $cent.numElements() &&
-         |      !$cent.isNullAt($i)) ? $cent.getDouble($i) : 0.0;
-         |    double $d = $x - $y;
-         |    $err += $d * $d;
-         |  }
-         |}
-         |${ev.value} = $err;
-         |}
-       """.stripMargin
+      val books = ctx.freshName("books")
+      s"""${classOf[Matrix].getName} $books = ${matCode(ctx, 2, bk)};
+         |${ev.isNull} = !$K.pqFits($v, $books);
+         |if (!${ev.isNull}) { ${ev.value} = $K.pqError($v, $cd, $books); }""".stripMargin
     })
 
   override protected def withNewChildrenInternal(newFirst: Expression,
@@ -537,7 +222,9 @@ case class PqError(first: Expression, second: Expression,
   * builds. Out-of-range `cell` → null (never silently wrong).
   */
 case class CentroidResidual(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, MatrixType, IntegerType)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
@@ -545,52 +232,15 @@ case class CentroidResidual(first: Expression, second: Expression,
   // forces a mutable isNull slot in codegen (FalseLiteral otherwise)
   override def nullable: Boolean = true
 
-  override def prettyName: String = "graft_centroid_residual"
+  override def prettyName: String = CentroidOps.ResidualFn
 
-  override protected def nullSafeEval(v: Any, cs: Any, cl: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val cents = cs.asInstanceOf[ArrayData]
-    val cell = cl.asInstanceOf[Int]
-    if (cell < 0 || cell >= cents.numElements()) return null
-    val cent = cents.getArray(cell)
-    val n = vec.numElements()
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      val x = if (vec.isNullAt(i)) 0.0 else vec.getDouble(i)
-      val c = if (i < cent.numElements() && !cent.isNullAt(i)) cent.getDouble(i)
-        else 0.0
-      out(i) = x - c
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any, cs: Any, cl: Any): Any =
+    VectorKernels.residual(v.asInstanceOf[ArrayData], mat(1, cs), cl.asInstanceOf[Int])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, cs, cl) => {
-      val cent = ctx.freshName("cent")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val cv = ctx.freshName("cv")
-      s"""
-         |if ($cl < 0 || $cl >= $cs.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  org.apache.spark.sql.catalyst.util.ArrayData $cent = $cs.getArray($cl);
-         |  int $n = $v.numElements();
-         |  double[] $out = new double[$n];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $v.isNullAt($i) ? 0.0 : $v.getDouble($i);
-         |    double $cv = ($i < $cent.numElements() && !$cent.isNullAt($i))
-         |      ? $cent.getDouble($i) : 0.0;
-         |    $out[$i] = $x - $cv;
-         |  }
-         |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, cs, cl) =>
+      s"""${ev.value} = $K.residual($v, ${matCode(ctx, 1, cs)}, $cl);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): Expression =

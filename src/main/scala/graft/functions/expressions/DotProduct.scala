@@ -1,9 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, DoubleType}
+
+import graft.functions.expressions.VectorKernels.{JavaName => K, VectorType}
 
 /** Native dot product over two `array<double>` columns.
   *
@@ -20,47 +22,23 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * `aggregate` fold and DuckDB's list functions, keeping oracle
   * comparisons bit-stable. Null arrays propagate null (NullIntolerant
   * via BinaryExpression's default nullSafeEval path); null ELEMENTS are
-  * treated as 0 contribution.
+  * skipped. Other numeric arrays are cast to `array<double>` at
+  * analysis. Both operands are read in place: no per-pair copy.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, VectorType)
 
   override def dataType: DataType = DoubleType
 
-  override def prettyName: String = "graft_dot"
+  override def prettyName: String = DotProduct.FnName
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) s += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // freshName: two DotProduct instances can land in one codegen stage
-      // (e.g. norm + score in the same projection) — fixed local names
-      // would make janino reject the class and force interpreted eval.
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $sum += $a.getDouble($i) * $b.getDouble($i);
-         |  }
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $K.dot($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -2,13 +2,16 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+
+import graft.functions.expressions.VectorKernels.{JavaName => K, TablesType, VectorType}
 
 /** All-tables sign-LSH bucket ids in ONE data-driven loop:
   * `graft_sign_buckets(vec, planes)` where `planes` is the literal
   * nested array (table → plane → coords) returns `array<int>` — one
-  * bucket per table, bit p set iff <vec, planes[t][p]> >= 0.
+  * bucket per table, bit p set iff <vec, planes[t][p]> >= 0. A table
+  * of more than 32 planes is an error: an `int` has no bit for plane 32.
   *
   * Why an expression (the [[CentroidOps]] argument, measured on e05's
   * sf1 replica, round 9): the unrolled per-plane form — nTables ×
@@ -21,7 +24,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * WholeStageCodegen (~1 s for the same stage).
   *
   * Parity with the unrolled form: dots accumulate left-to-right over
-  * the common prefix, null ELEMENTS contribute 0 (same as
+  * the common prefix, null ELEMENTS are skipped (same as
   * [[DotProduct]]), a NaN projection sets no bit (`NaN >= 0` is
   * false). A null vector returns null (row dropped by the downstream
   * posexplode) where the unrolled form produced bucket 0 — no caller
@@ -30,80 +33,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * silently pair with real vectors.
   */
 case class SignBuckets(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, TablesType)
+
+  override protected def maxRows: Int = 32
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def prettyName: String = "graft_sign_buckets"
+  override def prettyName: String = SignBuckets.FnName
 
-  override protected def nullSafeEval(v: Any, ps: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val tables = ps.asInstanceOf[ArrayData]
-    val nT = tables.numElements()
-    val out = new Array[Int](nT)
-    var t = 0
-    while (t < nT) {
-      val planes = tables.getArray(t)
-      val nP = planes.numElements()
-      var bucket = 0
-      var p = 0
-      while (p < nP) {
-        val plane = planes.getArray(p)
-        val n = math.min(vec.numElements(), plane.numElements())
-        var s = 0.0
-        var i = 0
-        while (i < n) {
-          if (!vec.isNullAt(i) && !plane.isNullAt(i)) {
-            s += vec.getDouble(i) * plane.getDouble(i)
-          }
-          i += 1
-        }
-        if (s >= 0) bucket |= 1 << p
-        p += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any, ps: Any): Any =
+    VectorKernels.signBuckets(v.asInstanceOf[ArrayData], mat(1, ps))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, ps) => {
-      val nT = ctx.freshName("nT")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val planes = ctx.freshName("planes")
-      val nP = ctx.freshName("nP")
-      val bucket = ctx.freshName("bucket")
-      val p = ctx.freshName("p")
-      val plane = ctx.freshName("plane")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-      s"""
-         |int $nT = $ps.numElements();
-         |int[] $out = new int[$nT];
-         |for (int $t = 0; $t < $nT; $t++) {
-         |  $ad $planes = $ps.getArray($t);
-         |  int $nP = $planes.numElements();
-         |  int $bucket = 0;
-         |  for (int $p = 0; $p < $nP; $p++) {
-         |    $ad $plane = $planes.getArray($p);
-         |    int $n = java.lang.Math.min($v.numElements(), $plane.numElements());
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      if (!$v.isNullAt($i) && !$plane.isNullAt($i)) {
-         |        $s += $v.getDouble($i) * $plane.getDouble($i);
-         |      }
-         |    }
-         |    if ($s >= 0) { $bucket |= 1 << $p; }
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, ps) =>
+      s"${ev.value} = $K.signBuckets($v, ${matCode(ctx, 1, ps)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -141,93 +86,20 @@ object SignBuckets {
   * NEGATIVE index (`NaN >= 0` is false in the `when`).
   */
 case class CpBuckets(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with MatrixArgs {
+
+  override def inputTypes: Seq[DataType] = Seq(VectorType, TablesType)
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def prettyName: String = "graft_cp_buckets"
+  override def prettyName: String = SignBuckets.CpFnName
 
-  override protected def nullSafeEval(v: Any, rs: Any): Any = {
-    val vec = v.asInstanceOf[ArrayData]
-    val tables = rs.asInstanceOf[ArrayData]
-    val nT = tables.numElements()
-    val out = new Array[Int](nT)
-    var t = 0
-    while (t < nT) {
-      val rot = tables.getArray(t)
-      val nP = rot.numElements()
-      var bestAbs = Double.NegativeInfinity
-      var bestJ = -1
-      var bestVal = 0.0
-      var j = 0
-      while (j < nP) {
-        val row = rot.getArray(j)
-        val n = math.min(vec.numElements(), row.numElements())
-        var s = 0.0
-        var i = 0
-        while (i < n) {
-          if (!vec.isNullAt(i) && !row.isNullAt(i)) {
-            s += vec.getDouble(i) * row.getDouble(i)
-          }
-          i += 1
-        }
-        val a = math.abs(s)
-        if (bestJ < 0 || java.lang.Double.compare(a, bestAbs) > 0) {
-          bestAbs = a; bestJ = j; bestVal = s
-        }
-        j += 1
-      }
-      out(t) = if (bestVal >= 0) bestJ + 1 else -(bestJ + 1)
-      t += 1
-    }
-    new GenericArrayData(out)
-  }
+  override protected def nullSafeEval(v: Any, rs: Any): Any =
+    VectorKernels.cpBuckets(v.asInstanceOf[ArrayData], mat(1, rs))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, rs) => {
-      val nT = ctx.freshName("nT")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val rot = ctx.freshName("rot")
-      val nP = ctx.freshName("nP")
-      val bestAbs = ctx.freshName("bestAbs")
-      val bestJ = ctx.freshName("bestJ")
-      val bestVal = ctx.freshName("bestVal")
-      val j = ctx.freshName("j")
-      val row = ctx.freshName("row")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val a = ctx.freshName("a")
-      val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-      s"""
-         |int $nT = $rs.numElements();
-         |int[] $out = new int[$nT];
-         |for (int $t = 0; $t < $nT; $t++) {
-         |  $ad $rot = $rs.getArray($t);
-         |  int $nP = $rot.numElements();
-         |  double $bestAbs = java.lang.Double.NEGATIVE_INFINITY;
-         |  int $bestJ = -1;
-         |  double $bestVal = 0.0;
-         |  for (int $j = 0; $j < $nP; $j++) {
-         |    $ad $row = $rot.getArray($j);
-         |    int $n = java.lang.Math.min($v.numElements(), $row.numElements());
-         |    double $s = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      if (!$v.isNullAt($i) && !$row.isNullAt($i)) {
-         |        $s += $v.getDouble($i) * $row.getDouble($i);
-         |      }
-         |    }
-         |    double $a = java.lang.Math.abs($s);
-         |    if ($bestJ < 0 || java.lang.Double.compare($a, $bestAbs) > 0) {
-         |      $bestAbs = $a; $bestJ = $j; $bestVal = $s;
-         |    }
-         |  }
-         |  $out[$t] = ($bestVal >= 0) ? ($bestJ + 1) : -($bestJ + 1);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (v, rs) =>
+      s"${ev.value} = $K.cpBuckets($v, ${matCode(ctx, 1, rs)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

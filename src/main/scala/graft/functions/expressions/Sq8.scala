@@ -3,7 +3,9 @@ package graft.functions.expressions
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+
+import graft.functions.expressions.VectorKernels.{JavaName => K, VectorType}
 
 /** Scalar (int8) vector quantization — the FAISS `SQ8` flat-index
   * codec, as two codegen'd expressions.
@@ -23,53 +25,24 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * `Similarity.knnSq8`).
   *
   * Both are single primitive loops over `byte[]`/`ArrayData` inside
-  * WholeStageCodegen — no allocation beyond the output code, no boxing
-  * (the same rationale as [[DotProduct]], which this mirrors).
+  * WholeStageCodegen ([[VectorKernels]]) — no allocation beyond the
+  * output code, no boxing (the same rationale as [[DotProduct]]).
   * Null input propagates null via the default nullSafeEval path.
   */
 case class Sq8Encode(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {
 
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
+  override def inputTypes: Seq[DataType] = Seq(VectorType)
 
   override def dataType: DataType = BinaryType
 
-  override def prettyName: String = "graft_sq8_encode"
+  override def prettyName: String = Sq8.EncodeFnName
 
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val out = new Array[Byte](n)
-    var i = 0
-    while (i < n) {
-      // null element -> 0 code, matching DotProduct's 0-contribution rule
-      if (!x.isNullAt(i)) {
-        val q = Math.rint(x.getDouble(i) * 127.0)
-        out(i) = Math.max(-127.0, Math.min(127.0, q)).toByte
-      }
-      i += 1
-    }
-    out
-  }
+  override protected def nullSafeEval(a: Any): Any =
+    VectorKernels.sq8Encode(a.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val q = ctx.freshName("q")
-      s"""
-         |int $n = $a.numElements();
-         |byte[] $out = new byte[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    double $q = java.lang.Math.rint($a.getDouble($i) * 127.0);
-         |    $out[$i] = (byte) java.lang.Math.max(-127.0, java.lang.Math.min(127.0, $q));
-         |  }
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $K.sq8Encode($a);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -82,32 +55,13 @@ case class Sq8Dot(left: Expression, right: Expression)
 
   override def dataType: DataType = LongType
 
-  override def prettyName: String = "graft_sq8_dot"
+  override def prettyName: String = Sq8.DotFnName
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    val n = math.min(x.length, y.length)
-    var s = 0L
-    var i = 0
-    while (i < n) { s += x(i).toLong * y(i).toLong; i += 1 }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VectorKernels.sq8Dot(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = java.lang.Math.min($a.length, $b.length);
-         |long $sum = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $sum += (long) $a[$i] * (long) $b[$i];
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $K.sq8Dot($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -40,10 +40,9 @@ object Sinks {
   private[graft] def marker(catalog: SnapshotCatalog, ns: String,
       table: String, checkpointDir: String, schema: StructType,
       properties: Map[String, String] = Map.empty): Expect = {
-    if (!catalog.tableExists(ns, table))
-      catalog.createTable(ns, table, schema, properties)
     val key = lastBatchKey(checkpointDir)
-    Expect(key, catalog.describe(ns, table).properties.get(key))
+    Expect(key, catalog.createTable(ns, table, schema, properties, ifAbsent = true)
+      .properties.get(key))
   }
 
   /** True iff the marker `seen` records batch `batchId` or a later one. */
@@ -221,8 +220,7 @@ object Sinks {
           .withColumn("_rk", row_number().over(
             Window.partitionBy(keyCol).orderBy(col(seqCol).desc)))
           .filter(col("_rk") === 1).drop("_rk")
-        if (!catalog.tableExists(ns, table))
-          catalog.createTable(ns, table, latest.schema)
+        catalog.createTable(ns, table, latest.schema, ifAbsent = true): Unit
         catalog.upsert(ns, table, latest, keyCol): Unit
       }
 
@@ -385,10 +383,12 @@ object Sinks {
     def poll(): Boolean = {
       val upMeta = catalog.describe(upNs, upTable)
       val upSnap = upMeta.currentSnapshotId.getOrElse(return false)
+      // the tableExists check only spares a poll the upstream read;
+      // createTable settles a race with another creator
       if (!catalog.tableExists(downNs, downTable))
         catalog.createTable(downNs, downTable,
           transform(catalog.read(upNs, upTable)).schema,
-          tableProperties): Unit
+          tableProperties, ifAbsent = true): Unit
       // every commit below states the position this poll read: of two
       // overlapping polls, only the first applies a bootstrap, window
       // or resync — the other finds the position moved and its attempt

@@ -5,6 +5,16 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFns, VectorFns}
 import graft.operators.{Dedup, Multimodal, Similarity}
 
+/** One row of the vector-expression reference test: a vector, a second
+  * vector, the matrix arguments and the int arguments, any of them null.
+  */
+final case class VectorCase(i: Long, v: Seq[java.lang.Double], b: Seq[java.lang.Double],
+    cents: Seq[Seq[java.lang.Double]], biases: Seq[java.lang.Double],
+    books: Seq[Seq[Seq[java.lang.Double]]], bbias: Seq[Seq[java.lang.Double]],
+    planes: Seq[Seq[java.lang.Double]], tables: Seq[Seq[Seq[java.lang.Double]]],
+    rots: Seq[Seq[Seq[java.lang.Double]]], codes: Seq[Integer], cell: Integer,
+    np: Integer)
+
 class OperatorSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -558,59 +568,201 @@ class OperatorSpec extends SparkTestBase {
   }
 
   test("CentroidOps equal driver-side references on 300 randomized cases") {
-    import graft.functions.expressions.CentroidOps
+    // All 11 vector expressions against plain-Scala references, on both
+    // evaluation paths, with the matrices as columns (decoded per row)
+    // and as literals (decoded once per task).
+    import graft.functions.expressions.{CentroidOps, DotProduct, SignBits, SignBuckets, Sq8}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    type V = Seq[java.lang.Double]
     val rnd = new scala.util.Random(7)
-    def refNearest(v: Seq[Double], cents: Seq[Seq[Double]],
-        biases: Seq[Double]): Int = {
-      var best = Double.NegativeInfinity; var bestC = -1
-      cents.zipWithIndex.foreach { case (c, i) =>
-        val s = v.zip(c).map { case (x, y) => x * y }.sum - biases(i)
-        if (s >= best) { best = s; bestC = i }
-      }
-      bestC
-    }
     // small value grid so exact score TIES actually occur and exercise
-    // the larger-id tie-break against the reference
-    def value(): Double = rnd.nextInt(3) - 1.0
-    val m = 2
-    val cases = (0 until 300).map { i =>
-      val dim = 2 * (1 + rnd.nextInt(3)) // 2/4/6, divisible by m
-      val v = Seq.fill(dim)(value())
-      val k = 1 + rnd.nextInt(5)
-      val cents = Seq.fill(k)(Seq.fill(dim)(value()))
-      val biases = Seq.fill(k)(value())
-      val books = Seq.fill(m)(Seq.fill(k)(Seq.fill(dim / m)(value())))
-      val bBias = books.map(_.map(c => c.map(x => x * x).sum / 2))
-      (i.toLong, v, cents, biases, books, bBias)
+    // the larger-id tie-break; now and then a null, NaN or ±Inf element
+    def value(): java.lang.Double = rnd.nextInt(40) match {
+      case 0 => null
+      case 1 => Double.NaN
+      case 2 => Double.PositiveInfinity
+      case 3 => Double.NegativeInfinity
+      case r => r % 3 - 1.0
     }
-    val got = cases.toDF("i", "v", "cents", "biases", "books", "bbias")
-      .select(col("i"),
-        CentroidOps.nearestCell(col("v"), col("cents"), col("biases")).as("nc"),
-        CentroidOps.pqEncode(col("v"), col("books"), col("bbias")).as("codes"),
-        CentroidOps.residual(col("v"), col("cents"),
-          CentroidOps.nearestCell(col("v"), col("cents"), col("biases"))).as("r"),
-        CentroidOps.pqError(col("v"),
-          CentroidOps.pqEncode(col("v"), col("books"), col("bbias")),
-          col("books")).as("e"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        ((r.getInt(1), r.getSeq[Int](2), r.getSeq[Double](3),
-          r.getDouble(4)))).toMap
-    cases.foreach { case (i, v, cents, biases, books, bBias) =>
-      val (nc, codes, resid, err) = got(i)
-      assert(nc == refNearest(v, cents, biases), s"nearestCell case $i")
-      val sd = v.length / m
-      val refCodes = (0 until m).map { s =>
-        refNearest(v.slice(s * sd, (s + 1) * sd), books(s), bBias(s))
+    def vec(n: Int): V = Seq.fill(n)(value())
+    // ragged: one row in five is a coordinate short or long
+    def rows(k: Int, dim: Int): Seq[V] = Seq.fill(k)(
+      vec(dim + (if (rnd.nextInt(5) == 0) rnd.nextInt(3) - 1 else 0)))
+    def halfNorm(c: V): java.lang.Double =
+      c.foldLeft(0.0)((s, x) => if (x == null) s else s + x * x) / 2
+    val m = 2
+    val random = (0 until 300).map { i =>
+      val dim = 2 * (1 + rnd.nextInt(3)) // 2/4/6, divisible by m
+      val k = rnd.nextInt(6) // 0: an empty matrix
+      val books = Seq.fill(m)(rows(1 + rnd.nextInt(5), dim / m))
+      VectorCase(i, vec(if (rnd.nextInt(10) == 0) dim + 1 else dim), vec(dim),
+        rows(k, dim), vec(k), books, books.map(_.map(halfNorm)),
+        rows(rnd.nextInt(9), dim),
+        Seq.fill(1 + rnd.nextInt(3))(rows(rnd.nextInt(6), dim)),
+        Seq.fill(1 + rnd.nextInt(3))(rows(rnd.nextInt(6), dim)),
+        Seq.fill(m)(if (rnd.nextInt(10) == 0) null else Int.box(rnd.nextInt(7) - 1)),
+        rnd.nextInt(k + 2) - 1, rnd.nextInt(k + 2))
+    }
+    val (nan, inf, one) = (Double.box(Double.NaN), Double.box(Double.PositiveInfinity), Double.box(1.0))
+    val n0: java.lang.Double = null
+    // a null element opposite a NaN and opposite an Inf is skipped
+    val skips = Seq[(V, V)]((Seq(nan, one), Seq(n0, one)), (Seq(n0, one), Seq(inf, one)))
+      .zipWithIndex.map { case ((v, w), j) =>
+        VectorCase(302 + j, v, w, Seq(w), Seq(n0), Seq(Seq(Seq(w.head)), Seq(Seq(w.last))),
+          Seq(Seq(n0)), Seq(w), Seq(Seq(w)), Seq(Seq(w, v)), Seq[Integer](0, 0), 0, 1)
       }
-      assert(codes == refCodes, s"pqEncode case $i")
-      val refResid = v.zip(cents(nc)).map { case (x, c) => x - c }
-      assert(resid == refResid, s"residual case $i")
-      val refErr = (0 until m).map { s =>
-        v.slice(s * sd, (s + 1) * sd).zip(books(s)(refCodes(s)))
-          .map { case (x, y) => (x - y) * (x - y) }.sum
-      }.sum
-      assert(math.abs(err - refErr) < 1e-12, s"pqError case $i")
+    val cases = random ++ Seq(
+      random(0).copy(i = 300, v = null, b = null),
+      VectorCase(301, random(1).v, null, null, null, null, null, null, null, null,
+        null, null, null)) ++ skips
+    // the literal matrices: a random case's; nulls, NaN, ±Inf, ragged
+    // rows and the 64- and 32-plane limits; all empty
+    val edge: Seq[V] = Seq(Seq(n0, one, 0.0), Seq(one, inf, -1.0), Seq(nan), Seq(), Seq(0.0, -1.0))
+    val literals = Seq(random(5),
+      VectorCase(-1, null, Seq(one, n0, inf), edge, Seq(n0, 0.5, nan),
+        Seq(edge.take(2), edge.drop(2)), Seq(Seq(n0, 1.0), Seq(2.0)),
+        Seq.tabulate(64)(p => edge(p % 5)),
+        Seq(Seq.tabulate(32)(p => edge((p + 1) % 5)), edge.reverse),
+        Seq(edge, edge.take(1)), null, null, null),
+      VectorCase(-2, null, Seq(), Seq(), Seq(), Seq(), Seq(), Seq(), Seq(), Seq(),
+        null, null, null))
+
+    def dotAt(v: V, off: Int, len: Int, row: V): Double = {
+      var s = 0.0
+      for (i <- 0 until math.min(len, row.size) if v(off + i) != null && row(i) != null)
+        s += v(off + i).doubleValue * row(i).doubleValue
+      s
+    }
+    def dot(v: V, row: V): Double = dotAt(v, 0, v.size, row)
+    def orZero(v: V, i: Int): Double =
+      if (v != null && i < v.size && v(i) != null) v(i).doubleValue else 0.0
+    def minusBias(s: Double, bs: V, c: Int): Double =
+      if (bs != null && c < bs.size && bs(c) != null) s - bs(c) else s
+    def argmax(scores: Seq[Double]): Int = scores.indices.foldLeft(-1) { (bc, c) =>
+      if (bc < 0 || scores(c) >= scores(bc) || (scores(bc).isNaN && !scores(c).isNaN)) c
+      else bc
+    }
+    def width(books: Seq[Seq[V]]): Int = books.head.headOption.map(_.size).getOrElse(0)
+    def sq8(v: V): Array[Byte] = v.map(x =>
+      if (x == null) 0.toByte
+      else math.max(-127.0, math.min(127.0, math.rint(x * 127.0))).toByte).toArray
+    /** null when an argument is null, as every expression here */
+    def nn(args: Any*)(f: => Any): Any = if (args.contains(null)) null else f
+    def expected(c: VectorCase, s: VectorCase): Seq[Any] = Seq(
+      nn(c.v, s.b)(dot(c.v, s.b)),
+      nn(c.v)(sq8(c.v)),
+      nn(c.v, s.b)(sq8(c.v).zip(sq8(s.b)).map { case (x, y) => x.toLong * y }.sum),
+      nn(c.v, s.cents, s.biases)(argmax(s.cents.indices.map(j =>
+        minusBias(dot(c.v, s.cents(j)), s.biases, j)))),
+      nn(c.v, s.cents, c.np) {
+        val sc = s.cents.map(dot(c.v, _))
+        s.cents.indices.sortWith { (a, b) =>
+          val o = java.lang.Double.compare(sc(a), sc(b)); o > 0 || (o == 0 && a > b)
+        }.take(c.np)
+      },
+      nn(c.v, s.books, s.bbias) {
+        val sd = if (s.books.isEmpty) 0 else width(s.books)
+        if (s.books.nonEmpty && c.v.size != s.books.size * sd) null
+        else s.books.indices.map(j => argmax(s.books(j).indices.map(cc => minusBias(
+          dotAt(c.v, j * sd, sd, s.books(j)(cc)), if (j < s.bbias.size) s.bbias(j) else null, cc))))
+      },
+      nn(c.v, c.codes, s.books) {
+        val sd = if (s.books.isEmpty) 0 else width(s.books)
+        if (s.books.nonEmpty && c.v.size != s.books.size * sd) null
+        else {
+          var err = 0.0
+          for (j <- s.books.indices; i <- 0 until sd) {
+            val code = if (j < c.codes.size && c.codes(j) != null) c.codes(j).intValue else -1
+            val cent = if (code >= 0 && code < s.books(j).size) s.books(j)(code) else null
+            val d = orZero(c.v, j * sd + i) - orZero(cent, i)
+            err += d * d
+          }
+          err
+        }
+      },
+      nn(c.v, s.cents, c.cell) {
+        if (c.cell < 0 || c.cell >= s.cents.size) null
+        else c.v.indices.map(i => orZero(c.v, i) - orZero(s.cents(c.cell), i))
+      },
+      nn(c.v, s.planes)(s.planes.indices.foldLeft(0L)((sig, p) =>
+        if (dot(c.v, s.planes(p)) >= 0) sig | (1L << p) else sig)),
+      nn(c.v, s.tables)(s.tables.map(t => t.indices.foldLeft(0)((b, p) =>
+        if (dot(c.v, t(p)) >= 0) b | (1 << p) else b))),
+      nn(c.v, s.rots)(s.rots.map { rot =>
+        val sc = rot.map(dot(c.v, _))
+        if (sc.isEmpty) 0
+        else {
+          val j = sc.indices.reduceLeft((best, j) =>
+            if (java.lang.Double.compare(math.abs(sc(j)), math.abs(sc(best))) > 0) j else best)
+          if (sc(j) >= 0) j + 1 else -(j + 1)
+        }
+      }))
+    val names = Seq("dot", "sq8_encode", "sq8_dot", "nearest_cell", "top_cells",
+      "pq_encode", "pq_error", "residual", "sign_bits", "sign_buckets", "cp_buckets")
+    def outputs(a: String => Column): Seq[Column] = {
+      val v = col("v")
+      Seq(DotProduct.dot(v, a("b")), Sq8.encode(v), Sq8.dot(Sq8.encode(v), Sq8.encode(a("b"))),
+        CentroidOps.nearestCell(v, a("cents"), a("biases")),
+        CentroidOps.topCells(v, a("cents"), col("np")),
+        CentroidOps.pqEncode(v, a("books"), a("bbias")),
+        CentroidOps.pqError(v, col("codes"), a("books")),
+        CentroidOps.residual(v, a("cents"), col("cell")),
+        SignBits.of(v, a("planes")), SignBuckets.of(v, a("tables")),
+        SignBuckets.cp(v, a("rots")))
+    }
+    // doubles compare by raw bits (so 0.0 is not -0.0); NaN payloads are
+    // left to the JVM, so any NaN matches any NaN
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Double, y: Double) => (x.isNaN && y.isNaN) ||
+        java.lang.Double.doubleToRawLongBits(x) == java.lang.Double.doubleToRawLongBits(y)
+      case (x: Array[Byte], y: Array[Byte]) => x.sameElements(y)
+      case (x: scala.collection.Seq[_], y: scala.collection.Seq[_]) =>
+        x.size == y.size && x.zip(y).forall { case (p, q) => same(p, q) }
+      case _ => a == b
+    }
+    val plans = new AdaptiveSparkPlanHelper {}
+    val df = cases.toDF().repartition(2)
+    for (codegen <- Seq(true, false)) {
+      val confs = Seq(
+        "spark.sql.codegen.factoryMode" -> (if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN"),
+        "spark.sql.codegen.wholeStage" -> codegen.toString)
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        for ((source, lit) <- (None +: literals.map(Some(_))).zipWithIndex.map(_.swap)) {
+          val arg: String => Column = lit match {
+            case None => col
+            case Some(s) => Map[String, Column]("b" -> typedlit(s.b),
+              "cents" -> typedlit(s.cents), "biases" -> typedlit(s.biases),
+              "books" -> typedlit(s.books), "bbias" -> typedlit(s.bbias),
+              "planes" -> typedlit(s.planes), "tables" -> typedlit(s.tables),
+              "rots" -> typedlit(s.rots))
+          }
+          val q = df.select(col("i") +: outputs(arg): _*)
+          val got = q.collect().map(r => r.getLong(0) -> r).toMap
+          val plan = q.queryExecution.executedPlan
+          assert(plans.collect(plan) { case w: WholeStageCodegenExec => w }.nonEmpty == codegen,
+            plan.toString)
+          assert(got.size == cases.size)
+          for (c <- cases; (want, j) <- expected(c, lit.getOrElse(c)).zipWithIndex) {
+            val have = got(c.i).get(j + 1)
+            assert(same(have, want), s"${names(j)} case ${c.i}, matrices $source, " +
+              s"codegen $codegen: $have vs $want")
+          }
+          // the named edge cases hit what they name
+          if (lit.isEmpty) {
+            assert(skips.forall(c => got(c.i).getDouble(1) == 1.0))
+            assert(got(300L).isNullAt(1) && got(301L).isNullAt(4))
+          }
+        }
+      } finally {
+        prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
     }
   }
 

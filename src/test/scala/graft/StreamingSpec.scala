@@ -194,6 +194,32 @@ class StreamingSpec extends SparkTestBase {
     cat
   }
 
+  test("two writers auto-create one missing table: the loser of the v1 race " +
+      "loads the winner's table") {
+    import spark.implicits._
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    // the first existence check, the held writer's, answers "missing"
+    // and waits until the other writer has created the table
+    val cat = new SnapshotCatalog(spark, tmpDir("graft-create-race-wh")) {
+      override def tableExists(ns: String, name: String): Boolean = {
+        val exists = super.tableExists(ns, name)
+        if (armed.getAndSet(false)) ReplayGate.pass()
+        exists
+      }
+    }
+    val schema = Seq((1L, 1.0)).toDF("id", "v").schema
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SnapshotCatalog.Expect]()
+    def start(): Unit = seen.add(Sinks.marker(cat, "s", "t", "ckpt-create-race", schema)): Unit
+    val failure = ReplayGate.hold(start())(start())
+    assert(failure.isEmpty, failure)
+    assert(seen.size == 2 && seen.asScala.forall(_.value.isEmpty))
+    val meta = cat.describe("s", "t")
+    assert(meta.schemaJson == schema.json && meta.snapshots.isEmpty)
+    val metaFiles = new java.io.File(s"${cat.warehouse}/s/t/metadata").list()
+      .filter(_.endsWith(".metadata.json")).toSeq
+    assert(metaFiles == Seq("v00001.metadata.json"))
+  }
+
   test("changelog follower race: two overlapping polls bootstrap the " +
       "downstream once") {
     val wh = tmpDir("graft-follow-race0-wh")

@@ -155,6 +155,19 @@ class TablesSpec extends SparkTestBase {
     assert(sources("src/main").collect { case (n, t) if t.contains("toJSON") => n }.isEmpty)
   }
 
+  test("the vector expressions share one kernel: no generated loop, and " +
+      "getDouble only in VectorKernels") {
+    val files = Seq("CentroidOps.scala", "SignBits.scala", "SignBuckets.scala",
+      "Sq8.scala", "DotProduct.scala")
+    val vector = sources("src/main/scala/graft/functions/expressions")
+      .filter { case (n, _) => files.contains(n) || n == "VectorKernels.scala" }
+    assert(vector.map(_._1).sorted == (files :+ "VectorKernels.scala").sorted)
+    assert(vector.collect { case (n, t) if t.contains("getDouble") => n } ==
+      Seq("VectorKernels.scala"))
+    // every nullSafeEval and doGenCode is one call into VectorKernels
+    for ((n, t) <- vector if files.contains(n)) assert(!t.contains("for ("), n)
+  }
+
   /** `text` from the line declaring `sig` to the end of that member
     * (the next line closing a brace at the member's indent). */
   private def member(text: String, sig: String): (Int, Int) = {
